@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: wall-clock per declared query on
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -12,38 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = graft.util.Config.sfDir
-    val cpus = graft.util.Config.cpus("4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Local-mode fixtures are tiny single-file parquet: AQE's
-      // partition coalescing would fold the requested `cpus` shuffle
-      // partitions back to 1-2 (64 MB advisory target), serializing all
-      // post-shuffle compute. On a real cluster at 100 TB the advisory
-      // target is right; at bench scale parallelism-first wins, so keep
-      // AQE (broadcast demotion, skew splitting) but not coalescing.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.adaptive.enabled", graft.util.Config.aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      // deterministic bucket-aware scans for the FixtureCache bucketed
-      // tables (and g_bkt_*): the session-memo persist freezes the first
-      // planned scan, so auto mode would freeze whichever shape the
-      // first-touching query preferred
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // ~240 queries × ~8 codegen units ≈ 2000 generated classes per
-      // pass: the 100-entry default cache evicts everything between the
-      // warm and timed passes, so every timed query repaid full janino
-      // recompilation (r13 A/B: 0.3-1.5 s/query). Sized to the declared
-      // surface — a driver-heap knob, not a core-count knob (Config).
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.util.Config.codegenCacheEntries)
-      // recursive-CTE LocalRelation fast path (Config scaladoc: guide §7.3)
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        graft.util.Config.cteLocalAnchorRows)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.Session.defaultCores
+    val spark = graft.util.Session(cpus)
 
     // pass 1 (untimed): warms JIT/codegen caches and materializes the
     // persisted dedup-pipeline intermediates, so pass 2 measures
@@ -325,8 +294,10 @@ object Bench {
     // host burst confined between two checkpoints (~24 queries apart)
     // inflated q_hamming_hist to 19.4 s inside a certified run whose
     // same-binary driver twin read 2.8 s. So every entry is also checked
-    // against its TRAILING MEDIAN across recent bench artifacts
-    // (SPARK_GRAFT_BENCH_REFS, same-sf entries only): an entry reading
+    // against its TRAILING MEDIAN across the bench artifacts in the
+    // working dir (every `bench*.json` recorded at the same sf AND the
+    // same core count — a time taken at another local[n] says nothing
+    // about this run): an entry reading
     // >2.5× that median (+0.5 s absolute guard — job-overhead jitter on
     // sub-second entries is not a burst) is a suspect, re-probed
     // interleaved median-of-3 at run end, and the artifact publishes
@@ -339,8 +310,9 @@ object Bench {
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(new java.io.File(path))
       val q = node.get("queries")
-      if (q == null || node.get("sf") == null ||
-        node.get("sf").asText() != sfDir) Map.empty
+      def field(k: String) = Option(node.get(k)).map(_.asText)
+      if (q == null || !field("sf").contains(sfDir) ||
+        !field("cpus").contains(cpus.toString)) Map.empty
       else {
         val b = Map.newBuilder[String, Double]
         val it = q.properties().iterator()
@@ -352,8 +324,9 @@ object Bench {
         b.result()
       }
     } catch { case _: Throwable => Map.empty }
-    val refMaps = graft.util.Config.benchRefs.map(refQueries)
-      .filter(_.nonEmpty)
+    val refMaps = Option(new java.io.File(".").listFiles).toSeq.flatten
+      .map(_.getName).filter(n => n.startsWith("bench") && n.endsWith(".json"))
+      .map(refQueries).filter(_.nonEmpty)
     def trailingMed(n: String): Option[Double] = {
       val vs = refMaps.flatMap(_.get(n)).sorted
       if (vs.isEmpty) None else Some(vs(vs.size / 2))
@@ -469,7 +442,7 @@ object Bench {
     val json =
       s"""{"metric":"total","value":${f4(total)},"unit":"sec","queries":$qs,""" +
         s""""value_adjusted":${f4(totalAdj)},"suspect_heads":$suspectJson,""" +
-        s""""failed":$failedJson,"sf":"$sfDir","pipeline_warm_sec":${f4(warmSec)},""" +
+        s""""failed":$failedJson,"sf":"$sfDir","cpus":$cpus,"pipeline_warm_sec":${f4(warmSec)},""" +
         s""""warmed_intermediates":$warmed,"warm_breakdown":$warmJson,""" +
         s""""stream_rows":$streamRows,"stream_rows_per_sec":${f4(streamRps)},""" +
         s""""sentinel_sec":$sentJson,"sentinel_spread":${f4(sentSpread)},""" +
@@ -498,7 +471,7 @@ object Bench {
     // noise follow this line inside the same tail window.
     val slowestFirst = all.toSeq.sortBy { case (_, v) => -v }
     val compactHead =
-      s"""{"metric":"total","value":${f4(total)},"unit":"sec","sf":"$sfDir",""" +
+      s"""{"metric":"total","value":${f4(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,""" +
         s""""value_adjusted":${f4(totalAdj)},"n_suspect_heads":${suspects.size},""" +
         s""""stream_rows_per_sec":${f4(streamRps)},""" +
         s""""n_queries":${all.size},"n_failed":${failed.size},""" +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan for the named queries
   * (all queries when none named) — the SURVEY.md §4 audit loop:
@@ -12,19 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.all.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // deterministic bucket-aware scans for the FixtureCache bucketed
-      // tables (and g_bkt_*): the session-memo persist freezes the first
-      // planned scan, so auto mode would freeze whichever shape the
-      // first-touching query preferred
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Session(logLevel = "ERROR")
     names.foreach { name =>
       println(s"\n━━━━━━━━━━ $name ━━━━━━━━━━")
       try {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (guide §1.1 empirical loop, headless stand-in for the UI's
   * Jobs page): run the named queries once warm, then once instrumented,
@@ -14,24 +13,9 @@ import org.apache.spark.sql.SparkSession
 object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = graft.util.Config.sfDir
-    val cpus = graft.util.Config.cpus("32")
     val names = args.toSeq
     require(names.nonEmpty, "usage: JobProf <query...>")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.util.Config.codegenCacheEntries)
-      // recursive-CTE LocalRelation fast path (Config scaladoc: guide §7.3)
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        graft.util.Config.cteLocalAnchorRows)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session()
 
     final case class JobRec(id: Int, desc: String, start: Long,
         var end: Long = -1L, var nTasks: Int = 0, var taskMs: Long = 0L)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic interleaved-rep query timer (dev tool, not a driver
   * artifact): `runMain graft.QTimer <reps> <query...>` runs the named
   * declared queries round-robin in ONE JVM under the Bench session
@@ -12,29 +10,10 @@ import org.apache.spark.sql.SparkSession
 object QTimer {
   def main(args: Array[String]): Unit = {
     val sfDir = graft.util.Config.sfDir
-    val cpus = graft.util.Config.cpus("32")
     val reps = args.headOption.map(_.toInt).getOrElse(5)
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: QTimer <reps> <query...>")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // deterministic bucket-aware scans for the FixtureCache bucketed
-      // tables (and g_bkt_*): the session-memo persist freezes the first
-      // planned scan, so auto mode would freeze whichever shape the
-      // first-touching query preferred
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.util.Config.codegenCacheEntries)
-      // recursive-CTE LocalRelation fast path (Config scaladoc: guide §7.3)
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        graft.util.Config.cteLocalAnchorRows)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session()
     // warm pass: JIT/codegen + the persisted family lineages, so rep 1
     // measures the query, not the pipeline rebuild (Bench protocol)
     names.foreach { n =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe (dev tool, BASELINE.md r8): synthesizes ×N copies of
@@ -34,31 +34,12 @@ object ScaleProbe {
     else sys.props("graft.diskMemo") = "false"
     val factors = if (args.isEmpty) Seq(1, 2, 4, 8) else args.toSeq.map(_.toInt)
     val base = graft.util.Config.sfDir
-    val cpus = graft.util.Config.cpus("32")
     // override the flagship set with SPARK_GRAFT_PROBE_OPS=q_a,q_b to
     // probe new operators without re-running the standing list
     val ops = graft.util.Config.probeOps
       .getOrElse(Seq("q_tpch_q1", "q_daily_avg", "q_dedup_exact",
         "q_dedup_lsh", "q_sim_topk", "q_bm25_topk", "q_link_predict"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // deterministic bucket-aware scans for the FixtureCache bucketed
-      // tables (and g_bkt_*): the session-memo persist freezes the first
-      // planned scan, so auto mode would freeze whichever shape the
-      // first-touching query preferred
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.util.Config.codegenCacheEntries)
-      // recursive-CTE LocalRelation fast path (Config scaladoc: guide §7.3)
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        graft.util.Config.cteLocalAnchorRows)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_scaleprobe")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,7 @@ object Verify {
     // optional extra args: restrict the dump to these query names
     // (local iteration only — the driver always passes exactly two)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = graft.util.Config.cpus("4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // deterministic bucket-aware scans for the FixtureCache bucketed
-      // tables (and g_bkt_*): the session-memo persist freezes the first
-      // planned scan, so auto mode would freeze whichever shape the
-      // first-touching query preferred
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.util.Config.codegenCacheEntries)
-      // recursive-CTE LocalRelation fast path (Config scaladoc: guide §7.3)
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        graft.util.Config.cteLocalAnchorRows)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -170,7 +170,9 @@ object TextDedup {
   private def signatures(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "signatures") {
       import s.implicits._
-      (0 until NumHashes).foldLeft(hashedShingles(s, dir)) { (df, i) =>
+      // a document with fewer than K words has no shingle, so no
+      // signature — the oracle's GROUP BY over shingles drops it too
+      (0 until NumHashes).foldLeft(hashedShingles(s, dir).filter(size($"hs") > 0)) { (df, i) =>
         val a = 2L * i + 3L
         val b = 17L * i + 7L
         df.withColumn(s"mh$i",
@@ -1034,7 +1036,7 @@ object TextDedup {
     * partitioned by the key: ONE shuffle and ONE pass of the explode
     * kernel. VERDICT r4 flagged the per-partition sort behind that
     * window and asked for an A/B against join-back shapes; the
-    * interleaved triage (graft.TriageBench, sf0.1 local[32], 3 reps,
+    * interleaved triage (BASELINE.md r5, sf0.1 local[32], 3 reps,
     * both 8g and 48g heaps) answered: window 2.1-2.3 s,
     * dup-keys-semi-join 3.2-3.5 s (the broadcast semi join itself is
     * cheap but the explode kernel runs TWICE — count branch + probe
@@ -1044,8 +1046,8 @@ object TextDedup {
     * contention, not the plan — the same binary re-ran at 2.1 s
     * (BASELINE.md r5 row). The window shape stays; its one scale
     * caveat is a single boilerplate gram repeated ~1e9 times skewing
-    * one reducer, where the semi-join variant (preserved in
-    * TriageBench for that day) pre-reduces hot keys map-side. The
+    * one reducer, where the semi-join variant (BASELINE.md r5)
+    * pre-reduces hot keys map-side. The
     * count is invariant under any injective rekeying, so the
     * string-counting oracle replays it exactly; a 64-bit collision
     * (~n²/2⁶⁴, ≈1e-8 at sf0.1) is the only divergence mode, same risk

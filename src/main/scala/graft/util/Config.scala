@@ -3,15 +3,16 @@ package graft.util
 /** The engine's environment-variable config surface, in one documented
   * place — the neutral analog of the reference's `.env` keys
   * (`scripts/energy_etl.py:13-14`, GCP project/dataset via dotenv).
-  * Every dev-tool main (`Bench`, `Verify`, `QTimer`, `ScaleProbe`,
-  * `ABBench`, `TriageBench`, `DecBench`) reads through here, so the
+  * Every tool main (`Bench`, `Verify`, `QTimer`, `JobProf`,
+  * `ScaleProbe`, `Explain`) and the test session build their
+  * SparkSession through [[Session]], which reads through here, so the
   * knob inventory and its defaults can't drift between tools.
   *
   * | Variable | Meaning | Default |
   * |---|---|---|
   * | SPARK_GRAFT_SF_DIR    | fixture dir (parquet tables)        | /root/testdata/sf0.1 |
-  * | SPARK_GRAFT_CPUS      | local[n] cores = shuffle partitions | per-tool (4 for driver-run mains, 32 for dev benches) |
-  * | SPARK_GRAFT_AQE       | adaptive execution on/off (Bench)   | true |
+  * | SPARK_GRAFT_CPUS      | local[n] cores = shuffle partitions | the box's core count (the test session is fixed at 4) |
+  * | SPARK_GRAFT_AQE       | adaptive execution on/off (every [[Session]]) | true |
   * | SPARK_GRAFT_BENCH_OUT | full bench-JSON output path         | bench_out.json |
   * | SPARK_GRAFT_PROBE_OPS | comma list overriding ScaleProbe's flagship set | (flagships) |
   * | SPARK_GRAFT_PROBE_STOPWORDS | ScaleProbe: replicate documents with the SAME token space (posting lists / group sizes grow xN — the stopword-heavy shape) instead of replica-disjoint tokens | false |
@@ -19,7 +20,6 @@ package graft.util
   * | SPARK_GRAFT_DISK_MEMO | cross-session parquet cache for heavy deterministic fixture intermediates ([[FixtureCache]]) | true |
   * | SPARK_GRAFT_CACHE_DIR | FixtureCache root | $tmpdir/graft_fixture_cache |
   * | SPARK_GRAFT_CACHE_BUCKETS | bucket count for FixtureCache bucketed publishes (caps the cached side's scan parallelism — see [[FixtureCache]] sizing rule) | 8 |
-  * | SPARK_GRAFT_BENCH_REFS | comma list of trailing bench artifacts for Bench's per-query suspect-head guard | bench_out.json |
   * | SPARK_GRAFT_WRITE_SALTS | writer tasks per partition value in Pipeline's clustered writes (skew fan-out; files/partition ≤ this) | 1 |
   * | SPARK_GRAFT_CODEGEN_CACHE | spark.sql.codegen.cache.maxEntries (sized to the declared query surface) | 4000 |
   * | SPARK_GRAFT_CTE_LOCAL_ANCHOR | recursive-CTE LocalRelation fast-path anchor-row ceiling | 1000000 |
@@ -28,8 +28,8 @@ object Config {
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** Driver-run mains (Bench/Verify) default low — the driver sets the
-    * real value; dev benches default to the full box. */
+  /** `SPARK_GRAFT_CPUS`, else `default` ([[Session.defaultCores]]
+    * passes the box's core count). */
   def cpus(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
 
@@ -114,19 +114,4 @@ object Config {
       .orElse(sys.env.get("SPARK_GRAFT_CTE_LOCAL_ANCHOR"))
       .map(_.trim.toInt.toString)
       .getOrElse("1000000")
-
-  /** Trailing bench artifacts (comma list of paths) for the per-query
-    * suspect-head guard in [[graft.Bench]]; entries recorded at a
-    * different SF dir are ignored at read time. r14: the default now
-    * includes the CHECKED-IN same-sf artifacts so the guard functions
-    * in a fresh clone too (the r13 driver run had no refs, so its
-    * burst-inflated heads went un-probed; with refs the artifact
-    * publishes a meaningful `value_adjusted` + `suspect_heads` next to
-    * the raw `value`, which stays the headline). Missing files are
-    * silently skipped; entries at a different sf are ignored. */
-  def benchRefs: Seq[String] =
-    sys.env.get("SPARK_GRAFT_BENCH_REFS")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Seq("bench_out.json", "bench_r14_close.json",
-        "bench_r14_baseline.json", "bench_r13_mid.json"))
 }

@@ -36,14 +36,8 @@ object Tables {
     * sampling). At 100 TB inputs arrive pre-split, so this is a local
     * layout shim, not a scale crutch; it is only applied where the
     * downstream per-row work dwarfs the one extra exchange. */
-  /** A/B hook (graft.ABBench only): disables the fan-out so the same
-    * query builder can be timed with and without it in one JVM. Always
-    * true outside the harness. */
-  @volatile private[graft] var spreadEnabled = true
-
   def spread(df: DataFrame, key: String): DataFrame =
-    if (!spreadEnabled) df
-    else df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

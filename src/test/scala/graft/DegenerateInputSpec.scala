@@ -45,4 +45,22 @@ class DegenerateInputSpec extends SparkSpec {
     assert(enc.forall(r => r.getLong(1) === r.getLong(2)),
       "empty merge chain must leave symbol counts unchanged")
   }
+
+  test("q_dedup_minhash drops a document too short for one shingle, " +
+    "as its oracle's GROUP BY over shingles does") {
+    import org.apache.spark.sql.functions.{col, length, lit, min, when}
+    val dir = java.nio.file.Files.createTempDirectory("graft_short_doc").toString
+    val docs = spark.read.parquet(s"$sf/documents.parquet").limit(5).cache()
+    val shortId = docs.agg(min("doc_id")).head().get(0)
+    val text = when(col("doc_id") === lit(shortId), lit("two words")).otherwise(col("text"))
+    docs.withColumn("text", text)
+      .withColumn("n_chars", length(text).cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    docs.unpersist()
+    val sig = SparkEntry.all("q_dedup_minhash").fn(spark, dir).collect()
+    assert(sig.length === 4, sig.mkString("\n"))
+    assert(!sig.exists(_.get(0) == shortId))
+    assert(sig.forall(r => (1 until r.length).forall(i => !r.isNullAt(i))),
+      sig.mkString("\n"))
+  }
 }

@@ -561,15 +561,6 @@ class PipelineSpec extends SparkSpec {
     load(plain)
     val prev = sys.props.get("graft.writeSalts")
     sys.props("graft.writeSalts") = k.toString
-    // pin AQE's coalescing off for the fan-out assertion: at test scale
-    // every salted shuffle partition is tiny, so coalescing (correctly)
-    // folds them back to one writer — at production volume a hot date's
-    // k salted partitions each exceed the advisory size and stay k-way,
-    // which is the scenario the salt exists for (the Bench session runs
-    // with coalescing off for the same small-fixture reason)
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.get(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
     try {
       val salted = Files.createTempDirectory("graft_salt4").toString + "/t"
       load(salted)
@@ -596,7 +587,6 @@ class PipelineSpec extends SparkSpec {
       }.sorted
       assert(snapshot(salted) === doubled)
     } finally {
-      spark.conf.set(coalesceKey, prevCoalesce)
       prev match {
         case Some(v) => sys.props("graft.writeSalts") = v
         case None => sys.props.remove("graft.writeSalts"): Unit

@@ -228,7 +228,7 @@ class PlanSpec extends SparkSpec {
 
   test("q_dedup_substring runs the explode kernel once (keyed window, no join-back)") {
     // VERDICT r4 asked for an A/B of this query's count shape; the
-    // interleaved triage (TriageBench, see the QueryDef scaladoc) kept
+    // interleaved triage (BASELINE.md r5, see the QueryDef scaladoc) kept
     // the keyed-window count: one explode pass, one shuffle. The
     // join-back variants re-run the explode kernel (2 Generate nodes)
     // or add a 10M-entry pre-aggregation, and both lost. Pin the
