@@ -11,9 +11,10 @@ import org.apache.spark.sql.types._
   * over a date-partitioned Parquet sink.
   *
   * Scale design (100 TB):
-  *  - the sink is PARTITIONED BY load date → the watermark read is a
-  *    partition-listing max, not a table scan, and downstream readers get
-  *    static partition pruning;
+  *  - the sink is PARTITIONED BY load date → the watermark is the max
+  *    over the `date=` directory names (a file-system listing, no Spark
+  *    job and no data read), and downstream readers get static
+  *    partition pruning;
   *  - the delta filter lands on the source scan (predicate pushdown), so a
   *    daily run reads only new row groups;
   *  - the hourly→daily reduction is a partial-agg hash aggregate: the
@@ -60,13 +61,35 @@ object Pipeline {
   }
 
   /** MAX(date) already loaded, or None on cold start (energy_etl.py:41-46).
-    * Reads only the sink's partition column — on a date-partitioned sink
-    * this resolves from directory listing + footer stats, no data scan. */
+    * Answered from the sink's directory listing alone — no Spark job, no
+    * footer or data read: the newest `date=` directory that holds a
+    * visible data file. That is the answer a `MAX(date)` scan of the
+    * sink gives, because the scan sees exactly the rows of those files:
+    *  - names starting with `_` or `.` are hidden from Spark's file
+    *    listing (`_temporary`, `.spark-staging-*`, `_SUCCESS`, `.crc`), so
+    *    a crashed append's or overwrite's uncommitted output never counts;
+    *  - a date directory with no visible file (a partition whose removal
+    *    was interrupted) contributes no rows;
+    *  - `__HIVE_DEFAULT_PARTITION__` is the NULL date, which MAX ignores.
+    * Newest first, so a daily run lists the sink root and one date
+    * directory. */
   def watermark(spark: SparkSession, sinkDir: String): Option[java.sql.Date] = {
-    val dir = new java.io.File(sinkDir)
-    if (!dir.exists() || dir.listFiles() == null || dir.listFiles().isEmpty) None
-    else
-      Option(spark.read.parquet(sinkDir).agg(max(col("date"))).first().getDate(0))
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val root = new Path(sinkDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    if (!fs.exists(root)) None
+    else fs.listStatus(root).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("date=") &&
+        d.getPath.getName != s"date=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")
+      .map(d => java.time.LocalDate.parse(ExternalCatalogUtils.unescapePathName(
+        d.getPath.getName.stripPrefix("date="))) -> d.getPath)
+      .sortBy(-_._1.toEpochDay)
+      .collectFirst { case (day, dir)
+        if fs.listStatus(dir).exists(f => f.isFile && visible(f.getPath)) =>
+        java.sql.Date.valueOf(day)
+      }
   }
 
   /** One incremental run: reduce source rows with date > watermark to one
@@ -176,12 +199,14 @@ object Pipeline {
     * affected date partitions, preserving their untouched keys.
     *
     * Mechanics:
-    *  1. the affected-date list is a distinct-collect of the updates'
-    *     partition key — watermark-class driver state (days, not rows),
-    *     enforced by `maxPartitions`;
+    *  1. the updates are materialized once (an eager localCheckpoint),
+    *     and the affected-date list is observed on that same job —
+    *     watermark-class driver state (days, not rows), enforced by
+    *     `maxPartitions`;
     *  2. existing rows of ONLY those dates are read (the isin literal
-    *     list static-prunes the partitioned scan), updates' keys are
-    *     anti-joined away, and the union with the updates is
+    *     list static-prunes the partitioned scan; a NULL date adds an
+    *     isNull arm), updates' keys are anti-joined away (null-safe
+    *     match), and the union with the updates is
     *     MATERIALIZED via an eager localCheckpoint — computing the
     *     merge result BEFORE touching the sink sidesteps the
     *     read-overwrite-same-path hazard (the checkpoint truncates
@@ -224,7 +249,7 @@ object Pipeline {
       // micro-batch (the streaming sink calls through here every batch;
       // r14 moved its per-batch isEmpty pre-probe to this rare branch —
       // steady-state batches against a non-empty sink pay no probe job,
-      // the affected-partition collect below short-circuits instead)
+      // an empty observed partition set below short-circuits instead)
       if (updates.isEmpty) return 0L
       // observe rides the write: counting the loaded rows costs zero
       // extra jobs (the runIncremental load-report discipline)
@@ -235,62 +260,89 @@ object Pipeline {
         .write.partitionBy(partitionCol).mode(SaveMode.Append).parquet(sinkDir)
       return obs0.get("n").asInstanceOf[Long]
     }
-    // `updates` feeds three plan legs (affected-date collect, the
-    // anti-join's key projection, the merge union): persist so the
-    // caller's lineage — in the streaming sink, a window over the
-    // micro-batch — computes once per upsert, not three times
-    // (r13: pipeline_s_upsert paid the latestPerKey window 3× per
-    // micro-batch). Unpersisted before return; delta-sized, never
-    // sink-sized.
-    updates.persist()
-    try {
-      val affected = updates.select(col(partitionCol)).distinct()
-        .limit(maxPartitions + 1).collect().map(_.get(0))
-      require(affected.length <= maxPartitions,
-        s"upsert touches >$maxPartitions $partitionCol partitions — " +
-          "that is a table rewrite, not an incremental merge; split the batch")
-      if (affected.isEmpty) return 0L
-      // schema given explicitly: upsert's merge contract already requires
-      // updates.schema == sink schema (unionByName below fails otherwise),
-      // so the per-call parquet footer schema-inference read is pure
-      // overhead — the streaming sink pays it every micro-batch (§6)
-      val existing = spark.read.schema(updates.schema).parquet(sinkDir)
-        .filter(col(partitionCol).isin(affected.toIndexedSeq: _*))
-      val keep = existing.join(
-        updates.select(keyCols.map(col): _*), keyCols.toIndexedSeq, "left_anti")
-      val merged = keep.unionByName(updates)
-      // r14 (guide §1.4/§6): materialize the merge with an eager
-      // localCheckpoint instead of the parquet staging round-trip the
-      // r13 shape paid per call (staging write job + dir listing +
-      // footer read + re-read + rm — the streaming sink calls through
-      // here EVERY micro-batch). The checkpoint serves staging's two
-      // purposes: (a) read-overwrite hazard — the overwrite's input is
-      // executor-local blocks with TRUNCATED lineage, so no task
-      // (including retries) can re-read sink files mid-replacement;
-      // (b) crash isolation — the sink is untouched until the single
-      // overwrite job. Cluster caveat (rankPickBy's class): an executor
-      // loss during the overwrite fails the job instead of recomputing
-      // from half-replaced files; the re-run IS the recovery path
-      // (idempotent), exactly as for a crash mid-overwrite before.
-      val staged = merged.localCheckpoint(eager = true)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.get(key, "static")
-      spark.conf.set(key, "dynamic")
-      // the row count rides the overwrite itself — the pre-r13 shape
-      // re-read the staged parquet a second time just to count it —
-      // and the write clusters by the partition column (one file per
-      // replaced partition, the runIncremental small-files rule)
-      val obs = org.apache.spark.sql.Observation()
-      try clusterForWrite(staged, partitionCol,
-          keyCols.filterNot(_ == partitionCol))
-        .observe(obs, count(lit(1)).as("n"))
-        .write
-        .partitionBy(partitionCol)
-        .mode(SaveMode.Overwrite)
-        .parquet(sinkDir)
-      finally spark.conf.set(key, prev)
-      obs.get("n").asInstanceOf[Long]
-    } finally updates.unpersist(): Unit
+    // `updates` feeds the anti-join's key projection and the merge union,
+    // and its partition values pick the partitions to rewrite. One eager
+    // localCheckpoint computes the caller's lineage once per upsert (in
+    // the streaming sink, an aggregate over the micro-batch) and observes
+    // the affected partition set as it materializes, so the set costs no
+    // job of its own. Delta-sized, never sink-sized.
+    val seen = org.apache.spark.sql.Observation()
+    val (parts, nulls) = partitionsObserved(partitionCol)
+    val upd = updates.observe(seen, parts, nulls).localCheckpoint(eager = true)
+    val affected = partitionsSeen(seen)
+    require(affected.length <= maxPartitions,
+      s"upsert touches >$maxPartitions $partitionCol partitions — " +
+        "that is a table rewrite, not an incremental merge; split the batch")
+    if (affected.isEmpty) return 0L
+    // schema given explicitly: upsert's merge contract already requires
+    // updates.schema == sink schema (unionByName below fails otherwise),
+    // so the per-call parquet footer schema-inference read is pure
+    // overhead — the streaming sink pays it every micro-batch (§6)
+    val existing = spark.read.schema(updates.schema).parquet(sinkDir)
+      .filter(inPartitions(partitionCol, affected))
+    // null-safe key match: an update keyed on a NULL partition value
+    // replaces its old row instead of landing beside it
+    val newKeys = upd.select(keyCols.map(col): _*)
+    val keep = existing.join(newKeys,
+      keyCols.map(k => existing(k) <=> newKeys(k)).reduce(_ && _), "left_anti")
+    val merged = keep.unionByName(upd)
+    // r14 (guide §1.4/§6): materialize the merge with an eager
+    // localCheckpoint instead of the parquet staging round-trip the
+    // r13 shape paid per call (staging write job + dir listing +
+    // footer read + re-read + rm — the streaming sink calls through
+    // here EVERY micro-batch). The checkpoint serves staging's two
+    // purposes: (a) read-overwrite hazard — the overwrite's input is
+    // executor-local blocks with TRUNCATED lineage, so no task
+    // (including retries) can re-read sink files mid-replacement;
+    // (b) crash isolation — the sink is untouched until the single
+    // overwrite job. Cluster caveat (rankPickBy's class): an executor
+    // loss during the overwrite fails the job instead of recomputing
+    // from half-replaced files; the re-run IS the recovery path
+    // (idempotent), exactly as for a crash mid-overwrite before.
+    val staged = merged.localCheckpoint(eager = true)
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    // the row count rides the overwrite itself — the pre-r13 shape
+    // re-read the staged parquet a second time just to count it —
+    // and the write clusters by the partition column (one file per
+    // replaced partition, the runIncremental small-files rule)
+    val obs = org.apache.spark.sql.Observation()
+    try clusterForWrite(staged, partitionCol,
+        keyCols.filterNot(_ == partitionCol))
+      .observe(obs, count(lit(1)).as("n"))
+      .write
+      .partitionBy(partitionCol)
+      .mode(SaveMode.Overwrite)
+      .parquet(sinkDir)
+    finally spark.conf.set(key, prev)
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** Observed metrics for the set of `partitionCol` values a frame holds.
+    * `collect_set` drops NULL, so a NULL count rides along: without it the
+    * NULL partition would read as untouched and its directory be treated
+    * as emptied. Read back with [[partitionsSeen]]. */
+  private def partitionsObserved(partitionCol: String) = (
+    collect_set(col(partitionCol)).as("parts"),
+    count(when(col(partitionCol).isNull, lit(1))).as("nulls"))
+
+  private def partitionsSeen(obs: org.apache.spark.sql.Observation): Seq[Any] = {
+    val m = obs.get
+    val parts = m("parts").asInstanceOf[scala.collection.Seq[Any]].toSeq
+    if (m("nulls").asInstanceOf[Long] > 0L) parts :+ null else parts
+  }
+
+  /** Rows whose `partitionCol` is one of `values`. NULL partition values
+    * never match isin (SQL three-valued logic), so a NULL in `values`
+    * becomes an explicit isNull arm — without it a NULL partition's kept
+    * rows would drop out of the rewrite while the partition is replaced:
+    * data loss. Pinned in PipelineSpec for upsert and deleteKeys. */
+  private def inPartitions(partitionCol: String, values: Seq[Any]) = {
+    val nonNull = values.filter(_ != null)
+    val in =
+      if (nonNull.isEmpty) lit(false) else col(partitionCol).isin(nonNull: _*)
+    if (values.contains(null)) in || col(partitionCol).isNull else in
   }
 
   /** Row-level keyed DELETE (the GDPR / right-to-be-forgotten verb —
@@ -337,18 +389,7 @@ object Pipeline {
       s"delete touches >$maxPartitions $partitionCol partitions — " +
         "that is a table rewrite; split the request")
     if (affected.isEmpty) return 0L
-    // NULL partition values never match isin (SQL three-valued logic) —
-    // without the explicit isNull arm, a null partition's KEPT rows would
-    // be dropped from staging while its directory is removed: data loss,
-    // not just a missed delete. Pinned in PipelineSpec.
-    val nonNull = affected.filter(_ != null)
-    val inNonNull =
-      if (nonNull.isEmpty) lit(false)
-      else col(partitionCol).isin(nonNull.toIndexedSeq: _*)
-    val partFilter =
-      if (affected.contains(null)) inNonNull || col(partitionCol).isNull
-      else inNonNull
-    val existing = sink.filter(partFilter)
+    val existing = sink.filter(inPartitions(partitionCol, affected.toIndexedSeq))
     // both counts ride the staging write as observations (the
     // runIncremental load-report discipline): `before` observes rows
     // ENTERING the anti-join, `after` rows surviving it — the pre-r13
@@ -357,9 +398,12 @@ object Pipeline {
     // bench delete entry calls this twice)
     val obsB = org.apache.spark.sql.Observation()
     val obsA = org.apache.spark.sql.Observation()
+    // `after` also observes the surviving partition set, so the
+    // emptied partitions are known without a job of their own
+    val (parts, nulls) = partitionsObserved(partitionCol)
     val keep = existing.observe(obsB, count(lit(1)).as("n"))
       .join(keyFrame, keyCols.toIndexedSeq, "left_anti")
-      .observe(obsA, count(lit(1)).as("n"))
+      .observe(obsA, count(lit(1)).as("n"), parts, nulls)
     // r14: eager localCheckpoint replaces the parquet staging round-trip
     // (write + list + re-read + rm per call — the bench delete entry
     // calls this twice); the observations ride the checkpoint job. Same
@@ -380,8 +424,7 @@ object Pipeline {
     } finally spark.conf.set(confKey, prev)
     // partitions the delete emptied never appear in the staged frame —
     // dynamic overwrite leaves their files behind; drop them explicitly
-    val survivors = staged.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSet
+    val survivors = partitionsSeen(obsA).toSet
     def rm(f: java.io.File): Unit = {
       val kids = f.listFiles()
       if (kids != null) kids.foreach(rm)
@@ -399,12 +442,12 @@ object Pipeline {
     }
     val deleted = before - after
     // post-condition — GDPR verb, verify don't trust: no surviving sink
-    // row may match a requested key. A fully-emptied sink has no parquet
-    // footers to read; that trivially satisfies the condition.
-    val residual =
-      try spark.read.parquet(sinkDir)
-        .join(keyFrame, keyCols.toIndexedSeq, "left_semi").count()
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    // row may match a requested key. A fresh read (the listing reflects
+    // the rewrite and the removals) with the first read's schema, so it
+    // needs no footer schema inference, and a fully-emptied sink reads as
+    // zero rows.
+    val residual = spark.read.schema(sink.schema).parquet(sinkDir)
+      .join(keyFrame, keyCols.toIndexedSeq, "left_semi").count()
     require(residual == 0L,
       s"deleteKeys post-condition failed: $residual matching rows remain " +
         s"in $sinkDir — re-run the delete (idempotent recovery)")
@@ -422,7 +465,7 @@ object Pipeline {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("date"), col("group_key"))
       .orderBy(col("load_date").desc)
-    spark.read.parquet(sinkDir)
+    spark.read.schema(sinkSchema).parquet(sinkDir)
       .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
   }
@@ -627,7 +670,7 @@ object Pipeline {
     val n = df.count()
     val files = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
     df.repartition(files).write.mode(SaveMode.Overwrite).parquet(staging)
-    require(spark.read.parquet(staging).count() == n,
+    require(spark.read.schema(df.schema).parquet(staging).count() == n,
       "compaction must not change row count")
     Files.move(Paths.get(base), Paths.get(retired),
       StandardCopyOption.ATOMIC_MOVE)

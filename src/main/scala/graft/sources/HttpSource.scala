@@ -98,9 +98,12 @@ object HttpSource {
     }
   }
 
-  /** Fetch every URL as a distributed Dataset[HttpFetch]. `parallelism`
-    * bounds concurrent connections cluster-wide (one in-flight request
-    * per partition — the polite-crawler knob; the reference's 5 s sleep
+  /** Fetch every URL as a distributed Dataset[HttpFetch]. The URL list
+    * is cut into min(`parallelism`, |urls|) contiguous slices, one per
+    * partition, straight from the driver — no shuffle, and each task
+    * receives only its own slice. `parallelism` therefore bounds
+    * concurrent connections cluster-wide (one in-flight request per
+    * partition — the polite-crawler knob; the reference's 5 s sleep
     * is the serial version of the same restraint). `minIntervalMs > 0`
     * additionally paces request starts WITHIN each partition via a
     * token bucket (capacity `burst`), so the cluster-wide request rate
@@ -117,7 +120,7 @@ object HttpSource {
       burst: Int = 1): Dataset[HttpFetch] = {
     import spark.implicits._
     val n = math.max(1, math.min(parallelism, urls.size))
-    spark.createDataset(urls).repartition(n)
+    spark.createDataset(spark.sparkContext.parallelize(urls, n))
       .mapPartitions { it =>
         // monotonic clock (nanoTime), not currentTimeMillis: pacing
         // measures ELAPSED time, and the wall clock can step backwards

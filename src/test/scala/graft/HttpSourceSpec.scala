@@ -3,6 +3,8 @@ package graft
 import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.{HttpSource, Sources}
@@ -58,6 +60,19 @@ class HttpSourceSpec extends SparkSpec {
       // the job survived a dead endpoint: 3 of 4 pages fetched
       assert(got.values.count(_.body != null) === 3)
     }
+  }
+
+  test("fetch slices the URL list into its partitions without a shuffle") {
+    val urls = (1 to 5).map(i => s"http://127.0.0.1:9/p$i")
+    val plan = HttpSource.fetch(spark, urls, parallelism = 2)
+      .queryExecution.executedPlan
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.isEmpty, plan.toString)
+    // one partition per allowed in-flight request (building the RDD
+    // fetches nothing)
+    assert(plan.execute().getNumPartitions === 2)
   }
 
   test("RatePacer enforces the pacing floor: N acquires sleep at least " +

@@ -259,6 +259,114 @@ class PipelineSpec extends SparkSpec {
     assert(got === ref.toMap)
   }
 
+  test("upsert into a NULL partition keeps its untouched rows and " +
+    "replaces the updated key") {
+    import spark.implicits._
+    val sink = Files.createTempDirectory("graft_upsert_null").toString + "/t"
+    Seq(("k1", Some("a"), 1.0), ("k1", None, 2.0), ("k2", None, 3.0))
+      .toDF("group_key", "src", "value").write.partitionBy("src").parquet(sink)
+    val fix = Seq(("k2", Option.empty[String], 30.0)).toDF("group_key", "src", "value")
+    // the NULL partition is rewritten: k1 kept, k2 replaced
+    assert(Pipeline.upsert(spark, fix, sink, keyCols = Seq("group_key", "src"),
+      partitionCol = "src") === 2L)
+    val got = spark.read.parquet(sink).select("group_key", "src", "value")
+      .as[(String, Option[String], Double)].collect()
+    assert(got.toSet === Set(("k1", Some("a"), 1.0), ("k1", None, 2.0),
+      ("k2", None, 30.0)))
+    assert(got.length === 3, "the replaced NULL-key row must not survive")
+  }
+
+  test("watermark: the directory listing equals a MAX(date) scan in " +
+    "every sink state the writers leave") {
+    import spark.implicits._
+    // the scan the listing replaces; it cannot infer a schema from a sink
+    // with no visible data file, which is a cold start
+    def scanned(sink: String): Option[Date] =
+      scala.util.Try(spark.read.parquet(sink).agg(max(col("date"))).first().getDate(0))
+        .toOption.flatMap(Option(_))
+    def fresh() = Files.createTempDirectory("graft_wm").toString + "/t"
+    def load(sink: String, days: (String, String)*): Unit =
+      Pipeline.runIncremental(spark, events(days.map { case (d, z) => (s"$d 01:00:00", z, 1.0) }),
+        "zone", sink, Date.valueOf("2024-02-01"), overwritePartitions = true): Unit
+    // a real partitioned write of `days` under `dir` (uncommitted output
+    // when `dir` is a hidden staging path)
+    def written(dir: String, days: Option[String]*): Unit =
+      days.map(d => (d, "SE1")).toDF("date", "group_key")
+        .select(col("date").cast("date"), col("group_key"))
+        .write.partitionBy("date").mode("append").parquet(dir)
+    def dataFiles(dir: String) = new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+
+    val states = Seq[(String, Option[String], String => Unit)](
+      ("missing dir", None, _ => ()),
+      ("empty dir", None, s => new java.io.File(s).mkdirs(): Unit),
+      ("only hidden entries", None, { s =>
+        new java.io.File(s).mkdirs()
+        Files.createFile(new java.io.File(s, "_SUCCESS").toPath)
+        written(s"$s/_temporary/0", Some("2024-01-05"))
+        written(s"$s/.spark-staging-1", Some("2024-01-06"))
+      }),
+      ("crashed append and overwrite beside a loaded sink", Some("2024-01-02"), { s =>
+        load(s, "2024-01-01" -> "SE1", "2024-01-02" -> "SE1")
+        written(s"$s/_temporary/0", Some("2024-01-09"))
+        written(s"$s/.spark-staging-1", Some("2024-01-08"))
+      }),
+      ("date dirs holding no data file", Some("2024-01-02"), { s =>
+        load(s, "2024-01-01" -> "SE1", "2024-01-02" -> "SE1", "2024-01-03" -> "SE1")
+        new java.io.File(s"$s/date=2024-01-07").mkdirs()
+        // an interrupted partition removal: checksums left, data gone
+        dataFiles(s"$s/date=2024-01-03").foreach(_.delete())
+      }),
+      ("NULL partition beside dates", Some("2024-01-03"),
+        s => written(s, Some("2024-01-03"), None)),
+      ("only the NULL partition", None, s => written(s, None)),
+      ("deleteKeys emptied the newest date", Some("2024-01-02"), { s =>
+        load(s, "2024-01-01" -> "SE1", "2024-01-02" -> "SE1", "2024-01-03" -> "SE9")
+        assert(Pipeline.deleteKeys(spark, Seq("SE9").toDF("group_key"), s) === 1L)
+      }),
+      ("reprocessDays overwrite", Some("2024-01-04"), { s =>
+        load(s, "2024-01-01" -> "SE1", "2024-01-02" -> "SE1")
+        Pipeline.runIncremental(spark,
+          events(Seq(("2024-01-02 05:00:00", "SE1", 2.0), ("2024-01-04 01:00:00", "SE2", 3.0))),
+          "zone", s, Date.valueOf("2024-02-02"), overwritePartitions = true,
+          reprocessDays = 1): Unit
+      }),
+      ("compact crashed between its renames (live dir retired)", None, { s =>
+        load(s, "2024-01-01" -> "SE1")
+        Files.move(java.nio.file.Paths.get(s), java.nio.file.Paths.get(s + ".compact_old")): Unit
+      }))
+    states.foreach { case (state, want, make) =>
+      val sink = fresh()
+      make(sink)
+      val got = Pipeline.watermark(spark, sink)
+      assert(got === scanned(sink), state)
+      assert(got === want.map(Date.valueOf), state)
+    }
+  }
+
+  test("sink metadata is read without probe jobs: watermark, readDeduped, " +
+    "warm upsert") {
+    import spark.implicits._
+    val sink = Files.createTempDirectory("graft_jobs").toString + "/t"
+    Pipeline.runIncremental(spark, events(Seq(("2024-01-01 01:00:00", "SE1", 1.0),
+      ("2024-01-02 01:00:00", "SE1", 2.0), ("2024-01-02 01:00:00", "SE2", 3.0))),
+      "zone", sink, Date.valueOf("2024-01-03"))
+    // a MAX(date) scan before the listing: 3 jobs
+    assert(jobsDuring(Pipeline.watermark(spark, sink))._2 === 0)
+    // the known sink schema replaces the footer schema-inference job:
+    // 3 jobs before
+    assert(jobsDuring(Pipeline.readDeduped(spark, sink).collect())._2 <= 2)
+    // a warm upsert observes its partition set on the checkpoint of the
+    // updates instead of a separate distinct-collect: 6 jobs before
+    val fix = Seq(("2024-01-02", "SE1", 20.0, 1L, "2024-01-04"))
+      .toDF("date", "group_key", "avg_value", "n", "load_date")
+      .select(col("date").cast("date"), col("group_key"), col("avg_value"),
+        col("n"), col("load_date").cast("date"))
+    val (n, upsertJobs) = jobsDuring(Pipeline.upsert(spark, fix, sink))
+    assert(n === 2L)
+    assert(upsertJobs <= 5)
+  }
+
   test("clusteredWrite yields disjoint per-file key ranges (file-skipping layout)") {
     val dir = Files.createTempDirectory("graft_clustered").toString + "/t"
     val docs = graft.util.Tables.documents(spark, sf)
