@@ -279,11 +279,7 @@ object Bench {
           require(got == want, s"stream sink rows $got != batch $want")
         }
       })
-    def rmAll(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rmAll)
-      f.delete(): Unit
-    }
-    rmAll(wroot.toFile)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(wroot.toFile): Unit
     sentinels += sentinelOnce()
 
     val all = results ++ writeResults

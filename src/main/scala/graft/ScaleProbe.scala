@@ -162,11 +162,7 @@ object ScaleProbe {
         math.log(hi.toDouble / lo)
       println(f"[scaleprobe] $op%-16s $row ${alpha}%5.2f")
     }
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(root.toFile)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile): Unit
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,15 +21,24 @@ import org.apache.spark.sql.types._
   *  - the hourly→daily reduction is a partial-agg hash aggregate: the
   *    shuffle carries |days × groups| partial states, a ~24× cut before any
   *    exchange (mirrors the reference's in-process mean, energy_etl.py:69);
-  *  - the write side has two modes: blind append (the reference's
+  *  - every write reaches the sink through ONE commit ([[commit]]): the
+  *    frame is clustered by its partition column (AQE REBALANCE — one
+  *    writer task per partition value, a hot value split at the advisory
+  *    partition size), the row count rides the write as an Observation,
+  *    and the write is a per-write dynamic partition overwrite (replace
+  *    exactly the partitions the frame holds) or an append. The session
+  *    conf is never touched, so a streaming upsert on one thread cannot
+  *    leak its overwrite mode into another writer on the same session;
+  *  - [[runIncremental]] commits as a blind append (the reference's
   *    WRITE_APPEND, :105 — at-least-once, duplicates on crash replay,
-  *    [[readDeduped]] recovers on read) and date-keyed DYNAMIC PARTITION
-  *    OVERWRITE (`overwritePartitions = true`) — replaying a delta
-  *    rewrites exactly its own date partitions with identical content,
-  *    so retries are idempotent WRITE-side, closing the reference's one
-  *    semantic hole. A `reprocessDays` overlap window rolls the
-  *    watermark back n days each run, making partial-write damage
-  *    self-healing (the standard reprocessing-window idiom).
+  *    [[readDeduped]] recovers on read) or as a date-keyed overwrite
+  *    (`overwritePartitions = true`) — replaying a delta rewrites exactly
+  *    its own date partitions with identical content, so retries are
+  *    idempotent WRITE-side, closing the reference's one semantic hole.
+  *    A `reprocessDays` overlap window rolls the watermark back n days
+  *    each run, making partial-write damage self-healing (the standard
+  *    reprocessing-window idiom); [[upsert]] and [[deleteKeys]] commit
+  *    their copy-on-write result as the same overwrite.
   */
 object Pipeline {
 
@@ -41,23 +51,29 @@ object Pipeline {
     StructField("n", LongType, nullable = false),
     StructField("load_date", DateType, nullable = false)))
 
-  /** Cluster a frame for a `partitionBy(partitionCol)` write. With the
-    * default `SPARK_GRAFT_WRITE_SALTS=1` this is the r13 shape — one
-    * writer task (hence one file) per partition value (guide §6
-    * small-files rule). With salts = k > 1 the clustering key becomes
-    * (partitionCol, pmod(xxhash64(saltCols), k)): a hot partition value
-    * fans out across ≤k writer tasks instead of serializing through one
-    * (guide §2.5 skew — VERDICT r13 item 4), while files-per-partition
-    * stays bounded at ≤k. The salt is derived from row CONTENT (the key
-    * columns), never rand()/monotonic id: a retried map task recomputes
-    * the identical salt, so rows cannot duplicate or vanish under
-    * fetch-failure replay (SPARK-38388 class). */
-  private def clusterForWrite(df: DataFrame, partitionCol: String,
-      saltCols: Seq[String]): DataFrame = {
-    val k = graft.util.Config.writeSalts
-    if (k <= 1 || saltCols.isEmpty) df.repartition(col(partitionCol))
-    else df.repartition(col(partitionCol),
-      pmod(xxhash64(saltCols.map(col): _*), lit(k.toLong)))
+  /** The sink's one commit. `df` is clustered by `partitionCol` with a
+    * REBALANCE hint: AQE hashes it into one writer task (hence one file)
+    * per partition value (guide §6 small-files rule), and splits a hot
+    * value whose shuffle output exceeds
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` at map-output
+    * boundaries, so a skewed date never serializes through one writer
+    * (guide §2.5); with AQE off it plans as `repartition(partitionCol)`.
+    * The row count rides the write as an Observation — no extra scan.
+    * `replace` overwrites exactly the partition values `df` holds (the
+    * per-write `partitionOverwriteMode=dynamic` option, so an empty frame
+    * touches nothing and the session conf is never flipped); otherwise
+    * the rows are appended. Returns the rows written. */
+  private def commit(df: DataFrame, sinkDir: String, partitionCol: String,
+      replace: Boolean): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    df.hint("rebalance", col(partitionCol))
+      .observe(obs, count(lit(1)).as("n"))
+      .write
+      .partitionBy(partitionCol)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(if (replace) SaveMode.Overwrite else SaveMode.Append)
+      .parquet(sinkDir)
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** MAX(date) already loaded, or None on cold start (energy_etl.py:41-46).
@@ -93,8 +109,8 @@ object Pipeline {
   }
 
   /** One incremental run: reduce source rows with date > watermark to one
-    * (date, group) mean row each and append them to the sink. Returns the
-    * number of appended rows (the reference's load report, :109).
+    * (date, group) mean row each and commit them to the sink. Returns the
+    * number of rows written (the reference's load report, :109).
     *
     * @param events    source with (ts timestamp, group col, value double)
     * @param groupCol  the per-group key column name (reference's zone)
@@ -147,45 +163,8 @@ object Pipeline {
       .select(sinkSchema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
         .toIndexedSeq: _*)
 
-    // The load report rides the write itself (df.observe): executors
-    // collect the named metrics AS the write runs, so counting the
-    // appended rows costs ZERO extra scans — the pre-r8 implementation
-    // re-read the sink after the write to count, a full extra read of
-    // the loaded partition per run. The same observation carries the
-    // load's date span and source-event coverage for operational
-    // logging, all from the single pass.
-    val obs = org.apache.spark.sql.Observation()
-    // cluster the write by its partition column (guide §6 small-files
-    // rule): without it every shuffle partition holding rows of a date
-    // opens its own file there — the sink grew ~(partitions × dates)
-    // tiny files per load and every downstream read/listing (the CoW
-    // upsert re-reads the sink each call) paid for them. ≤salts writer
-    // tasks per date (default 1 file per date); a hot date fans out
-    // across the salt dimension — see clusterForWrite.
-    val audited = clusterForWrite(daily, "date", Seq("group_key")).observe(obs,
-      count(lit(1)).as("rows_loaded"),
-      coalesce(sum(col("n")), lit(0L)).as("events_covered"),
-      min(col("date")).as("first_date"),
-      max(col("date")).as("last_date"))
-
-    if (overwritePartitions) {
-      // dynamic mode replaces ONLY the partitions present in `daily`
-      // (an empty delta touches nothing); static overwrite would drop
-      // the whole sink
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.get(key, "static")
-      spark.conf.set(key, "dynamic")
-      try audited.write
-        .partitionBy("date")
-        .mode(SaveMode.Overwrite)
-        .parquet(sinkDir)
-      finally spark.conf.set(key, prev)
-    } else
-      audited.write
-        .partitionBy("date")
-        .mode(SaveMode.Append)
-        .parquet(sinkDir)
-    obs.get("rows_loaded").asInstanceOf[Long]
+    // the row count (the reference's load report) rides the commit
+    commit(daily, sinkDir, "date", replace = overwritePartitions)
   }
 
   /** Key-level MERGE (upsert) into the date-partitioned sink — the one
@@ -202,7 +181,8 @@ object Pipeline {
     *  1. the updates are materialized once (an eager localCheckpoint),
     *     and the affected-date list is observed on that same job —
     *     watermark-class driver state (days, not rows), enforced by
-    *     `maxPartitions`;
+    *     `maxPartitions`. An empty batch observes no dates and returns 0
+    *     before anything touches disk;
     *  2. existing rows of ONLY those dates are read (the isin literal
     *     list static-prunes the partitioned scan; a NULL date adds an
     *     isNull arm), updates' keys are anti-joined away (null-safe
@@ -212,9 +192,12 @@ object Pipeline {
     *     read-overwrite-same-path hazard (the checkpoint truncates
     *     lineage, so no overwrite task can re-read sink files) and
     *     keeps the sink untouched until stage 3;
-    *  3. the checkpointed rows dynamic-partition-overwrite exactly the
-    *     affected dates. Replaying the same upsert regenerates the same
-    *     merge content, so retries are idempotent end-to-end.
+    *  3. the checkpointed rows go through the sink's one [[commit]] as a
+    *     dynamic partition overwrite of exactly the affected dates. A
+    *     missing sink is created empty first and reads as zero rows, so
+    *     the first upsert into a new sink takes the same path. Replaying
+    *     the same upsert regenerates the same merge content, so retries
+    *     are idempotent end-to-end.
     *
     * At 100 TB both the read and the rewrite touch |affected dates| ×
     * |groups/day| daily rows — never the full sink; the merge
@@ -240,26 +223,6 @@ object Pipeline {
     require(keyCols.contains(partitionCol),
       s"upsert key $keyCols must include the partition column $partitionCol" +
         " — a key that moves across partitions needs a full-sink merge")
-    val dir = new java.io.File(sinkDir)
-    val sinkEmpty =
-      !dir.exists() || dir.listFiles() == null ||
-        !dir.listFiles().exists(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-    if (sinkEmpty) {
-      // an empty delta must not conjure a sink dir out of a no-data
-      // micro-batch (the streaming sink calls through here every batch;
-      // r14 moved its per-batch isEmpty pre-probe to this rare branch —
-      // steady-state batches against a non-empty sink pay no probe job,
-      // an empty observed partition set below short-circuits instead)
-      if (updates.isEmpty) return 0L
-      // observe rides the write: counting the loaded rows costs zero
-      // extra jobs (the runIncremental load-report discipline)
-      val obs0 = org.apache.spark.sql.Observation()
-      clusterForWrite(updates, partitionCol, // ≤salts files per partition value
-          keyCols.filterNot(_ == partitionCol))
-        .observe(obs0, count(lit(1)).as("n"))
-        .write.partitionBy(partitionCol).mode(SaveMode.Append).parquet(sinkDir)
-      return obs0.get("n").asInstanceOf[Long]
-    }
     // `updates` feeds the anti-join's key projection and the merge union,
     // and its partition values pick the partitions to rewrite. One eager
     // localCheckpoint computes the caller's lineage once per upsert (in
@@ -277,7 +240,10 @@ object Pipeline {
     // schema given explicitly: upsert's merge contract already requires
     // updates.schema == sink schema (unionByName below fails otherwise),
     // so the per-call parquet footer schema-inference read is pure
-    // overhead — the streaming sink pays it every micro-batch (§6)
+    // overhead — the streaming sink pays it every micro-batch (§6). With
+    // the schema known, a new (empty) sink directory reads as zero rows.
+    val root = new org.apache.hadoop.fs.Path(sinkDir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root): Unit
     val existing = spark.read.schema(updates.schema).parquet(sinkDir)
       .filter(inPartitions(partitionCol, affected))
     // null-safe key match: an update keyed on a NULL partition value
@@ -299,24 +265,8 @@ object Pipeline {
     // loss during the overwrite fails the job instead of recomputing
     // from half-replaced files; the re-run IS the recovery path
     // (idempotent), exactly as for a crash mid-overwrite before.
-    val staged = merged.localCheckpoint(eager = true)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    // the row count rides the overwrite itself — the pre-r13 shape
-    // re-read the staged parquet a second time just to count it —
-    // and the write clusters by the partition column (one file per
-    // replaced partition, the runIncremental small-files rule)
-    val obs = org.apache.spark.sql.Observation()
-    try clusterForWrite(staged, partitionCol,
-        keyCols.filterNot(_ == partitionCol))
-      .observe(obs, count(lit(1)).as("n"))
-      .write
-      .partitionBy(partitionCol)
-      .mode(SaveMode.Overwrite)
-      .parquet(sinkDir)
-    finally spark.conf.set(key, prev)
-    obs.get("n").asInstanceOf[Long]
+    commit(merged.localCheckpoint(eager = true), sinkDir, partitionCol,
+      replace = true)
   }
 
   /** Observed metrics for the set of `partitionCol` values a frame holds.
@@ -349,8 +299,8 @@ object Pipeline {
     * the one write primitive [[upsert]] doesn't express, since an
     * upsert needs a replacement row): removes every sink row whose
     * `keyCols` match a row of `keys`, rewriting ONLY the partitions
-    * that contain matches (copy-on-write via the same checkpoint-then-
-    * dynamic-partition-overwrite commit as [[upsert]]); untouched
+    * that contain matches (copy-on-write: checkpoint the surviving rows,
+    * then the same dynamic-overwrite [[commit]] as [[upsert]]); untouched
     * partitions keep their files as-is. The affected-partition set
     * comes from the SINK side — a deletion request typically knows the
     * key, not which partitions hold it. Partitions left EMPTY by the
@@ -413,23 +363,10 @@ object Pipeline {
     val staged = keep.localCheckpoint(eager = true)
     val before = obsB.get("n").asInstanceOf[Long]
     val after = obsA.get("n").asInstanceOf[Long]
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(confKey, "static")
-    spark.conf.set(confKey, "dynamic")
-    try {
-      if (after > 0L)
-        clusterForWrite(staged, partitionCol, keyCols) // ≤salts files/partition
-          .write.partitionBy(partitionCol)
-          .mode(SaveMode.Overwrite).parquet(sinkDir)
-    } finally spark.conf.set(confKey, prev)
+    if (after > 0L) commit(staged, sinkDir, partitionCol, replace = true): Unit
     // partitions the delete emptied never appear in the staged frame —
     // dynamic overwrite leaves their files behind; drop them explicitly
     val survivors = partitionsSeen(obsA).toSet
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
     affected.filterNot(survivors.contains).foreach { p =>
       // Spark URL-escapes partition values in directory names (spaces,
       // ':', '%', …) and writes NULL as __HIVE_DEFAULT_PARTITION__ — a
@@ -438,7 +375,7 @@ object Pipeline {
       // escaping the writer used (null/empty → the default partition).
       val dirName = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .getPartitionPathString(partitionCol, if (p == null) null else p.toString)
-      rm(new java.io.File(s"$sinkDir/$dirName"))
+      FileUtil.fullyDelete(new java.io.File(s"$sinkDir/$dirName")): Unit
     }
     val deleted = before - after
     // post-condition — GDPR verb, verify don't trust: no surviving sink
@@ -612,14 +549,7 @@ object Pipeline {
         "not a versioned table, or no commit completed; refusing to vacuum")
     val latest = java.nio.file.Files.readString(latestPath).trim.toInt
     val drop = versions(tableDir).filter(_ < latest).dropRight(keep - 1)
-    drop.foreach { v =>
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$tableDir/v=$v"))
-    }
+    drop.foreach(v => FileUtil.fullyDelete(new java.io.File(s"$tableDir/v=$v")): Unit)
     drop
   }
 
@@ -647,24 +577,31 @@ object Pipeline {
     * complete pre-compaction layout, so it is rolled back to live; a
     * `.compact_old` beside a live dir (crash between 4 and 5) is
     * droppable; a leftover `.compact_staging` (crash before 3) is
-    * droppable, possibly partial. */
+    * droppable, possibly partial.
+    *
+    * `dir` must be a flat directory or one leaf partition: a partitioned
+    * table root (`k=v` subdirectories) is refused, since the rewrite
+    * would flatten its partition columns into file columns. */
   def compact(spark: SparkSession, dir: String,
               targetRowsPerFile: Long): Int = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val base = dir.stripSuffix("/")
     val staging = s"$base.compact_staging"
     val retired = s"$base.compact_old"
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
     // crash recovery from a previous interrupted run (see scaladoc)
     if (!Files.exists(Paths.get(base)) && Files.exists(Paths.get(retired)))
       Files.move(Paths.get(retired), Paths.get(base),
         StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(Paths.get(retired))) rm(new java.io.File(retired))
-    if (Files.exists(Paths.get(staging))) rm(new java.io.File(staging))
+    if (Files.exists(Paths.get(retired))) FileUtil.fullyDelete(new java.io.File(retired)): Unit
+    if (Files.exists(Paths.get(staging))) FileUtil.fullyDelete(new java.io.File(staging)): Unit
+    // a partitioned root (`k=v` subdirectories) would come back flat: the
+    // rewrite turns its partition columns into file columns, and the
+    // watermark listing then finds no `date=` directory
+    val partitionDir = Option(new java.io.File(base).listFiles()).toSeq.flatten
+      .collectFirst { case f if f.isDirectory && f.getName.contains("=") &&
+        !f.getName.startsWith("_") && !f.getName.startsWith(".") => f.getName }
+    require(partitionDir.isEmpty, s"compact: $base is a partitioned table " +
+      s"root (${partitionDir.get}); compact one leaf partition directory at a time")
 
     val df = spark.read.parquet(base)
     val n = df.count()
@@ -676,7 +613,7 @@ object Pipeline {
       StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(staging), Paths.get(base),
       StandardCopyOption.ATOMIC_MOVE)
-    rm(new java.io.File(retired))
+    FileUtil.fullyDelete(new java.io.File(retired)): Unit
     files
   }
 }

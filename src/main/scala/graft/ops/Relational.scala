@@ -1253,11 +1253,11 @@ object Relational {
   private val sqlScript = QueryDef(
     (s, dir) => {
       import s.implicits._
-      // set/restore discipline (same pattern as partitionOverwriteMode
-      // in Pipeline): the scripting flag and the loop's cached input are
-      // SCOPED to this query — a bench or notebook session running 200
-      // queries after this one must not inherit a flipped parser flag or
-      // a stale cached projection.
+      // set/restore discipline (the parser flag is session conf with no
+      // per-query option): the scripting flag and the loop's cached
+      // input are SCOPED to this query — a bench or notebook session
+      // running 200 queries after this one must not inherit a flipped
+      // parser flag or a stale cached projection.
       val confKey = "spark.sql.scripting.enabled"
       val prevScripting = s.conf.getOption(confKey)
       s.conf.set(confKey, "true")

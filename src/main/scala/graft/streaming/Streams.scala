@@ -204,10 +204,10 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // no isEmpty pre-probe (r14): that was one extra Spark job per
-        // micro-batch. Pipeline.upsert handles the empty delta itself —
-        // non-empty sink: the affected-partition probe finds nothing
-        // and returns 0; empty sink: its own isEmpty guard refuses to
-        // create a sink dir from a no-data batch.
+        // micro-batch. Pipeline.upsert handles the empty delta itself:
+        // its checkpoint observes no affected partitions and it returns
+        // 0 before touching the sink, so a no-data batch never creates
+        // the sink dir.
         graft.etl.Pipeline.upsert(batch.sparkSession,
           latestPerKey(batch), sinkDir): Unit
       }

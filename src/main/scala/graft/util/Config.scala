@@ -20,7 +20,6 @@ package graft.util
   * | SPARK_GRAFT_DISK_MEMO | cross-session parquet cache for heavy deterministic fixture intermediates ([[FixtureCache]]) | true |
   * | SPARK_GRAFT_CACHE_DIR | FixtureCache root | $tmpdir/graft_fixture_cache |
   * | SPARK_GRAFT_CACHE_BUCKETS | bucket count for FixtureCache bucketed publishes (caps the cached side's scan parallelism — see [[FixtureCache]] sizing rule) | 8 |
-  * | SPARK_GRAFT_WRITE_SALTS | writer tasks per partition value in Pipeline's clustered writes (skew fan-out; files/partition ≤ this) | 1 |
   * | SPARK_GRAFT_CODEGEN_CACHE | spark.sql.codegen.cache.maxEntries (sized to the declared query surface) | 4000 |
   * | SPARK_GRAFT_CTE_LOCAL_ANCHOR | recursive-CTE LocalRelation fast-path anchor-row ceiling | 1000000 |
   */
@@ -75,25 +74,6 @@ object Config {
       .orElse(sys.env.get("SPARK_GRAFT_CODEGEN_CACHE"))
       .map(_.trim.toInt.toString)
       .getOrElse("4000")
-
-  /** Writer-task fan-out per partition value for the Pipeline's
-    * partition-clustered writes (`SPARK_GRAFT_WRITE_SALTS`, default 1).
-    * `repartition(col(partitionCol))` alone funnels ALL rows of a
-    * partition value through ONE writer task — correct file counts, but
-    * a hot/skewed date serializes its whole write at production volume
-    * (guide §2.5 skew; VERDICT r13 item 4). With salts = k > 1 the
-    * write clusters on (partitionCol, pmod(xxhash64(key), k)): a hot
-    * date splits across ≤k writer tasks while files-per-date stays
-    * bounded at ≤k (PipelineSpec pins both). The salt derives from row
-    * content (xxhash64 of the key columns), never rand()/partition id —
-    * deterministic under task retry (guide §2.5, SPARK-38388).
-    * Default 1 keeps the fixture-scale one-file-per-date layout (and
-    * the driver's bench comparable); production sizing: k ≈ ⌈hot-date
-    * rows / (maxRecordsPerFile or one task's write budget)⌉. */
-  def writeSalts: Int =
-    sys.props.get("graft.writeSalts")
-      .orElse(sys.env.get("SPARK_GRAFT_WRITE_SALTS"))
-      .map(_.trim.toInt).getOrElse(1)
 
   /** Anchor-row ceiling for Spark's recursive-CTE LocalRelation fast
     * path (`spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation`,

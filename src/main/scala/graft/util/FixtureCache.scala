@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -132,8 +133,8 @@ object FixtureCache {
         // rename is atomic on one filesystem; losing the race to a
         // concurrent publisher means an identical table already sits at
         // the destination — drop ours and read theirs
-        if (!tmp.renameTo(entry)) rm(tmp)
-      } catch { case e: Throwable => rm(tmp); throw e }
+        if (!tmp.renameTo(entry)) FileUtil.fullyDelete(tmp): Unit
+      } catch { case e: Throwable => FileUtil.fullyDelete(tmp); throw e }
     }
     buckets match {
       case None => s.read.parquet(entry.toString)
@@ -242,11 +243,6 @@ object FixtureCache {
     val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
     Option(new java.io.File(r).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(".tmp-") && f.lastModified < cutoff)
-      .foreach(rm)
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-    f.delete(): Unit
+      .foreach(f => FileUtil.fullyDelete(f): Unit)
   }
 }

@@ -636,15 +636,14 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$sink/src=__HIVE_DEFAULT_PARTITION__").exists())
   }
 
-  test("salted clustered write: a hot date fans out across ≤k writer " +
-    "tasks, files per date stay ≤k, content identical to unsalted") {
-    // SPARK_GRAFT_WRITE_SALTS > 1 (VERDICT r13 item 4 / guide §2.5+§6):
-    // repartition(col(date)) alone serializes a hot date through one
-    // writer; with k salts the clustering key is (date,
-    // pmod(xxhash64(group_key), k)) — deterministic row-content salt,
-    // ≤k files per date, rows identical.
-    import spark.implicits._
-    val k = 4
+  test("clustered write: AQE rebalance splits a hot date; a cold date writes one file") {
+    // The sink commit clusters with a REBALANCE hint: one writer task per
+    // date, and AQE splits a date whose shuffle output exceeds the
+    // advisory partition size at map-output boundaries (guide §2.5+§6) —
+    // at most one file per map task, rows identical.
+    // the rebalance's map side is the aggregate's output: one task per
+    // shuffle partition (coalescing is off in the test session)
+    val mapTasks = spark.sessionState.conf.numShufflePartitions
     // one HOT date (64 groups) + one cold date (2 groups)
     val hot = (1 to 64).map(g => ("2024-03-01 01:00:00", s"g$g", g.toDouble))
     val cold = Seq(("2024-03-02 01:00:00", "g1", 1.0),
@@ -665,40 +664,110 @@ class PipelineSpec extends SparkSpec {
         .filterNot(_.getName.startsWith("."))
         .map(d => d.getName ->
           d.listFiles().count(f => f.getName.endsWith(".parquet"))).toMap
-    val plain = Files.createTempDirectory("graft_salt0").toString + "/t"
+    val plain = Files.createTempDirectory("graft_rebalance0").toString + "/t"
     load(plain)
-    val prev = sys.props.get("graft.writeSalts")
-    sys.props("graft.writeSalts") = k.toString
+    // the hot date's rebalance partition (under 1 KB of shuffle output
+    // here; it stays whole at 1 KB) is well above 128 bytes, so AQE
+    // splits it; the cold date's two rows share one map output
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "128")
     try {
-      val salted = Files.createTempDirectory("graft_salt4").toString + "/t"
-      load(salted)
-      // content identical to the unsalted layout
-      assert(snapshot(salted) === snapshot(plain))
-      val fpd = filesPerDate(salted)
+      val split = Files.createTempDirectory("graft_rebalance1").toString + "/t"
+      load(split)
+      // content identical to the default layout
+      assert(snapshot(split) === snapshot(plain))
+      val fpd = filesPerDate(split)
       // the hot date fanned out (>1 writer task ⇒ >1 file) but stayed
-      // bounded at ≤k; the 2-group cold date cannot exceed its groups
-      assert(fpd("date=2024-03-01") > 1 && fpd("date=2024-03-01") <= k, fpd.toString)
-      assert(fpd("date=2024-03-02") <= k, fpd.toString)
-      // unsalted layout was exactly one file per date
+      // bounded by the map tasks; the cold date stayed one file
+      assert(fpd("date=2024-03-01") > 1 && fpd("date=2024-03-01") <= mapTasks,
+        fpd.toString)
+      assert(fpd("date=2024-03-02") === 1, fpd.toString)
+      // default layout was exactly one file per date
       assert(filesPerDate(plain).values.forall(_ === 1))
-      // upsert through the same salted path: replace the hot date's
-      // values, layout still ≤k files, content = recomputed expectation
-      val updates = spark.read.parquet(salted)
+      // upsert through the same commit: replace the hot date's values.
+      // Every hot-date row comes from `updates`, read back from ≤mapTasks
+      // files, so the rewrite stays within mapTasks files
+      val updates = spark.read.parquet(split)
         .filter(col("date") === lit("2024-03-01"))
         .withColumn("avg_value", col("avg_value") * lit(2.0))
-      val nUp = Pipeline.upsert(spark, updates, salted)
+      val nUp = Pipeline.upsert(spark, updates, split)
       assert(nUp === 64L)
-      assert(filesPerDate(salted)("date=2024-03-01") <= k)
+      assert(filesPerDate(split)("date=2024-03-01") <= mapTasks)
       val doubled = snapshot(plain).map {
         case (d, g, av, n) if d == "2024-03-01" => (d, g, av * 2.0, n)
         case row => row
       }.sorted
-      assert(snapshot(salted) === doubled)
+      assert(snapshot(split) === doubled)
     } finally {
       prev match {
-        case Some(v) => sys.props("graft.writeSalts") = v
-        case None => sys.props.remove("graft.writeSalts"): Unit
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
       }
+    }
+  }
+
+  test("a sink commit leaves the session's partitionOverwriteMode alone") {
+    // The overwrite mode is a per-write option, never session conf: a
+    // set/restore of the shared conf races every other writer on the
+    // session (the streaming sink upserts from its own thread). A UDF in
+    // the source parks the write job mid-flight while this thread reads
+    // the session conf.
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    assert(before.equalsIgnoreCase("static"))
+    PipelineSpec.Gate.reset()
+    val park = udf { (v: Double) => PipelineSpec.Gate.pass(); v }
+    val src = events(Seq(("2024-04-01 01:00:00", "a", 1.0),
+      ("2024-04-02 01:00:00", "b", 2.0))).withColumn("value", park(col("value")))
+    val sink = Files.createTempDirectory("graft_conf").toString + "/t"
+    val loaded = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val writer = new Thread(() => loaded.set(Pipeline.runIncremental(spark, src,
+      "zone", sink, Date.valueOf("2024-04-03"), overwritePartitions = true)))
+    writer.start()
+    try {
+      assert(PipelineSpec.Gate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the write job never reached the UDF")
+      assert(spark.conf.get(key) === before)
+    } finally PipelineSpec.Gate.release.countDown()
+    writer.join(60000)
+    assert(loaded.get === 2L)
+    assert(spark.conf.get(key) === before)
+  }
+
+  test("compact refuses a partitioned table root and leaves it untouched") {
+    val sink = Files.createTempDirectory("graft_compact_root").toString + "/t"
+    Pipeline.runIncremental(spark, events(Seq(("2024-05-01 01:00:00", "a", 1.0),
+      ("2024-05-02 01:00:00", "b", 2.0))), "zone", sink, Date.valueOf("2024-05-03"))
+    val rows = spark.read.parquet(sink).collect().map(_.toString).sorted.toSeq
+    val e = intercept[IllegalArgumentException](Pipeline.compact(spark, sink, 100L))
+    assert(e.getMessage.contains("partitioned table root"), e.getMessage)
+    // the root keeps its date directories, so the watermark still reads
+    // the newest loaded date
+    assert(Pipeline.watermark(spark, sink) === Some(Date.valueOf("2024-05-02")))
+    assert(spark.read.parquet(sink).collect().map(_.toString).sorted.toSeq === rows)
+    // one leaf partition is a flat directory: compacting it still works
+    assert(Pipeline.compact(spark, s"$sink/date=2024-05-01", 100L) === 1)
+    assert(Pipeline.watermark(spark, sink) === Some(Date.valueOf("2024-05-02")))
+    assert(spark.read.parquet(sink).collect().map(_.toString).sorted.toSeq === rows)
+  }
+}
+
+object PipelineSpec {
+  /** Parks the first caller inside a running Spark task until the test
+    * thread releases it (local mode: tasks share the test JVM). */
+  object Gate {
+    @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var release = new java.util.concurrent.CountDownLatch(1)
+    private val first = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def reset(): Unit = {
+      entered = new java.util.concurrent.CountDownLatch(1)
+      release = new java.util.concurrent.CountDownLatch(1)
+      first.set(false)
+    }
+    def pass(): Unit = if (first.compareAndSet(false, true)) {
+      entered.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
     }
   }
 }
