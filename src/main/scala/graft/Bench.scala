@@ -7,7 +7,12 @@ package graft
   * `.count()` would let Catalyst prune away projected columns and
   * under-measure. A generic warm-up (parquet scan + shuffle agg + sort)
   * runs first so the first timed query doesn't absorb JIT/codegen
-  * startup. */
+  * startup.
+  *
+  * The run reports raw times and plain host readings (heap, steal) and
+  * passes no verdict on them: whether a timing counts is decided by
+  * interleaved runs, `perfbench/run.py` pairs or `graft.QTimer`
+  * medians. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = graft.util.Config.sfDir
@@ -43,50 +48,9 @@ object Bench {
     val warmSec = (System.nanoTime() - tw0) / 1e9
     val warmed = warmTimes.size
 
-    // ---- contention sentinel (VERDICT r9 item 5): a fixed pure-CPU
-    // probe (range sum, no IO, no shuffle) timed at intervals through
-    // the run. The work is identical each sample, so the max/min spread
-    // certifies quiet-box validity from the artifact alone — r9's three
-    // closing runs spread 203-394 s with different queries slow each
-    // time and only prose to attribute it to box contention.
-    def sentinelProbe(): Double = {
-      val t0 = System.nanoTime()
-      // 2^26 rows (~0.3 s at local[32]): the earlier 2^24 probe ran
-      // ~70 ms, small enough that per-task scheduling jitter alone
-      // pushed checkpoint ratios past 2 on an otherwise healthy run
-      spark.range(1L << 26).selectExpr("sum(id * 3 + 1) as s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // median-of-3 per checkpoint (VERDICT r10 item 1): a single probe
-    // made the spread ambiguous — one GC-adjacent sample pushed max/min
-    // to ~3 on a healthy box. The median of 3 back-to-back probes is
-    // GC-robust while still catching sustained external load; raw
-    // samples stay in the full JSON for forensics (4 per checkpoint:
-    // the discarded re-warm first).
-    //
-    // The FIRST probe after ~24 queries of other work is a RE-WARM
-    // TRANSIENT, not a load reading: it re-enters evicted codegen/JIT/
-    // scheduler state and reads 3-5x the floor on a 0.1%-steal box
-    // (r12 run-2 raw forensics: first-of-3 = 0.23-0.40 s at EVERY
-    // checkpoint while seconds/thirds sat at 0.07-0.09; three adjacent
-    // checkpoints whose SECOND sample hadn't settled either pushed
-    // their medians to 0.17 and flunked the fastest run ever recorded).
-    // So each checkpoint discards one re-warm probe, then medians the
-    // next three — the same reasoning as the pre-run GC+3-probe settle.
-    val sentinelRaw = scala.collection.mutable.ArrayBuffer[Double]()
-    def sentinelOnce(): Double = {
-      sentinelRaw += sentinelProbe() // discarded re-warm (kept in raw)
-      val three = Seq(sentinelProbe(), sentinelProbe(), sentinelProbe())
-      sentinelRaw ++= three
-      three.sorted.apply(1)
-    }
-    // CPU-steal census (/proc/stat col 8): the sentinel SPREAD only
-    // catches VARIABLE load — steady host-level contention slows every
-    // checkpoint equally and reads as a clean spread (observed: a 1.6×
-    // slower run with spread 1.32). Steal time is the VM's direct
-    // measure of cycles the host gave elsewhere; (-1, -1) when
-    // unreadable, and the verdict then falls back to spread-only.
+    // steal_pct (/proc/stat col 8) over the timed pass: the host's own
+    // count of cycles it gave elsewhere, recorded as a plain reading;
+    // (-1, -1) when unreadable
     def stealRead(): (Long, Long) = try {
       val l = scala.io.Source.fromFile("/proc/stat").getLines().next()
       val f = l.trim.split("\\s+").drop(1).map(_.toLong)
@@ -96,28 +60,13 @@ object Bench {
       // guest time and understates steal% (ADVICE r11)
       (f(7), f.take(8).sum)
     } catch { case _: Throwable => (-1L, -1L) }
-    // settle before the FIRST checkpoint: warm-phase GC/cleanup debt
-    // otherwise lands in it (observed: first median 2.3 s / 0.19 s vs a
-    // 0.07 s steady floor — a fake-contended verdict on a healthy run).
-    // One explicit GC drains the debt deterministically, then THREE
-    // discarded probes re-warm the probe's own codegen path.
+    // drain warm-pass GC debt so it does not land in the first timed query
     System.gc()
-    (1 to 3).foreach(_ => sentinelProbe())
-    // steal window opens AFTER the settle phase (ADVICE r11): the GC +
-    // discarded probes are not part of the measured run
     val steal0 = stealRead()
-    val sentinels = scala.collection.mutable.ArrayBuffer[Double]()
-    sentinels += sentinelOnce()
 
     // a query that throws records -1 (failure sentinel), never a
     // normal-looking wall-clock time
-    val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      // every 24 queries (~10 checkpoints/run): a 60-query cadence left
-      // gaps wide enough to swallow a whole load burst — one observed
-      // spike slowed the contiguous q_tpch block 10-45× while the
-      // checkpoints on either side read 0.10/0.17 and the spread
-      // squeaked under 2 (run-6 forensics, BASELINE.md r11)
-      if (i % 24 == 23) sentinels += sentinelOnce()
+    val results = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -280,71 +229,12 @@ object Bench {
         }
       })
     org.apache.hadoop.fs.FileUtil.fullyDelete(wroot.toFile): Unit
-    sentinels += sentinelOnce()
+    val steal1 = stealRead()
+    val stealPct =
+      if (steal0._1 < 0 || steal1._1 < 0 || steal1._2 <= steal0._2) -1.0
+      else 100.0 * (steal1._1 - steal0._1) / (steal1._2 - steal0._2)
 
     val all = results ++ writeResults
-
-    // ---- per-query suspect-head guard (VERDICT r12 item 2): the
-    // `certified` tier bounds CHECKPOINT sentinel medians, not per-query
-    // heads — and the first certified artifact demonstrated the hole: a
-    // host burst confined between two checkpoints (~24 queries apart)
-    // inflated q_hamming_hist to 19.4 s inside a certified run whose
-    // same-binary driver twin read 2.8 s. So every entry is also checked
-    // against its TRAILING MEDIAN across the bench artifacts in the
-    // working dir (every `bench*.json` recorded at the same sf AND the
-    // same core count — a time taken at another local[n] says nothing
-    // about this run): an entry reading
-    // >2.5× that median (+0.5 s absolute guard — job-overhead jitter on
-    // sub-second entries is not a burst) is a suspect, re-probed
-    // interleaved median-of-3 at run end, and the artifact publishes
-    // BOTH totals — `value` (raw) and `value_adjusted` (suspects
-    // replaced by their re-probe medians). BASELINE.md headlines
-    // adjusted certified totals. pipeline_w_*/pipeline_s_* entries are
-    // flagged but not re-probed (their bodies mutate freshly-staged
-    // state); they keep their raw reading in both totals.
-    def refQueries(path: String): Map[String, Double] = try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File(path))
-      val q = node.get("queries")
-      def field(k: String) = Option(node.get(k)).map(_.asText)
-      if (q == null || !field("sf").contains(sfDir) ||
-        !field("cpus").contains(cpus.toString)) Map.empty
-      else {
-        val b = Map.newBuilder[String, Double]
-        val it = q.properties().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          val v = e.getValue.asDouble(-1)
-          if (v >= 0) b += e.getKey -> v
-        }
-        b.result()
-      }
-    } catch { case _: Throwable => Map.empty }
-    val refMaps = Option(new java.io.File(".").listFiles).toSeq.flatten
-      .map(_.getName).filter(n => n.startsWith("bench") && n.endsWith(".json"))
-      .map(refQueries).filter(_.nonEmpty)
-    def trailingMed(n: String): Option[Double] = {
-      val vs = refMaps.flatMap(_.get(n)).sorted
-      if (vs.isEmpty) None else Some(vs(vs.size / 2))
-    }
-    val suspects = all.toSeq.collect {
-      case (n, t) if t >= 0 && trailingMed(n).exists(r => t > 2.5 * r + 0.5) => n
-    }.sorted
-    val reprobable = suspects.filter(SparkEntry.queries.contains)
-    val reprobeTimes = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    for (_ <- 1 to 3; n <- reprobable) {
-      val t0 = System.nanoTime()
-      val ok = try {
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save(); true
-      } catch { case _: Throwable => false }
-      if (ok) reprobeTimes(n) :+= (System.nanoTime() - t0) / 1e9
-    }
-    val reprobed = reprobable.flatMap { n =>
-      val v = reprobeTimes(n).sorted
-      if (v.isEmpty) None else Some(n -> v(v.size / 2))
-    }.toMap
 
     // 4-decimal times (0.1 ms resolution — below run-to-run noise by
     // >100×): full-precision doubles tripled the line length for digits
@@ -360,15 +250,6 @@ object Bench {
     // excluding it here would silently shrink the metric round-over-
     // round. The breakdown fields keep the two costs separable.
     val total = all.collect { case (_, v) if v >= 0 => v }.sum + warmSec
-    // adjusted total: each re-probed suspect contributes its re-probe
-    // median INSTEAD of its in-run reading (honest replacement — if the
-    // re-probe reads slower, the adjusted total goes UP)
-    val totalAdj = total - reprobed.map { case (n, m) => all(n) - m }.sum
-    val suspectJson = suspects.map { n =>
-      s"\"" + n + "\":{\"raw\":" + f4(all(n)) +
-        ",\"ref_med\":" + f4(trailingMed(n).getOrElse(-1.0)) +
-        ",\"reprobe_med\":" + f4(reprobed.getOrElse(n, -1.0)) + "}"
-    }.mkString("{", ",", "}")
     val failedJson = failed.mkString("[", ",", "]")
     val warmJson = warmTimes.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
       .mkString("{", ",", "}")
@@ -387,63 +268,15 @@ object Bench {
       (s.map { case (mx, rem) => mx - rem }.sum / 1e9,
         s.map(_._1).sum / 1e9)
     }
-    // sentinel spread: max/min of the checkpoint MEDIANS (each already
-    // GC-robust via median-of-3). <2 on a quiet box; a loaded box shows
-    // up directly here.
-    val sentSpread = sentinels.max / math.max(sentinels.min, 1e-9)
-    val sentJson = sentinels.map(f4).mkString("[", ",", "]")
-    // self-certifying quiet verdict (VERDICT r10 item 1): spread of the
-    // checkpoint medians < 2, no monotone ramp (strictly increasing
-    // medians with ≥1.5× total growth = load building through the run —
-    // the r10 close-run-1 signature, 0.17→0.57), AND run-window CPU
-    // steal < 5% (steady host contention is invisible to the spread).
-    val steal1 = stealRead()
-    val stealPct =
-      if (steal0._1 < 0 || steal1._1 < 0 || steal1._2 <= steal0._2) -1.0
-      else 100.0 * (steal1._1 - steal0._1) / (steal1._2 - steal0._2)
-    val sentRamp = sentinels.size >= 3 &&
-      sentinels.indices.tail.forall(i => sentinels(i) > sentinels(i - 1)) &&
-      sentSpread >= 1.5
-    // with ~10 checkpoints a raw max/min spread over-penalizes a single
-    // 1 s transient (observed: the round's fastest, 0.2%-steal run read
-    // spread 2.98 off ONE elevated checkpoint while every query head
-    // was healthy). Contention that actually distorts totals is
-    // SUSTAINED or LARGE, so the verdict asks for: no two CONSECUTIVE
-    // checkpoint medians above 1.5× the run median, no single
-    // checkpoint above 2.5× it (calibrated between the healthy 2.25×
-    // transient of the round's cleanest run and the 3.1-3.2× bursts of
-    // a visibly loaded one), no monotone ramp, and <5% CPU steal. The
-    // raw spread stays reported for forensics.
-    val runMed = sentinels.sorted.apply(sentinels.size / 2)
-    // ratio tests carry a 50 ms ABSOLUTE guard: with the healthy floor
-    // at ~0.09 s, a pure ratio flips on scheduling jitter smaller than
-    // the probe's own same-box noise band; real contention reads 0.3 s+
-    // (3-30× floors in every loaded run observed), far above both terms
-    val hot = sentinels.map(_ > 1.5 * runMed + 0.05)
-    val sustainedHot = hot.indices.tail.exists(i => hot(i) && hot(i - 1))
-    val quiet = !sentRamp && !sustainedHot &&
-      sentinels.max < 2.5 * runMed + 0.05 &&
-      stealPct < 5.0 // an unreadable -1 falls back to spread-only
-    // two-tier verdict (VERDICT r11 item 3): `quiet` certifies "not
-    // badly contended" — necessary, not headline-grade (a 4.5%-steal
-    // run passed it 22% above the round's cleanest total). `certified`
-    // is the stricter tier the headline comparison requires: a READABLE
-    // steal under 2% AND every checkpoint median within 1.3× of the run
-    // median. BASELINE.md compares certified totals only.
-    val certified = quiet && stealPct >= 0 && stealPct < 2.0 &&
-      sentinels.forall(_ <= 1.3 * runMed + 0.05)
     val streamSec = all.getOrElse("pipeline_s_upsert", -1.0)
     val streamRps =
       if (streamSec > 0) streamRows / streamSec else -1.0
     val json =
       s"""{"metric":"total","value":${f4(total)},"unit":"sec","queries":$qs,""" +
-        s""""value_adjusted":${f4(totalAdj)},"suspect_heads":$suspectJson,""" +
         s""""failed":$failedJson,"sf":"$sfDir","cpus":$cpus,"pipeline_warm_sec":${f4(warmSec)},""" +
         s""""warmed_intermediates":$warmed,"warm_breakdown":$warmJson,""" +
         s""""stream_rows":$streamRows,"stream_rows_per_sec":${f4(streamRps)},""" +
-        s""""sentinel_sec":$sentJson,"sentinel_spread":${f4(sentSpread)},""" +
-        s""""sentinel_raw":${sentinelRaw.map(f4).mkString("[", ",", "]")},""" +
-        s""""steal_pct":${f4(stealPct)},"quiet":$quiet,"certified":$certified,""" +
+        s""""steal_pct":${f4(stealPct)},""" +
         s""""heap_gb":${f4(heapGb)},""" +
         s""""kernels_registered":$kernelsLive,""" +
         s""""spark_version":"${spark.version}",""" +
@@ -468,7 +301,6 @@ object Bench {
     val slowestFirst = all.toSeq.sortBy { case (_, v) => -v }
     val compactHead =
       s"""{"metric":"total","value":${f4(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,""" +
-        s""""value_adjusted":${f4(totalAdj)},"n_suspect_heads":${suspects.size},""" +
         s""""stream_rows_per_sec":${f4(streamRps)},""" +
         s""""n_queries":${all.size},"n_failed":${failed.size},""" +
         s""""failed":${failed.take(10).mkString("[", ",", "]")},""" +
@@ -476,9 +308,7 @@ object Bench {
         s""""warm_top":${warmTimes.sortBy(-_._2).take(4)
           .map { case (k, v) => s"\"" + k + "\":" + f4(v) }
           .mkString("{", ",", "}")},""" +
-        s""""sentinel_spread":${f4(sentSpread)},""" +
-        s""""sentinel_med":${f4(sentinels.sorted.apply(sentinels.size / 2))},""" +
-        s""""steal_pct":${f4(stealPct)},"quiet":$quiet,"certified":$certified,""" +
+        s""""steal_pct":${f4(stealPct)},""" +
         s""""heap_gb":${f4(heapGb)},"kernels_registered":$kernelsLive,""" +
         s""""spark_version":"${spark.version}","full_map":"$out","""
     val budget = 1700

@@ -564,12 +564,17 @@ object Pipeline {
     * untouched.
     *
     * Commit protocol (each step is a single directory rename):
-    *  1. write the compacted copy to `<dir>.compact_staging`
+    *  1. write the compacted copy to `<parent>/.<leaf>.compact_staging`
     *     (beside, never inside, the target);
     *  2. verify the staged row count;
-    *  3. rename live → `<dir>.compact_old` (retire);
+    *  3. rename live → `<parent>/.<leaf>.compact_old` (retire);
     *  4. rename staging → live (publish);
     *  5. delete the retiree.
+    * Both names are hidden (leading `.`): compacting one leaf partition
+    * of a live sink stages inside the sink root, where Spark's file
+    * listing and [[watermark]] skip hidden entries, so neither a scan
+    * nor the watermark sees the staged or retired copy, mid-run or
+    * after a crash.
     *
     * Entry first recovers any state a previous crashed run left, in
     * reverse swap order: a missing live dir beside a `.compact_old`
@@ -586,8 +591,9 @@ object Pipeline {
               targetRowsPerFile: Long): Int = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val base = dir.stripSuffix("/")
-    val staging = s"$base.compact_staging"
-    val retired = s"$base.compact_old"
+    val live = Paths.get(base)
+    val staging = live.resolveSibling(s".${live.getFileName}.compact_staging").toString
+    val retired = live.resolveSibling(s".${live.getFileName}.compact_old").toString
     // crash recovery from a previous interrupted run (see scaladoc)
     if (!Files.exists(Paths.get(base)) && Files.exists(Paths.get(retired)))
       Files.move(Paths.get(retired), Paths.get(base),

@@ -1625,7 +1625,7 @@ object TextDedup {
     * Scale: probe expansion is a bounded ×15 of |docs| narrow rows;
     * the join shuffles (si, segment) keys whose selectivity is the
     * 13-char content (sf0.1: 6,174 candidates from 12.5M possible
-    * pairs, 2000× reduction; ScaleProbe sub-linear); verify is O(40²)
+    * pairs, 2000× reduction; sub-linear in scale); verify is O(40²)
     * per candidate. At 100 TB, hot boilerplate segments get the
     * winnow-style df-cap (drop segments occurring in > D docs from
     * candidate generation and route those docs through the prefix

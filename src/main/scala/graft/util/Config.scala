@@ -3,25 +3,23 @@ package graft.util
 /** The engine's environment-variable config surface, in one documented
   * place — the neutral analog of the reference's `.env` keys
   * (`scripts/energy_etl.py:13-14`, GCP project/dataset via dotenv).
-  * Every tool main (`Bench`, `Verify`, `QTimer`, `JobProf`,
-  * `ScaleProbe`, `Explain`) and the test session build their
-  * SparkSession through [[Session]], which reads through here, so the
-  * knob inventory and its defaults can't drift between tools.
+  * Every tool main (`Bench`, `Verify`, `QTimer`, `JobProf`, `Explain`)
+  * and the test session build their SparkSession through [[Session]],
+  * which reads through here, so the knob inventory and its defaults
+  * can't drift between tools. Session values that only ever had one
+  * setting in use are constants, marked as such below.
   *
   * | Variable | Meaning | Default |
   * |---|---|---|
   * | SPARK_GRAFT_SF_DIR    | fixture dir (parquet tables)        | /root/testdata/sf0.1 |
   * | SPARK_GRAFT_CPUS      | local[n] cores = shuffle partitions | the box's core count (the test session is fixed at 4) |
-  * | SPARK_GRAFT_AQE       | adaptive execution on/off (every [[Session]]) | true |
+  * | (constant) [[aqe]]    | adaptive execution (every [[Session]]) | true |
   * | SPARK_GRAFT_BENCH_OUT | full bench-JSON output path         | bench_out.json |
-  * | SPARK_GRAFT_PROBE_OPS | comma list overriding ScaleProbe's flagship set | (flagships) |
-  * | SPARK_GRAFT_PROBE_STOPWORDS | ScaleProbe: replicate documents with the SAME token space (posting lists / group sizes grow xN — the stopword-heavy shape) instead of replica-disjoint tokens | false |
-  * | SPARK_GRAFT_PROBE_DISK_MEMO | ScaleProbe: keep the FixtureCache ON against a throwaway root — the reps then measure the bucketed-cache CONSUMER read path | false |
   * | SPARK_GRAFT_DISK_MEMO | cross-session parquet cache for heavy deterministic fixture intermediates ([[FixtureCache]]) | true |
   * | SPARK_GRAFT_CACHE_DIR | FixtureCache root | $tmpdir/graft_fixture_cache |
   * | SPARK_GRAFT_CACHE_BUCKETS | bucket count for FixtureCache bucketed publishes (caps the cached side's scan parallelism — see [[FixtureCache]] sizing rule) | 8 |
-  * | SPARK_GRAFT_CODEGEN_CACHE | spark.sql.codegen.cache.maxEntries (sized to the declared query surface) | 4000 |
-  * | SPARK_GRAFT_CTE_LOCAL_ANCHOR | recursive-CTE LocalRelation fast-path anchor-row ceiling | 1000000 |
+  * | (constant) [[codegenCacheEntries]] | spark.sql.codegen.cache.maxEntries (sized to the declared query surface) | 4000 |
+  * | (constant) [[cteLocalAnchorRows]] | recursive-CTE LocalRelation fast-path anchor-row ceiling | 1000000 |
   */
 object Config {
   def sfDir: String =
@@ -32,17 +30,12 @@ object Config {
   def cpus(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
 
-  def aqe: String = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
+  /** Adaptive execution: broadcast demotion and skew splitting (its
+    * partition coalescing is off, see [[Session]]). */
+  val aqe: String = "true"
 
   def benchOut: String =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-
-  def probeOps: Option[Seq[String]] =
-    sys.env.get("SPARK_GRAFT_PROBE_OPS")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-
-  def probeStopwords: Boolean =
-    sys.env.get("SPARK_GRAFT_PROBE_STOPWORDS").exists(_.toBoolean)
 
   /** Bucket count for [[FixtureCache]] bucketed publishes. System
     * property first (tests flip it per-JVM), then env. The count is
@@ -65,15 +58,8 @@ object Config {
     * Production analog: any long-running driver serving a large query
     * corpus sizes this cache to its working set — the cost is a bounded
     * set of compiled classes on the driver heap, independent of data
-    * scale or core count. 4000 covers the full surface with headroom.
-    * Parsed + re-rendered so a malformed value fails HERE with a clear
-    * message, not as an opaque static-conf error at session build
-    * (ADVICE r13). */
-  def codegenCacheEntries: String =
-    sys.props.get("graft.codegenCacheEntries")
-      .orElse(sys.env.get("SPARK_GRAFT_CODEGEN_CACHE"))
-      .map(_.trim.toInt.toString)
-      .getOrElse("4000")
+    * scale or core count. 4000 covers the full surface with headroom. */
+  val codegenCacheEntries: String = "4000"
 
   /** Anchor-row ceiling for Spark's recursive-CTE LocalRelation fast
     * path (`spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation`,
@@ -88,10 +74,6 @@ object Config {
     * columns, watermark-class state; an anchor past the ceiling falls
     * back to the distributed loop unchanged, so production-scale
     * recursions are untouched. Core-count- and data-scale-independent
-    * (same class of knob as the codegen cache above). */
-  def cteLocalAnchorRows: String =
-    sys.props.get("graft.cteLocalAnchorRows")
-      .orElse(sys.env.get("SPARK_GRAFT_CTE_LOCAL_ANCHOR"))
-      .map(_.trim.toInt.toString)
-      .getOrElse("1000000")
+    * (same class of value as the codegen cache above). */
+  val cteLocalAnchorRows: String = "1000000"
 }

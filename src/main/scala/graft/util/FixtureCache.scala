@@ -50,8 +50,7 @@ import org.apache.spark.sql.functions.col
   * `graft.diskMemo=false` if they need cheap construction.
   *
   * Knobs: `SPARK_GRAFT_DISK_MEMO=false` (env) or `graft.diskMemo=false`
-  * (system property — set by ScaleProbe, whose synthesized throwaway
-  * dirs would only pollute the cache) disables it;
+  * (system property) disables it;
   * `SPARK_GRAFT_CACHE_DIR` relocates the root (default
   * `$java.io.tmpdir/graft_fixture_cache`);
   * `SPARK_GRAFT_CACHE_BUCKETS` / `graft.cacheBuckets` sets the bucket

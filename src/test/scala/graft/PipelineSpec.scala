@@ -333,7 +333,8 @@ class PipelineSpec extends SparkSpec {
       }),
       ("compact crashed between its renames (live dir retired)", None, { s =>
         load(s, "2024-01-01" -> "SE1")
-        Files.move(java.nio.file.Paths.get(s), java.nio.file.Paths.get(s + ".compact_old")): Unit
+        Files.move(java.nio.file.Paths.get(s),
+          java.nio.file.Paths.get(PipelineSpec.compactSibling(s, ".compact_old"))): Unit
       }))
     states.foreach { case (state, want, make) =>
       val sink = fresh()
@@ -481,8 +482,8 @@ class PipelineSpec extends SparkSpec {
     assert(after === 2, s"expected 2 files after compaction, got $after")
     assert(spark.read.parquet(dir).orderBy("k")
       .as[(Long, String)].collect().toSeq === expected)
-    assert(!new java.io.File(dir.stripSuffix("/") + ".compact_staging").exists())
-    assert(!new java.io.File(dir.stripSuffix("/") + ".compact_old").exists())
+    assert(!new java.io.File(PipelineSpec.compactSibling(dir, ".compact_staging")).exists())
+    assert(!new java.io.File(PipelineSpec.compactSibling(dir, ".compact_old")).exists())
   }
 
   test("compact recovers every crash point of the rename-swap commit") {
@@ -502,7 +503,7 @@ class PipelineSpec extends SparkSpec {
     // crash BEFORE the swap: a partial staging dir is left beside the
     // live table → next run drops it and completes
     val d1 = mkTable(); val exp1 = rows(d1)
-    val stg = d1 + ".compact_staging"
+    val stg = PipelineSpec.compactSibling(d1, ".compact_staging")
     new java.io.File(stg).mkdirs()
     NF.writeString(Paths.get(stg, "part-corrupt.parquet"), "not parquet")
     assert(Pipeline.compact(spark, d1, targetRowsPerFile = 100) === 1)
@@ -512,22 +513,51 @@ class PipelineSpec extends SparkSpec {
     // crash BETWEEN the two renames: live dir is missing, the complete
     // old layout sits at .compact_old → next run rolls it back first
     val d2 = mkTable(); val exp2 = rows(d2)
-    NF.move(Paths.get(d2), Paths.get(d2 + ".compact_old"),
+    NF.move(Paths.get(d2), Paths.get(PipelineSpec.compactSibling(d2, ".compact_old")),
       StandardCopyOption.ATOMIC_MOVE)
     assert(!new java.io.File(d2).exists())
     assert(Pipeline.compact(spark, d2, targetRowsPerFile = 100) === 1)
     assert(rows(d2) === exp2)
-    assert(!new java.io.File(d2 + ".compact_old").exists())
+    assert(!new java.io.File(PipelineSpec.compactSibling(d2, ".compact_old")).exists())
 
     // crash AFTER the publish rename but before cleanup: a retired old
     // layout sits beside the (already-new) live dir → dropped on entry
     val d3 = mkTable(); val exp3 = rows(d3)
-    new java.io.File(d3 + ".compact_old").mkdirs()
+    val old3 = PipelineSpec.compactSibling(d3, ".compact_old")
+    new java.io.File(old3).mkdirs()
     Seq((999L, "stale")).toDF("k", "v")
-      .write.mode("overwrite").parquet(d3 + ".compact_old")
+      .write.mode("overwrite").parquet(old3)
     assert(Pipeline.compact(spark, d3, targetRowsPerFile = 100) === 1)
     assert(rows(d3) === exp3)
-    assert(!new java.io.File(d3 + ".compact_old").exists())
+    assert(!new java.io.File(old3).exists())
+  }
+
+  test("a leaf compaction that crashes inside a loaded sink is invisible " +
+    "to the watermark and to sink reads") {
+    val sink = Files.createTempDirectory("graft_compact_leaf").toString + "/t"
+    Pipeline.runIncremental(spark, events(Seq(("2024-06-01 01:00:00", "SE1", 1.0),
+      ("2024-06-01 02:00:00", "SE2", 2.0), ("2024-06-02 01:00:00", "SE1", 3.0))),
+      "zone", sink, Date.valueOf("2024-06-03")): Unit
+    def rows() = Pipeline.readDeduped(spark, sink).collect().map(_.toString).sorted.toSeq
+    def scanned() = Option(spark.read.parquet(sink).agg(max(col("date"))).first().getDate(0))
+    val live = rows()
+    val leaf = s"$sink/date=2024-06-01"
+    // the staging write's files land, then the run dies before the swap
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[PipelineSpec.CrashAfterCommit].getName)
+    try intercept[Exception](Pipeline.compact(spark, leaf, 100L))
+    finally spark.conf.unset(key)
+    val staged = new java.io.File(sink).listFiles().filter(_.getName.contains("compact_staging"))
+    assert(staged.exists(_.listFiles().exists(_.getName.endsWith(".parquet"))),
+      "the crash must leave a staged copy holding data")
+
+    assert(Pipeline.watermark(spark, sink) === scanned())
+    assert(scanned() === Some(Date.valueOf("2024-06-02")))
+    assert(rows() === live)
+    // the next run recovers and completes
+    assert(Pipeline.compact(spark, leaf, 100L) === 1)
+    assert(new java.io.File(sink).list().filter(_.contains("compact")).isEmpty)
+    assert(rows() === live)
   }
 
   test("deleteKeys: copy-on-write of matching partitions only, emptied " +
@@ -754,6 +784,24 @@ class PipelineSpec extends SparkSpec {
 }
 
 object PipelineSpec {
+  /** The hidden sibling under which `Pipeline.compact` stages or retires
+    * `dir`. */
+  def compactSibling(dir: String, suffix: String): String = {
+    val p = java.nio.file.Paths.get(dir)
+    p.resolveSibling(s".${p.getFileName}$suffix").toString
+  }
+
+  /** A parquet committer whose job commit publishes the files and then
+    * throws: a write whose output lands before its process dies. */
+  class CrashAfterCommit(out: org.apache.hadoop.fs.Path,
+      ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+      extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+    override def commitJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+      super.commitJob(job)
+      throw new java.io.IOException(s"injected crash after committing $out")
+    }
+  }
+
   /** Parks the first caller inside a running Spark task until the test
     * thread releases it (local mode: tasks share the test JVM). */
   object Gate {

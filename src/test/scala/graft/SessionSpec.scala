@@ -1,17 +1,17 @@
 package graft
 
-import graft.util.Config
-
 /** The test session is the bench session: a setting that differs
-  * between them would let plan pins pass on plans Bench never times. */
+  * between them would let plan pins pass on plans Bench never times.
+  * Values are literals, so changing one of Config's constants fails
+  * here. */
 class SessionSpec extends SparkSpec {
   test("the test session runs the bench session config") {
     val conf = spark.conf
     assert(conf.get("spark.sql.adaptive.coalescePartitions.enabled") === "false")
-    assert(conf.get("spark.sql.adaptive.enabled") === Config.aqe)
-    assert(conf.get("spark.sql.codegen.cache.maxEntries") === Config.codegenCacheEntries)
+    assert(conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") === "4000")
     assert(conf.get("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation") ===
-      Config.cteLocalAnchorRows)
+      "1000000")
     assert(conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") === "false")
     assert(conf.get("spark.sql.session.timeZone") === "UTC")
     assert(conf.get("spark.sql.shuffle.partitions") === "4")
