@@ -903,7 +903,7 @@ object Relational {
 
   /** Error-safe expression surface — Spark's try_* family (try_cast /
     * try_divide / try_add), the row-level complement of the source-level
-    * quarantine in sources/Sources: at 100 TB a single malformed value
+    * skip in Pipeline.fromJsonPayloads: at 100 TB a single malformed value
     * must yield NULL (and a count in the census), never a failed 6-hour
     * job or a silently-wrong ANSI-off wraparound. Bad rows are
     * synthesized DETERMINISTICALLY (an 'x' prefix on event_id ≡ 0 mod 7;

@@ -20,14 +20,14 @@ final case class HttpFetch(
   * dead-letter audit, which the reference only prints).
   *
   * JDK-only transport (`java.net.HttpURLConnection`) — no added
-  * dependencies. Pair with [[Sources.jsonWithQuarantine]] to parse the
-  * fetched bodies with malformed-payload quarantine, completing the
-  * fetch → parse → quarantine pipeline.
+  * dependencies. [[graft.etl.Pipeline.fromJsonPayloads]] parses the
+  * fetched bodies, skipping malformed ones as the reference does
+  * (energy_etl.py:64-69).
   */
 object HttpSource {
 
   /** GET one URL with bounded retries; never throws. */
-  private[sources] def fetchOne(
+  private[graft] def fetchOne(
       url: String, maxAttempts: Int, delayMs: Long,
       sleep: Long => Unit): HttpFetch = {
     var attempt = 0

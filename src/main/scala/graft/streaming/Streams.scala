@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming variants of the incremental inventory
   * (SURVEY.md §2.10). The reference is a repeated-batch incremental
@@ -35,15 +33,6 @@ object Streams {
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n"))
       .select(col("window.start").as("day_start"), col("event_type"),
-        col("avg_value"), col("n"))
-
-  /** Sliding-window mean (6h window / 3h slide). */
-  def slidingAvg(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "6 hours", "3 hours"), col("event_type"))
-      .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"),
         col("avg_value"), col("n"))
 
   /** Session windows per user with a 30-minute gap. */
@@ -256,43 +245,6 @@ object Streams {
       }
   }
 
-  /** The same running per-user stats on the Spark 4 arbitrary-state API
-    * (`transformWithState` + [[StatefulProcessor]] with a named typed
-    * ValueState) — the modern replacement for flatMapGroupsWithState:
-    * named state variables, TTL, timers, and state schema evolution.
-    * Requires the RocksDB state store provider (the new API's runtime
-    * requirement); StreamingSpec pins its output equal to
-    * [[runningUserStats]]'s batch-for-batch. */
-  def runningUserStatsTws(events: Dataset[Event]): Dataset[UserStat] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new RunningUserStatsProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Event-time-TIMER session finalizer — the piece of the Spark 4
-    * state API the running-stats twin doesn't exercise: per-user open
-    * sessions close either when a later event PROVES the gap (emitted
-    * inline) or when the WATERMARK passes last-event + gap with no
-    * successor — an event-time timer registered at that instant fires
-    * [[SessionFinalizeProcessor.handleExpiredTimer]], emitting the
-    * finalized session and clearing state. Exactly one live timer per
-    * key (re-registered as the session extends), so timer state is
-    * O(|open sessions|) — the session_window operator's semantics,
-    * hand-held state done right.
-    *
-    * Scale: state shards by user_id; the watermark bounds both the
-    * value state (sessions finalize) and the timer registry. */
-  def sessionFinalize(events: Dataset[Event],
-      gapMs: Long = 30L * 60 * 1000): Dataset[FinalizedSession] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", "0 seconds")
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionFinalizeProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** Streaming CDC compaction — the continuous twin of the batch
     * q_cdc_merge operator: per-key latest-wins state ((ts, event_id)
     * max) with per-key op count, emitting the CURRENT snapshot row for
@@ -363,26 +315,6 @@ object Streams {
   }
 }
 
-/** StatefulProcessor for [[Streams.runningUserStatsTws]]: one ValueState
-  * cell per user holding (n, sum); rows replay in event_id order within
-  * a batch (same determinism rule as the flatMapGroupsWithState twin). */
-class RunningUserStatsProcessor extends StatefulProcessor[Long, Event, UserStat] {
-  @transient private var st: ValueState[UserState] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[UserState]("running",
-      Encoders.product[UserState], TTLConfig.NONE)
-  override def handleInputRows(key: Long, rows: Iterator[Event],
-      timerValues: TimerValues): Iterator[UserStat] = {
-    var cur = Option(st.get()).getOrElse(UserState(0L, 0.0))
-    val out = rows.toSeq.sortBy(_.event_id).map { e =>
-      cur = UserState(cur.n + 1, cur.sum + e.value)
-      UserStat(key, e.event_id, cur.n, cur.sum / cur.n)
-    }
-    st.update(cur)
-    out.iterator
-  }
-}
-
 object IncrementalTopK {
   /** Incremental top-k similarity maintenance (cf. PAPERS.md: top-k
     * similarity search in interactive sessions, EDBT 2020 — public):
@@ -431,58 +363,4 @@ case class UserStat(user_id: Long, event_id: Long, running_n: Long,
 case class TouchState(ts: java.sql.Timestamp, eventId: Long, channel: String)
 case class AttributedPurchase(event_id: Long, user_id: Long,
     channel: String, value: Double)
-case class OpenSession(n: Long, sum: Double, openMs: Long, closeMs: Long)
-case class FinalizedSession(user_id: Long, n_events: Long, total: Double,
-    open_ms: Long, close_ms: Long)
 
-/** StatefulProcessor for [[Streams.sessionFinalize]]: one ValueState
-  * cell per user (the open session) plus exactly ONE live event-time
-  * timer at close + gap. Within a batch rows replay in (ts, event_id)
-  * order; a gap proven inside the batch finalizes inline, the trailing
-  * open session waits for its timer (watermark-driven). */
-class SessionFinalizeProcessor(gapMs: Long)
-    extends StatefulProcessor[Long, Event, FinalizedSession] {
-  @transient private var st: ValueState[OpenSession] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[OpenSession]("open",
-      Encoders.product[OpenSession], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Event],
-      timerValues: TimerValues): Iterator[FinalizedSession] = {
-    val ordered = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-    val out = Seq.newBuilder[FinalizedSession]
-    var cur = Option(st.get())
-    ordered.foreach { e =>
-      val t = e.ts.getTime
-      cur match {
-        case Some(c) if t - c.closeMs > gapMs =>
-          // the gap is proven by this event — finalize without a timer
-          out += FinalizedSession(key, c.n, c.sum, c.openMs, c.closeMs)
-          cur = Some(OpenSession(1L, e.value, t, t))
-        case Some(c) =>
-          cur = Some(OpenSession(c.n + 1, c.sum + e.value,
-            math.min(c.openMs, t), math.max(c.closeMs, t)))
-        case None =>
-          cur = Some(OpenSession(1L, e.value, t, t))
-      }
-    }
-    cur.foreach { c =>
-      st.update(c)
-      // one live timer per key: re-arm at the (possibly extended) close
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(c.closeMs + gapMs)
-    }
-    out.result().iterator
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[FinalizedSession] = {
-    val c = st.get()
-    if (c == null) Iterator.empty
-    else {
-      st.clear()
-      Iterator.single(FinalizedSession(key, c.n, c.sum, c.openMs, c.closeMs))
-    }
-  }
-}

@@ -7,14 +7,15 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.{HttpSource, Sources}
+import graft.etl.Pipeline
+import graft.sources.HttpSource
 
 /** Drives the live HTTP JSON source end-to-end against a loopback
   * server: healthy pages, a transiently-failing endpoint that recovers
   * within the retry budget (the reference's energy_etl.py:61-78
   * contract), a permanently-dead endpoint that lands in quarantine
-  * instead of failing the job, and the fetch→parse pipeline with
-  * malformed-payload quarantine. */
+  * instead of failing the job, and the fetch→parse pipeline that skips
+  * malformed payloads (energy_etl.py:64-69). */
 class HttpSourceSpec extends SparkSpec {
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
@@ -38,6 +39,12 @@ class HttpSourceSpec extends SparkSpec {
       respond(ex, 503, "down"))
     server.createContext("/garbage", (ex: HttpExchange) =>
       respond(ex, 200, """not json at all"""))
+    server.createContext("/day", (ex: HttpExchange) =>
+      respond(ex, 200, """[{"ts":"2024-01-01T00:00:00Z","zone":"SE1","value":10.5},""" +
+        """{"ts":"2024-01-01T01:00:00Z","zone":"SE1","value":11.5}]"""))
+    server.createContext("/truncated", (ex: HttpExchange) =>
+      respond(ex, 200, """[{"ts":"2024-01-01T00:00:00Z","zone":"SE2","val"""))
+    server.createContext("/empty", (ex: HttpExchange) => respond(ex, 200, "[]"))
     server.start()
     try f(s"http://127.0.0.1:${server.getAddress.getPort}")
     finally server.stop(0)
@@ -158,20 +165,48 @@ class HttpSourceSpec extends SparkSpec {
     }
   }
 
-  test("fetch -> parse pipeline with malformed-payload quarantine") {
+  test("fetchOne sleeps delayMs after every failed attempt but the last") {
+    withServer { base =>
+      val slept = scala.collection.mutable.ArrayBuffer[Long]()
+      val ok = HttpSource.fetchOne(s"$base/ok1", 3, 5000L, slept += _)
+      assert((ok.status, ok.attempts) === ((200, 1)))
+      assert(slept.isEmpty)
+      // recovers on its 3rd attempt: two failures, two sleeps
+      val flaky = HttpSource.fetchOne(s"$base/flaky", 3, 5000L, slept += _)
+      assert((flaky.status, flaky.attempts) === ((200, 3)))
+      assert(slept.toSeq === Seq(5000L, 5000L))
+      // exhausts 3 attempts: no sleep after the final failure
+      slept.clear()
+      val dead = HttpSource.fetchOne(s"$base/dead", 3, 5000L, slept += _)
+      assert((dead.status, dead.attempts, dead.body) === ((503, 3, null)))
+      assert(dead.error === "HTTP 503")
+      assert(slept.toSeq === Seq(5000L, 5000L))
+    }
+  }
+
+  test("fetch over only dead URLs returns quarantine rows without throwing") {
+    withServer { base =>
+      val urls = Seq(s"$base/dead", s"$base/missing")
+      val got = HttpSource.fetch(spark, urls, maxAttempts = 2, delayMs = 0L)
+        .collect().sortBy(_.url)
+      assert(got.map(_.url).toSeq === urls.sorted)
+      assert(got.forall(r => r.body == null && r.attempts == 2 && r.error != null))
+      assert(got.map(_.status).toSeq === Seq(503, 404))
+    }
+  }
+
+  test("fetch -> fromJsonPayloads skips a malformed body and an empty " +
+    "array, and parses the good bodies in the same frame") {
     withServer { base =>
       import spark.implicits._
-      val schema = StructType(Seq(
-        StructField("zone", StringType), StructField("mwh", LongType)))
       val pages = HttpSource.fetch(spark,
-          Seq(s"$base/ok1", s"$base/ok2", s"$base/garbage"),
+          Seq(s"$base/day", s"$base/garbage", s"$base/truncated", s"$base/empty"),
           maxAttempts = 1, delayMs = 0L)
         .filter(col("status") === 200).toDF()
-      val (good, bad) = Sources.jsonWithQuarantine(pages, "body", schema)
-      val rows = good.select($"zone", $"mwh").as[(String, Long)]
-        .collect().toSet
-      assert(rows === Set(("SE1", 100L), ("SE2", 250L)))
-      assert(bad.count() === 1) // the non-JSON page, quarantined not thrown
+      assert(pages.count() === 4)
+      val rows = Pipeline.fromJsonPayloads(pages, "body")
+        .select($"zone", $"value").as[(String, Double)].collect().sorted
+      assert(rows.toSeq === Seq(("SE1", 10.5), ("SE1", 11.5)))
     }
   }
 }

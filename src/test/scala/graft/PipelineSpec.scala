@@ -65,6 +65,34 @@ class PipelineSpec extends SparkSpec {
     // …whereas the reference's blind append would have doubled the rows
   }
 
+  test("readDeduped after a blind-append crash replay of the same delta on " +
+    "the same load_date keeps one row per (date, group_key)") {
+    val root = Files.createTempDirectory("graft_replay").toFile
+    val (sink, replay) = (new java.io.File(root, "t"), new java.io.File(root, "replay"))
+    val delta = events(Seq(
+      ("2024-01-01 01:00:00", "SE1", 10.0), ("2024-01-01 02:00:00", "SE1", 20.0),
+      ("2024-01-01 01:00:00", "SE2", 5.0), ("2024-01-02 01:00:00", "SE1", 7.0)))
+    val loadDate = Date.valueOf("2024-01-03")
+    // both attempts start from the empty sink's watermark; the replay's
+    // files land beside the first attempt's, as a re-run blind append does
+    Seq(sink, replay).foreach(d =>
+      Pipeline.runIncremental(spark, delta, "zone", d.getPath, loadDate))
+    for (part <- replay.listFiles() if part.getName.startsWith("date=");
+         f <- part.listFiles())
+      assert(f.renameTo(new java.io.File(new java.io.File(sink, part.getName), f.getName)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("date").cast("string"), col("group_key"), col("avg_value"),
+        col("n"), col("load_date").cast("string"))
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    val raw = rows(spark.read.parquet(sink.getPath))
+    assert(raw.length === 6) // the replay doubled every key
+    assert(rows(Pipeline.readDeduped(spark, sink.getPath)) === raw.distinct)
+    assert(raw.distinct === Seq(
+      Seq("2024-01-01", "SE1", 15.0, 2L, "2024-01-03"),
+      Seq("2024-01-01", "SE2", 5.0, 1L, "2024-01-03"),
+      Seq("2024-01-02", "SE1", 7.0, 1L, "2024-01-03")))
+  }
+
   test("partition-overwrite replaces only the delta's own date partitions") {
     val sink = Files.createTempDirectory("graft_dyn").toString + "/t"
     Pipeline.runIncremental(spark,

@@ -1,122 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.functions.VectorAggregates
-import graft.sources.Sources
 
-/** Source resilience (PERMISSIVE/FAILFAST JSON) and the typed Aggregator
-  * UDAF surface. */
+/** Aggregate tiers and guards behind declared queries (broadcast
+  * fallback, approximate-aggregate audits, regr_*, unit-sum vs
+  * decimal-sum) and the ORC wire format. */
 class SourcesAggregatesSpec extends SparkSpec {
-
-  private val schema = StructType(Seq(
-    StructField("zone", StringType), StructField("value", DoubleType)))
-
-  test("jsonWithQuarantine splits good and malformed records") {
-    import spark.implicits._
-    val raw = Seq(
-      """{"zone":"SE1","value":1.5}""",
-      """{"zone":"SE2","value":}""", // malformed
-      """not json at all""",
-      """{"zone":"SE3","value":3.0}""").toDF("body")
-    val (good, bad) = Sources.jsonWithQuarantine(raw, "body", schema)
-    assert(good.count() === 2)
-    assert(bad.count() === 2)
-    assert(good.select(sum($"value")).as[Double].head() === 4.5)
-    // quarantine keeps the raw record for replay
-    assert(bad.columns.toSeq === Seq("raw_record"))
-  }
-
-  test("readCsvFiles quarantines type-mismatched rows, keeps the rest") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
-    java.nio.file.Files.writeString(dir.resolve("a.csv"),
-      """zone,value
-        |SE1,1.5
-        |SE2,not_a_number
-        |SE3,3.0
-        |""".stripMargin)
-    // cache before corrupt-column-only queries (Spark disallows them
-    // on the raw file scan — see the readCsvFiles scaladoc)
-    val df = Sources.readCsvFiles(spark, dir.toString, schema).cache()
-    val good = df.filter($"_corrupt".isNull)
-    val bad = df.filter($"_corrupt".isNotNull)
-    assert(good.count() === 2)
-    assert(good.select(sum($"value")).as[Double].head() === 4.5)
-    // the quarantined row keeps its raw line for replay, and its
-    // parseable columns survive alongside
-    assert(bad.count() === 1)
-    val b = bad.select($"zone", $"_corrupt").head()
-    assert(b.getString(0) === "SE2")
-    assert(b.getString(1).contains("not_a_number"))
-  }
-
-  test("jsonStrict fails fast on malformed input") {
-    import spark.implicits._
-    val raw = Seq("""{"zone":"SE1","value":}""").toDF("body")
-    intercept[Exception] {
-      Sources.jsonStrict(raw, "body", schema).collect()
-    }
-  }
-
-  test("readWithRetry: retries transient failures, quarantines exhausted keys") {
-    import spark.implicits._
-    val calls = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    val slept = scala.collection.mutable.ArrayBuffer[Long]()
-    val r = Sources.readWithRetry(
-      keys = Seq("ok", "flaky", "dead"),
-      maxAttempts = 3, delayMs = 5000L, sleep = slept += _) { key =>
-      calls(key) += 1
-      key match {
-        case "flaky" if calls(key) < 3 => sys.error(s"transient #${calls(key)}")
-        case "dead" => sys.error("permanent")
-        case _ => Seq((key, 1L)).toDF("src", "v")
-      }
-    }
-    // "ok" first try; "flaky" succeeds on its 3rd; "dead" exhausts 3
-    assert(r.attempts === Map("ok" -> 1, "flaky" -> 3, "dead" -> 3))
-    assert(r.quarantined.map(f => (f.key, f.attempts)) === Seq(("dead", 3)))
-    assert(r.quarantined.head.lastError.contains("permanent"))
-    // union carries both successful partitions
-    val rows = r.data.get.orderBy("src").as[(String, Long)].collect()
-    assert(rows === Seq(("flaky", 1L), ("ok", 1L)))
-    // backoff: one sleep per failed non-final attempt (2 flaky + 2 dead)
-    assert(slept.toSeq === Seq(5000L, 5000L, 5000L, 5000L))
-  }
-
-  test("readWithRetry: all keys exhausted -> no data, full quarantine") {
-    val r = Sources.readWithRetry(Seq("a", "b"), maxAttempts = 2,
-      delayMs = 1L, sleep = _ => ()) { _ => sys.error("down") }
-    assert(r.data.isEmpty)
-    assert(r.quarantined.map(_.key) === Seq("a", "b"))
-    assert(r.attempts.values.toSeq === Seq(2, 2))
-  }
-
-  test("vectorMean Aggregator matches the posexplode centroid") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    // typed aggregator path
-    val typed = e.select($"label", $"embedding").as[(Int, Array[Float])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(VectorAggregates.vectorMean.toColumn.name("centroid"))
-      .collect().toMap
-    // reference path: posexplode + avg
-    val ref = e.select($"label", posexplode(col("embedding")))
-      .groupBy($"label", $"pos")
-      .agg(avg($"col".cast("double")).as("m"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (l, rows) =>
-        l -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray }
-    ref.foreach { case (label, exp) =>
-      val got = typed(label)
-      assert(got.length === exp.length)
-      exp.indices.foreach { i =>
-        assert(math.abs(got(i) - exp(i)) < 1e-9, s"label=$label pos=$i")
-      }
-    }
-  }
 
   test("contamination broadcast guard: shuffle fallback matches the broadcast path") {
     import spark.implicits._

@@ -94,35 +94,6 @@ class StreamingSpec extends SparkSpec {
     assert(byEvent(3L) === ((1L, 5.0)))  // independent per-key state
   }
 
-  test("transformWithState (Spark 4 state API) matches flatMapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    // the new API requires the RocksDB provider; per-query conf, read at
-    // query start, so the surrounding suites are unaffected
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Event]
-      val out = Streams.runningUserStatsTws(in.toDS()).toDF()
-      val rows = runBatches(in, out, OutputMode.Append, Seq(
-        Seq(Event(1, ts("2024-01-01 10:00:00"), 7, "click", 10.0)),
-        Seq(Event(2, ts("2024-01-01 11:00:00"), 7, "click", 30.0),
-            Event(3, ts("2024-01-01 12:00:00"), 8, "view", 5.0))))
-      val byEvent = rows.map(r =>
-        r.getAs[Long]("event_id") -> (r.getAs[Long]("running_n"), r.getAs[Double]("running_avg"))).toMap
-      // identical to the flatMapGroupsWithState pin above — the two
-      // state APIs are interchangeable for this contract
-      assert(byEvent(1L) === ((1L, 10.0)))
-      assert(byEvent(2L) === ((2L, 20.0)))
-      assert(byEvent(3L) === ((1L, 5.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   test("streaming CDC compaction == batch q_cdc_merge over the same " +
     "rows, regardless of micro-batch slicing") {
     import spark.implicits._
@@ -561,49 +532,6 @@ class StreamingSpec extends SparkSpec {
     val u1 = rows.filter(_.getAs[Long]("user_id") == 1L)
       .map(r => (r.getAs[Timestamp]("session_start"), r.getAs[Long]("n"))).toSet
     assert(u1 === Set((ts("2024-01-01 10:00:00"), 2L), (ts("2024-01-01 12:00:00"), 1L)))
-  }
-
-  test("sessionFinalize: event-time timers close idle sessions when the " +
-    "watermark passes; in-batch gaps finalize inline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Event]
-      val out = Streams.sessionFinalize(in.toDS(),
-        gapMs = 30L * 60 * 1000).toDF()
-      val rows = runBatches(in, out, OutputMode.Append, Seq(
-        // batch 1: user 1 opens a session (2 events), user 2 opens one
-        Seq(Event(1, ts("2024-01-01 10:00:00"), 1, "c", 1.0),
-            Event(2, ts("2024-01-01 10:10:00"), 1, "c", 2.0),
-            Event(3, ts("2024-01-01 10:05:00"), 2, "c", 7.0)),
-        // batch 2: user 1's event proves a gap INLINE (12:00 is >30 min
-        // past 10:10) and opens a second session; the watermark advance
-        // (to 12:00) also EXPIRES user 2's timer (10:05 + 30 min)
-        Seq(Event(4, ts("2024-01-01 12:00:00"), 1, "c", 4.0)),
-        // batch 3: far-future event pushes the watermark past every
-        // open timer — the trailing sessions finalize via timers
-        Seq(Event(5, ts("2024-01-02 00:00:00"), 3, "c", 0.0))))
-      val got = rows.map(r => (r.getAs[Long]("user_id"),
-        r.getAs[Long]("n_events"), r.getAs[Double]("total"),
-        r.getAs[Long]("open_ms"), r.getAs[Long]("close_ms"))).toSet
-      val expected = Set(
-        (1L, 2L, 3.0, ts("2024-01-01 10:00:00").getTime,
-          ts("2024-01-01 10:10:00").getTime),   // inline gap finalize
-        (2L, 1L, 7.0, ts("2024-01-01 10:05:00").getTime,
-          ts("2024-01-01 10:05:00").getTime),   // timer finalize (batch 2/3)
-        (1L, 1L, 4.0, ts("2024-01-01 12:00:00").getTime,
-          ts("2024-01-01 12:00:00").getTime))   // timer finalize (batch 3)
-      assert(got === expected)
-      // user 3's session is still open (no later watermark) — not emitted
-      assert(!got.exists(_._1 == 3L))
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
   }
 
   test("upsertSink: micro-batched stream converges to the batch state, " +
