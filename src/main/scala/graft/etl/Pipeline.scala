@@ -1,6 +1,12 @@
 package graft.etl
 
 import org.apache.hadoop.fs.FileUtil
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -157,7 +163,9 @@ object Pipeline {
         (sum(col("value").cast("decimal(28,10)")).cast("double") /
           count(lit(1))).as("avg_value"),
         count(lit(1)).as("n"))
-      .withColumn("load_date", lit(loadDate))
+      // a reference, not a literal: Spark inlines a Date literal into the
+      // generated Java, so each new load date would compile new classes
+      .withColumn("load_date", Shim.column(DateParam(DateTimeUtils.fromJavaDate(loadDate))))
       // schema enforcement (:92-97): project + cast to the declared sink
       // types — stays inside codegen, unlike a round-trip through RDD
       .select(sinkSchema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
@@ -621,5 +629,22 @@ object Pipeline {
       StandardCopyOption.ATOMIC_MOVE)
     FileUtil.fullyDelete(new java.io.File(retired)): Unit
     files
+  }
+}
+
+/** A date constant (days since the epoch) that the optimizer does not
+  * fold and generated code reads from its references array. The code
+  * text, which keys Spark's codegen cache, is then the same for every
+  * value, so a daily load reuses the classes compiled the day before. */
+private[etl] case class DateParam(days: Int) extends LeafExpression {
+  override def dataType: DataType = DateType
+  override def foldable: Boolean = false
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = days
+  override def toString: String = s"date_param(${DateTimeUtils.toJavaDate(days)})"
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dateParam", Integer.valueOf(days), "java.lang.Integer")
+    ev.copy(code = code"final int ${ev.value} = $ref.intValue();", isNull = FalseLiteral)
   }
 }

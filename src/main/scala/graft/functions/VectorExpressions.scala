@@ -227,5 +227,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // rule (operator-optimization fixed point) relocates filters through
     // AsOfJoin so the standard rules can carry them into the scans
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
+    // Spark rounds a double through java.math.BigDecimal on every row;
+    // this rule swaps in the bit-equal native kernel
+    ext.injectOptimizerRule(_ => NativeDoubleRound)
   }
 }

@@ -59,7 +59,11 @@ object Incremental {
   // recover the identical integer. The decimal discipline (r4s/r4a)
   // remains the default for measures without a grid guarantee.
 
-  /** Exact unit sum: Σ ROUND(x·10^s) as BIGINT.
+  /** Exact unit sum: Σ ROUND(x·10^s) as BIGINT. The per-row double ROUND
+    * runs as the native kernel (graft.functions.DoubleRound, substituted
+    * for Spark's BigDecimal ROUND by the session's optimizer rule, same
+    * bits); a grid-valued x·10^s sits near an integer, so every row takes
+    * its double-arithmetic path.
     * Oracle mirror: SUM(CAST(ROUND(x * 10^s) AS BIGINT)). */
   private[graft] def unitSum(x: org.apache.spark.sql.Column,
                              scale: Int): org.apache.spark.sql.Column = {

@@ -96,27 +96,6 @@ object Scale {
       .drop("_salt")
   }
 
-  /** Skew-resistant connected components: the alternating large-star /
-    * small-star algorithm (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14 — public). Each round rewires every
-    * edge toward its neighborhood minimum:
-    *   large-star: for node u with m = min(Γ(u) ∪ {u}), each neighbor
-    *               x > u re-links as (x, m);
-    *   small-star: each neighbor x < u re-links as (x, m), plus (u, m).
-    * The edge set converges in O(log n) rounds to stars centered at each
-    * component's minimum id. Versus min-label propagation (the
-    * q_dedup_canonical loop) the hot structures stay skew-safe: the
-    * neighborhood minimum is a map-side-combinable `min` aggregate (a
-    * 10^9-degree hub never materializes on one reducer), and a hub's
-    * spokes re-link directly to the minimum in one round instead of
-    * re-shuffling the hub key once per propagation round for
-    * diameter-many rounds.
-    *
-    * `pairs` = undirected edges (aCol, bCol), any orderable integer ids;
-    * self-loops and duplicates tolerated. Returns (node, lbl) — every
-    * node that appears in an edge, labeled with its component's min id.
-    * Isolated nodes never appear (same contract as the propagation
-    * loop: they are their own canonical by definition). */
   /** Morton (Z-order) interleave of the low `bits` bits of two
     * non-negative dimension columns — the multi-dimensional clustering
     * key for data skipping. Range-clustering a table by ONE key (see
@@ -170,6 +149,27 @@ object Scale {
       .select(col("a"), col("w"), col("b"), col("degree"))
   }
 
+  /** Skew-resistant connected components: the alternating large-star /
+    * small-star algorithm (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC'14 — public). Each round rewires every
+    * edge toward its neighborhood minimum:
+    *   large-star: for node u with m = min(Γ(u) ∪ {u}), each neighbor
+    *               x > u re-links as (x, m);
+    *   small-star: each neighbor x < u re-links as (x, m), plus (u, m).
+    * The edge set converges in O(log n) rounds to stars centered at each
+    * component's minimum id. Versus min-label propagation (the
+    * q_dedup_canonical loop) the hot structures stay skew-safe: the
+    * neighborhood minimum is a map-side-combinable `min` aggregate (a
+    * 10^9-degree hub never materializes on one reducer), and a hub's
+    * spokes re-link directly to the minimum in one round instead of
+    * re-shuffling the hub key once per propagation round for
+    * diameter-many rounds.
+    *
+    * `pairs` = undirected edges (aCol, bCol), any orderable integer ids;
+    * self-loops and duplicates tolerated. Returns (node, lbl) — every
+    * node that appears in an edge, labeled with its component's min id.
+    * Isolated nodes never appear (same contract as the propagation
+    * loop: they are their own canonical by definition). */
   def starCC(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 64): DataFrame = {
     val init = pairs

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
 
 /** Minimal bridge into Spark's `private[sql]` surface, required to hand
-  * a custom LogicalPlan (graft.plans.AsOfJoin) back to the public
-  * Dataset API. Placing one shim object inside the org.apache.spark.sql
+  * a custom LogicalPlan (graft.plans.AsOfJoin) or Expression back to the
+  * public Dataset API. Placing one shim object inside the org.apache.spark.sql
   * namespace is the standard technique external connectors/extensions
   * use (the alternative — reflection — is slower and more brittle).
   * Everything else in this repo lives in the graft.* namespace. */
@@ -16,6 +16,8 @@ object Shim {
     Dataset.ofRows(ClassicConversions.castToImpl(spark), plan)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     ClassicConversions.castToImpl(df).logicalPlan

@@ -809,6 +809,54 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.watermark(spark, sink) === Some(Date.valueOf("2024-05-02")))
     assert(spark.read.parquet(sink).collect().map(_.toString).sorted.toSeq === rows)
   }
+
+  test("a load on a new date compiles no new classes: the load date is " +
+    "not compiled into the generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val day = Seq(("2024-07-01 01:00:00", "SE1", 10.0),
+      ("2024-07-01 02:00:00", "SE2", 20.0))
+    def coldStart(loadDate: String): Long = Pipeline.runIncremental(spark,
+      events(day), "zone", Files.createTempDirectory("graft_ld").toString + "/t",
+      Date.valueOf(loadDate))
+    assert(coldStart("2024-07-02") === 2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val sink = Files.createTempDirectory("graft_ld").toString + "/t"
+    assert(Pipeline.runIncremental(spark, events(day), "zone", sink,
+      Date.valueOf("2024-07-03")) === 2)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0)
+    assert(spark.read.parquet(sink).select(col("load_date").cast("string"))
+      .distinct().collect().map(_.getString(0)).toSeq === Seq("2024-07-03"))
+  }
+
+  test("the delta filter over a parquet source reaches the scan's PushedFilters") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_pushed").toString
+    events(Seq(("2024-08-01 01:00:00", "SE1", 1.0), ("2024-08-02 01:00:00", "SE1", 2.0),
+      ("2024-08-03 01:00:00", "SE1", 3.0)))
+      .write.parquet(s"$dir/events.parquet")
+    val src = spark.read.parquet(s"$dir/events.parquet")
+    val sink = s"$dir/sink"
+    Pipeline.runIncremental(spark, src.filter(col("ts") < "2024-08-02"), "zone", sink,
+      Date.valueOf("2024-08-02"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Pipeline.runIncremental(spark, src, "zone", sink,
+        Date.valueOf("2024-08-04")) === 2)
+      org.apache.spark.graftshim.Bus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // to_date(ts) > 2024-08-01 reaches parquet as ts >= 2024-08-02 00:00
+    val scans = plans.toArray.map(_.toString).flatMap(_.linesIterator)
+      .filter(_.contains("PushedFilters"))
+    assert(scans.exists(_.contains("GreaterThanOrEqual(ts,2024-08-02 00:00:00")),
+      scans.mkString("\n"))
+  }
 }
 
 object PipelineSpec {

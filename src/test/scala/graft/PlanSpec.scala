@@ -591,4 +591,19 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("salt"), p.take(4000))
     assert(p.contains("BroadcastHashJoin"), p.take(4000))
   }
+
+  test("q_tpch_q1: every double ROUND in the optimized plan is the native " +
+    "kernel, none is Spark's BigDecimal Round") {
+    import org.apache.spark.sql.catalyst.expressions.Round
+    val opt = SparkEntry.all("q_tpch_q1").fn(spark, sf).queryExecution.optimizedPlan
+    val exprs = opt.flatMap(_.expressions)
+    val builtin = exprs.flatMap(_.collect {
+      case r: Round if r.child.dataType == org.apache.spark.sql.types.DoubleType => r
+    })
+    assert(builtin.isEmpty, opt.toString.take(4000))
+    // the five unit sums each round one double per lineitem row
+    assert(exprs.flatMap(_.collect { case r: graft.functions.RoundDouble => r })
+      .size === 5,
+      opt.toString.take(4000))
+  }
 }

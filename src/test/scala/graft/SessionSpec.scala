@@ -16,4 +16,14 @@ class SessionSpec extends SparkSpec {
     assert(conf.get("spark.sql.session.timeZone") === "UTC")
     assert(conf.get("spark.sql.shuffle.partitions") === "4")
   }
+
+  test("the session installs the native double ROUND rule") {
+    import org.apache.spark.sql.catalyst.expressions.Round
+    import org.apache.spark.sql.functions._
+    val opt = spark.range(4).select(round(col("id") / 3, 2).as("r"))
+      .queryExecution.optimizedPlan
+    val exprs = opt.flatMap(_.expressions)
+    assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.RoundDouble])), opt)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[Round])), opt)
+  }
 }
