@@ -415,41 +415,6 @@ object Pipeline {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Schema-evolution-tolerant read of an append-only sink — the
-    * contract a long-lived 100 TB table needs so adding a column never
-    * requires rewriting old partitions: files written before the
-    * addition simply lack it (their rows read as NULL), while removing
-    * or retyping a declared column is REFUSED with a clear message
-    * (that is a rewrite, not a read). Mechanics: parquet mergeSchema
-    * union across file footers, validated against the caller's
-    * declared schema (undeclared on-disk columns are an error too —
-    * schema changes are explicit, never implied), then a projection to
-    * the declared column order with typed NULLs for columns no file
-    * carries yet. */
-  def readEvolved(spark: SparkSession, dir: String,
-      declared: StructType): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true").parquet(dir)
-    val onDisk = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val declaredNames = declared.fieldNames.toSet
-    val extras = df.schema.fieldNames.filterNot(declaredNames)
-    require(extras.isEmpty,
-      s"$dir carries undeclared column(s) ${extras.mkString(", ")} — " +
-        "extend the declared schema; columns are added explicitly, " +
-        "never implied from files")
-    declared.fields.foreach { f =>
-      onDisk.get(f.name).foreach { dt =>
-        require(dt == f.dataType,
-          s"column ${f.name} is ${dt.simpleString} on disk but declared " +
-            s"${f.dataType.simpleString} — retyping requires a table " +
-            "rewrite, not a read")
-      }
-    }
-    df.select(declared.fields.map { f =>
-      if (onDisk.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-  }
-
   /** The reference's raw ingest shape (energy_etl.py:64-69): each payload is
     * a JSON array of hourly records carrying a price field. Parse with an
     * explicit schema (no runtime inference), explode, and hand back typed

@@ -301,10 +301,7 @@ object Relational {
         val pos = p * (n - 1).toDouble
         Seq(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
       }
-      // r14 (guide §2.4): ONE pass over lineitem instead of three. The
-      // former shape ran groupCounts (scan+agg), the rank-pick sort
-      // (scan+sort), and the sketch aggregate (scan+agg) as three
-      // separate full passes; rankPickCounted derives the counts from
+      // ONE pass over lineitem: rankPickCounted derives the counts from
       // the persisted sort and the `aux` hook runs the sketch as a
       // cached read of the same rows. n_rows counts the null-cleaned
       // (flag, price) rows — identical here (the fixtures carry no null
@@ -459,9 +456,7 @@ object Relational {
         .select(concat($"l_returnflag", lit("|p")).as("gk"), $"p".as("v"))
         .unionByName(li
           .select(concat($"l_returnflag", lit("|q")).as("gk"), $"q".as("v")))
-      // r14 (guide §2.4): the former separate groupCounts pass over li
-      // (scan + agg + orderBy, purely to seed the rank offsets and the
-      // final join's n) is gone — rankPickCounted hands back the
+      // No counts pass over li: rankPickCounted hands back the
       // per-composite counts it derived from the persisted sort, and the
       // per-flag n for the interpolation join is read off the "|p" half
       // on the driver (both measures carry one row per input row).
@@ -1494,9 +1489,8 @@ object Relational {
         .select($"event_type", $"value".cast("double").as("v"))
         .filter($"event_type".isNotNull && $"v".isNotNull) // SQL null-skip
       val disc = (n: Long) => Seq((n + 1) / 2) // rank ⌈n/2⌉ = quantile_disc(0.5)
-      // r14 (guide §2.4): the first pick derives the per-group counts
-      // from its own persisted sort (the former groupCounts pass over ev
-      // is gone); the second pick reuses them as a cross-check — res is
+      // The first pick derives the per-group counts from its own
+      // persisted sort; the second pick reuses them as a cross-check — res is
       // an inner join of ev against one med per group, so its clean-row
       // counts are identical by construction.
       val (meds0, counted, _) = Scale.rankPickCounted(s,
@@ -1599,8 +1593,7 @@ object Relational {
         .filter($"event_type".isNotNull && $"v".isNotNull) // SQL null-skip
       val r05 = (n: Long) => (n + 19) / 20
       val r95 = (n: Long) => (19 * n + 19) / 20
-      // r14 (guide §2.4): counts ride the rank-pick's own persisted sort
-      // — the former dedicated groupCounts pass over ev is gone
+      // counts ride the rank-pick's own persisted sort
       val (picks, counted, _) = Scale.rankPickCounted(s,
         ev.select($"event_type".as("gk"), $"v"), "gk", "v",
         (_, n) => Seq(r05(n), r95(n)).distinct)

@@ -4,31 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale utilities (SURVEY.md §7.5 risk register; the 100 TB design
-  * mandate): bucketed co-located joins and salted skew handling. These
-  * are engine patterns, not declared queries — exercised by ScaleSpec,
-  * which asserts the resulting physical plans (no exchange on bucketed
-  * joins; bounded partition width on salted aggregations).
+  * mandate): salted skew handling, Z-order keys, hub-capped wedges,
+  * star connected components, blocked prefix sums and the range-sort
+  * rank-pick. The declared queries build on them; ScaleSpec checks each
+  * against its plain single-task formulation.
   */
 object Scale {
-
-  /** Write both sides bucketed by the join key into the session catalog.
-    * A later join on that key sort-merges WITHOUT either exchange: at
-    * 100 TB this turns the fact⋈fact shuffle (the dominant cost) into
-    * co-located per-bucket merges. Bucket count is fixed at write time —
-    * size it to (table size / target partition size), power of two. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .mode("overwrite")
-      .saveAsTable(table)
-
-  /** Join two bucketed tables on their bucket key. Caller asserts the
-    * plan: with equal bucket counts there is no ShuffleExchange. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-      key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
 
   /** Salted two-phase aggregation: pre-aggregate on (key, salt) so a
     * hot key's rows split across `salts` reducers, then combine the
@@ -53,47 +34,6 @@ object Scale {
       .agg(partial.head, partial.tail: _*)
       .groupBy(col("_k"))
       .agg(merge.head, merge.tail: _*)
-  }
-
-  /** Binned range join: `big.v ∈ [small.lo, small.hi)` without a
-    * nested-loop. Each big row maps to bin floor(v/w); each small
-    * interval is replicated to every bin it covers (sequence — intervals
-    * are bounded, so replication is |interval|/w per row); the join is
-    * then EQUI on the bin plus the residual range filter. At 100 TB this
-    * is the strategy when the interval side is too big to broadcast:
-    * one keyed shuffle instead of O(n·m) loops. Result rows are
-    * identical to the plain non-equi join (ScaleSpec pins it). */
-  def binnedRangeJoin(
-      big: DataFrame, small: DataFrame,
-      bigValue: String, lo: String, hi: String,
-      binWidth: Double): DataFrame = {
-    val binned = big.withColumn("_bin",
-      floor(col(bigValue) / binWidth).cast("long"))
-    val replicated = small.withColumn("_bin",
-      explode(sequence(
-        floor(col(lo) / binWidth).cast("long"),
-        floor(col(hi) / binWidth).cast("long"))))
-    binned.join(replicated, Seq("_bin"))
-      .filter(col(bigValue) >= col(lo) && col(bigValue) < col(hi))
-      .drop("_bin")
-  }
-
-  /** Salted broadcast-side replication for a skewed equi join: explode
-    * the small side `salts`× with a salt column, salt the big side's key
-    * randomly-but-deterministically, join on (key, salt). Splits a hot
-    * key across `salts` tasks; result identical to the unsalted join. */
-  def saltedJoin(
-      big: DataFrame, small: DataFrame, bigKey: String, smallKey: String,
-      salts: Int): DataFrame = {
-    val saltedBig = big.withColumn("_salt",
-      pmod(hash(col(bigKey), spark_partition_id(), monotonically_increasing_id()),
-        lit(salts)))
-    val replicatedSmall = small.withColumn("_salt",
-      explode(array((0 until salts).map(lit): _*)))
-    saltedBig.join(replicatedSmall,
-      saltedBig(bigKey) === replicatedSmall(smallKey) &&
-        saltedBig("_salt") === replicatedSmall("_salt"))
-      .drop("_salt")
   }
 
   /** Morton (Z-order) interleave of the low `bits` bits of two
@@ -278,48 +218,30 @@ object Scale {
     * group on ONE task (memory-safe via spill, but 3 tasks on a 1000-
     * executor cluster); here the sort is a global RANGE sort over
     * (group, value) — every core sorts a slice — and global ranks come
-    * from `zipWithIndex` (per-partition counts + offset, one extra tiny
-    * job) minus each group's start offset. Rank-of-equal-values is
-    * arbitrary but the VALUE at rank k is unique, so results don't
-    * depend on partition boundaries or tie placement.
+    * from per-partition counts plus each row's index in its partition,
+    * minus each group's start offset (see [[rankPickSorted]]).
+    * Rank-of-equal-values is arbitrary but the VALUE at rank k is
+    * unique, so results don't depend on partition boundaries or tie
+    * placement.
     *
     * The per-group totals are collected to the driver to compute start
     * offsets and the requested rank sets — |groups| scalar rows, the
     * same class of driver-side metadata read as a range partitioner's
     * sample or the watermark scalar (SURVEY.md §7.5); row data never
-    * leaves the cluster.
+    * leaves the cluster. More than `maxGroups` groups fail fast.
     *
     * `ranksFor` maps each group's row count n to the ranks wanted
     * (e.g. percentile interpolation needs ⌊p·(n−1)⌋+1 and ⌈p·(n−1)⌉+1).
     * Returns (group, rn, v) — one row per requested rank.
     *
-    * `precounted`: per-group totals in SPARK SORT ORDER of the group
-    * key, if the caller already aggregated them — skips rankPick's own
-    * counts job. Order matters: offsets are cumulative in the global
-    * sort's group order, so the list must come from an `orderBy` on the
-    * SAME engine (e.g. `df.groupBy(g).count().orderBy(g).collect()`),
-    * never a driver-side re-sort — Scala's UTF-16 String ordering and
-    * Spark's UTF8 binary ordering disagree on supplementary-plane
-    * characters. */
-  /** ONE guarded per-group counts job in SPARK sort order — the
-    * watermark-class driver scalar read shared by the rank-pick call
-    * sites (passed back as `precounted`) and by [[rankPickBy]]'s own
-    * fallback. The maxGroups ceiling is enforced with a
-    * limit(maxGroups+1) fetch (TakeOrderedAndProject — no full collect
-    * on the failure path either), failing fast instead of silently
-    * becoming a driver bottleneck on a high-cardinality key. */
-  def groupCounts(df: DataFrame, groupCol: String,
-      maxGroups: Int = 100000): Seq[(String, Long)] = {
-    val rows = df.groupBy(col(groupCol)).count().orderBy(col(groupCol))
-      .limit(maxGroups + 1)
-      .collect().toSeq.map(r => r.getString(0) -> r.getLong(1))
-    require(rows.size <= maxGroups,
-      s"groupCounts holds one (group, count) pair per group on the " +
-        s"driver; '$groupCol' has >$maxGroups groups — use a distributed " +
-        "window rank per group instead, or raise maxGroups deliberately")
-    rows
-  }
-
+    * `precounted` is a cross-check, not an input: per-group totals the
+    * caller already holds, in SPARK SORT ORDER of the group key (e.g.
+    * the counts an earlier [[rankPickCounted]] returned). They must
+    * equal the counts the pick derives from its own sort, or the call
+    * fails. The order is compared too, so the list must come from the
+    * engine, never a driver-side re-sort — Scala's UTF-16 String
+    * ordering and Spark's UTF8 binary ordering disagree on
+    * supplementary-plane characters. */
   def rankPick(
       spark: SparkSession,
       df: DataFrame,
@@ -335,7 +257,7 @@ object Scale {
     * rank-picks share ONE global sort: melt the measures into a single
     * (composite group, value) frame and give each composite its own rank
     * set (q_percentile fuses its two measures this way, halving the
-    * sort/zipWithIndex job count). */
+    * sort job count). */
   def rankPickBy(
       spark: SparkSession,
       df: DataFrame,
@@ -353,104 +275,17 @@ object Scale {
     * cached (eagerly localCheckpointed, same lifetime rules as the
     * picked frame).
     *
-    * r14 (guide §2.4 "remove shuffles outright" / §1.2 step 1): the
-    * counts no longer cost their own full input pass. Every counts-
-    * consuming call site previously ran [[groupCounts]] — scan + partial
-    * agg + shuffle + orderBy — over the SAME rows the rank-pick was
-    * about to sort; rankPickCounted derives them from the persisted
-    * sorted frame instead: one tiny cached-read job over
-    * (partition, group) pairs (groups are CONTIGUOUS in the global range
-    * sort, so there are ≤ |groups| + |partitions| pairs) yields the
-    * per-partition counts, the per-group counts AND the group order
-    * (each group's first global index) in a single collect. `aux` exists
-    * for the same reason: q_quantile_approx's sketch pass re-scanned the
-    * raw input when the identical clean rows sat in the persist — the
-    * hook runs it as one cached-read aggregate.
+    * The counts cost no input pass of their own: they come from the
+    * same (partition, group) census that yields the rank offsets, so a
+    * caller that needs n per group (interpolation weights, clamp ranks)
+    * reads it here instead of aggregating the input again. `aux` exists
+    * for the same reason: q_quantile_approx's sketch runs as one
+    * cached-read aggregate over the sorted rows instead of a second scan
+    * of the raw input.
     *
-    * `precounted` is now a CROSS-CHECK, not an input: when supplied it
-    * must equal the derived (group, count) sequence exactly — a stronger
-    * guard than the r13 total-row reconciliation (offsetting per-group
-    * miscounts no longer cancel; ADVICE r13 item 1 closed fully). */
-  /** Rows at requested 1-based per-group GLOBAL ranks under a
-    * COMPOSITE ordering — the replacement for global-ORDER-BY window
-    * reads (NTILE boundaries, global row_number probes): those plan as
-    * `Exchange SinglePartition` + Sort, funneling |rows| through ONE
-    * task per ordering. Here the sort is a parallel RANGE sort over
-    * (group, sortCols…) — desc/ties supported, pass the exact ORDER BY
-    * columns — and ranks come from the [[rankPickCounted]]
-    * (partition, group) census + pid/mid decode. Several logical
-    * orderings share ONE sort via the [[rankPickBy]] melt idiom: tag
-    * each ordering's rows with a group and express the ordering so the
-    * tagged sort is ascending (q_rfm melts its three quintile-boundary
-    * orderings into signed-long metrics this way — one sort + one
-    * census + one pick instead of three of each).
-    *
-    * `ranksFor` receives each group's row count — derived from the
-    * persisted sort, no separate counts pass — and returns the wanted
-    * ranks (values outside [1, n] match nothing). Returns the picked
-    * rows (all columns + `rn`, 1-based within the group), eagerly
-    * localCheckpointed so the sort cache is released before the caller
-    * composes on top; callers are expected to pick O(1) ranks per
-    * group (quantile boundaries), so the picked frame is
-    * collected-scale. Same cluster caveats as [[rankPickCounted]]:
-    * swap localCheckpoint for a reliable checkpoint off local mode,
-    * and the _mid decode assumes <2^33 rows per sort partition. */
-  def globalRankPickBy(
-      spark: SparkSession,
-      df: DataFrame,
-      groupCol: String,
-      sortCols: Seq[Column],
-      ranksFor: (String, Long) => Seq[Long],
-      maxGroups: Int = 100000): DataFrame = {
-    val sorted = df
-      .sort((col(groupCol).asc +: sortCols): _*)
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_mid", monotonically_increasing_id())
-      .persist()
-    try {
-      val pg = sorted
-        .groupBy(col("_pid"), col(groupCol))
-        .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_mm"))
-        .collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      val nGroups = pg.iterator.map(_._2).toSet.size
-      require(nGroups <= maxGroups,
-        s"globalRankPickBy holds one (group, count) pair per group on the " +
-          s"driver; '$groupCol' has $nGroups groups > maxGroups=$maxGroups")
-      if (pg.isEmpty)
-        return sorted.filter(lit(false)).withColumn("rn", lit(0L))
-          .drop("_pid", "_mid").localCheckpoint(eager = true)
-      val pc = pg.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-      val maxPid = pc.keys.max
-      val pidOff = (0 to maxPid).scanLeft(0L) { (acc, p) =>
-        acc + pc.getOrElse(p, 0L)
-      }.dropRight(1).zipWithIndex.map { case (off, p) => p -> off }.toMap
-      val firstIdx = pg.groupBy(_._2).view.mapValues(_.iterator.map {
-        case (p, _, _, mm) => pidOff(p) + (mm - (p.toLong << 33))
-      }.min).toMap
-      val counts: Seq[(String, Long)] = pg.groupBy(_._2).view
-        .mapValues(_.map(_._3).sum).toSeq
-        .sortBy { case (g, _) => firstIdx(g) }
-      val offsets = counts.scanLeft(("", 0L)) { case ((_, acc), (g, n)) =>
-        (g, acc + n)
-      }.sliding(2).collect { case Seq((_, off), (g, _)) => g -> off }.toSeq
-      val targetRows: Seq[(String, Long)] = counts.flatMap { case (g, n) =>
-        ranksFor(g, n).toSet[Long].map(g -> _)
-      }
-      import spark.implicits._
-      val offDf = offsets.toDF(groupCol, "_goff")
-      val tgtDf = targetRows.toDF(groupCol, "rn")
-      val globalIdx = element_at(typedLit(pidOff), col("_pid")) +
-        (col("_mid") - shiftleft(col("_pid").cast("long"), 33))
-      sorted
-        .join(broadcast(offDf), Seq(groupCol))
-        .withColumn("rn", globalIdx - col("_goff") + 1L)
-        .join(broadcast(tgtDf), Seq(groupCol, "rn"), "left_semi")
-        .drop("_pid", "_mid", "_goff")
-        .localCheckpoint(eager = true)
-    } finally sorted.unpersist(): Unit
-  }
-
+    * Null (group, value) rows drop first — SQL percentile semantics skip
+    * null measures — so counts, ranks and `precounted` all describe
+    * exactly the clean rows. */
   def rankPickCounted(
       spark: SparkSession,
       df: DataFrame,
@@ -463,49 +298,97 @@ object Scale {
       : (DataFrame, Seq[(String, Long)], Option[DataFrame]) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    require(df.schema(groupCol).dataType == StringType,
-      s"rankPick groups by a string key; got ${df.schema(groupCol).dataType.sql}" +
-        " — cast the group column first")
-    // null (group, value) rows drop — SQL percentile semantics skip
-    // null measures, and the rank pipeline's non-null schema would
-    // otherwise fail on them. Counts are derived from exactly these
-    // clean rows (the r13 "count the clean frame" contract is now
-    // enforced by construction).
     val clean = df.filter(col(groupCol).isNotNull && col(valCol).isNotNull)
+      .select(col(groupCol), col(valCol).cast("double"))
+    val (picked, counts, auxOut) = rankPickSorted(spark, clean, groupCol,
+      Seq(col(valCol).asc), ranksFor, precounted, maxGroups, aux)
     val schema = StructType(Seq(
       StructField(groupCol, StringType, nullable = false),
       StructField("rn", LongType, nullable = false),
       StructField(valCol, DoubleType, nullable = false)))
-    // Global ranks WITHOUT the former rdd.zipWithIndex round-trip (r13):
-    // persist the sorted frame once; a range sort orders partitions by
-    // index, so global rank = (rows in earlier partitions) + within-
-    // partition index + 1, with the within-partition index decoded from
-    // monotonically_increasing_id (pid·2³³ + row index — its documented
-    // layout). Everything stays in whole-stage codegen; the rank filter
-    // is a broadcast semi join on the (group, rn) target set; the
-    // |picked| result (|groups|·|ranks| rows) is localCheckpointed
-    // eagerly so the sort cache can be released before the caller
-    // composes on top.
-    // Cluster caveats (ADVICE r13): (a) localCheckpoint truncates
-    // lineage to EXECUTOR-LOCAL blocks — on a real cluster an executor
-    // loss makes the picked frame unrecoverable (job failure, not
-    // corruption); swap for reliable checkpoint()/a table write when
-    // running non-local. (b) the _mid decode assumes <2^33 rows per
-    // sort partition (monotonically_increasing_id's documented layout)
-    // — range-sort partitions are sized far below that by the shuffle
-    // partition count, but a deliberate single-partition sort of >8.5
-    // billion rows would wrap.
-    val sorted = clean.select(col(groupCol), col(valCol).cast("double"))
-      .sort(col(groupCol), col(valCol))
-      .select(col(groupCol), col(valCol),
-        spark_partition_id().as("_pid"),
+    (picked.getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)),
+      counts, auxOut)
+  }
+
+  /** Rows at requested 1-based per-group GLOBAL ranks under a
+    * COMPOSITE ordering — the replacement for global-ORDER-BY window
+    * reads (NTILE boundaries, global row_number probes): those plan as
+    * `Exchange SinglePartition` + Sort, funneling |rows| through ONE
+    * task per ordering. Here the sort is a parallel RANGE sort over
+    * (group, sortCols…) — desc/ties supported, pass the exact ORDER BY
+    * columns. Several logical orderings share ONE sort via the
+    * [[rankPickBy]] melt idiom: tag each ordering's rows with a group
+    * and express the ordering so the tagged sort is ascending (q_rfm
+    * melts its three quintile-boundary orderings into signed-long
+    * metrics this way — one sort + one census + one pick instead of
+    * three of each).
+    *
+    * `ranksFor` receives each group's row count and returns the wanted
+    * ranks (values outside [1, n] match nothing). Returns the picked
+    * rows (all columns + `rn`, 1-based within the group); callers are
+    * expected to pick O(1) ranks per group (quantile boundaries), so the
+    * picked frame is collected-scale. */
+  def globalRankPickBy(
+      spark: SparkSession,
+      df: DataFrame,
+      groupCol: String,
+      sortCols: Seq[Column],
+      ranksFor: (String, Long) => Seq[Long],
+      maxGroups: Int = 100000): DataFrame =
+    rankPickSorted(spark, df, groupCol, sortCols, ranksFor, None, maxGroups,
+      None)._1.getOrElse(df.filter(lit(false)).withColumn("rn", lit(0L)))
+
+  /** The one range-sort rank-pick under every public variant. Sorts `df`
+    * by (group, sortCols…) and returns the rows at the wanted per-group
+    * ranks (group, rn, the other columns of `df`) — None when `df` has
+    * no rows — plus the per-group counts in sort order and the `aux`
+    * output.
+    *
+    * Global ranks without rdd.zipWithIndex, which would run the sort
+    * twice and leave whole-stage codegen: the sorted frame is persisted
+    * once; a range sort orders partitions by index, so global rank =
+    * (rows in earlier partitions) + within-partition index + 1, with
+    * the within-partition index decoded from
+    * monotonically_increasing_id (pid·2³³ + row index — its documented
+    * layout). ONE driver read materializes the persist and yields
+    * partition counts, group counts and group order together; the sort
+    * keys lead with the group, so each group occupies one contiguous
+    * partition range — ≤ |groups| + |partitions| (pid, group) pairs.
+    * Everything else stays in whole-stage codegen: the group offsets are
+    * a broadcast join, the rank filter a broadcast semi join on the
+    * (group, rn) target set, and the picked rows are localCheckpointed
+    * eagerly so the sort cache can be released before the caller
+    * composes on top.
+    *
+    * Cluster caveats: (a) localCheckpoint truncates lineage to
+    * EXECUTOR-LOCAL blocks — on a real cluster an executor loss makes
+    * the picked frame unrecoverable (job failure, not corruption); swap
+    * for reliable checkpoint()/a table write when running non-local.
+    * (b) the _mid decode assumes <2^33 rows per sort partition — range-
+    * sort partitions are sized far below that by the shuffle partition
+    * count, but a deliberate single-partition sort of >8.5 billion rows
+    * would wrap. */
+  private def rankPickSorted(
+      spark: SparkSession,
+      df: DataFrame,
+      groupCol: String,
+      sortCols: Seq[Column],
+      ranksFor: (String, Long) => Seq[Long],
+      precounted: Option[Seq[(String, Long)]],
+      maxGroups: Int,
+      aux: Option[DataFrame => DataFrame])
+      : (Option[DataFrame], Seq[(String, Long)], Option[DataFrame]) = {
+    import org.apache.spark.sql.types.StringType
+    require(df.schema(groupCol).dataType == StringType,
+      s"rankPick groups by a string key; got ${df.schema(groupCol).dataType.sql}" +
+        " — cast the group column first")
+    val sorted = df
+      .sort((col(groupCol).asc +: sortCols): _*)
+      .select(col("*"), spark_partition_id().as("_pid"),
         monotonically_increasing_id().as("_mid"))
       .persist()
     try {
-      // ONE driver read materializes the persist and yields partition
-      // counts + group counts + group order together. Size bound: the
-      // sort keys lead with the group, so each group occupies one
-      // contiguous partition range — ≤ |groups| + |partitions| pairs.
       val pg = sorted
         .groupBy(col("_pid"), col(groupCol))
         .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_mm"))
@@ -517,22 +400,12 @@ object Scale {
           s"'$groupCol' has $nGroups groups > maxGroups=$maxGroups — use a " +
           "distributed window rank per group instead, or raise maxGroups " +
           "deliberately")
-      if (pg.isEmpty) {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema)
-        return (empty, Seq.empty,
-          aux.map(f => f(sorted.select(col(groupCol), col(valCol)))
-            .localCheckpoint(eager = true)))
-      }
       val pc = pg.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-      val maxPid = pc.keys.max
-      val pidOff = (0 to maxPid).scanLeft(0L) { (acc, p) =>
-        acc + pc.getOrElse(p, 0L)
+      val pidOff = (0 to pc.keys.maxOption.getOrElse(-1)).scanLeft(0L) {
+        (acc, p) => acc + pc.getOrElse(p, 0L)
       }.dropRight(1).zipWithIndex.map { case (off, p) => p -> off }.toMap
       // each group's first GLOBAL index orders the groups exactly as the
-      // engine sorted them (never a driver-side string re-sort — Scala's
-      // UTF-16 ordering disagrees with Spark's UTF8 binary ordering on
-      // supplementary-plane characters)
+      // engine sorted them (never a driver-side string re-sort)
       val firstIdx = pg.groupBy(_._2).view.mapValues(_.iterator.map {
         case (p, _, _, mm) => pidOff(p) + (mm - (p.toLong << 33))
       }.min).toMap
@@ -547,27 +420,28 @@ object Scale {
             "exactly the null-cleaned (group, value) rows in engine " +
             "sort order")
       }
-      // each group's rows start at the cumulative count of earlier groups
-      val offsets = counts.scanLeft(("", 0L)) { case ((_, acc), (g, n)) =>
-        (g, acc + n)
-      }.sliding(2).collect { case Seq((_, off), (g, _)) => g -> off }.toSeq
-      val targetRows: Seq[(String, Long)] = counts.flatMap { case (g, n) =>
-        ranksFor(g, n).toSet[Long].map(g -> _)
+      val picked = if (counts.isEmpty) None else Some {
+        // each group's rows start at the cumulative count of earlier groups
+        val offsets = counts.scanLeft(("", 0L)) { case ((_, acc), (g, n)) =>
+          (g, acc + n)
+        }.sliding(2).collect { case Seq((_, off), (g, _)) => g -> off }.toSeq
+        val targetRows: Seq[(String, Long)] = counts.flatMap { case (g, n) =>
+          ranksFor(g, n).toSet[Long].map(g -> _)
+        }
+        import spark.implicits._
+        val offDf = offsets.toDF(groupCol, "_goff")
+        val tgtDf = targetRows.toDF(groupCol, "rn")
+        val globalIdx = element_at(typedLit(pidOff), col("_pid")) +
+          (col("_mid") - shiftleft(col("_pid").cast("long"), 33))
+        sorted
+          .join(broadcast(offDf), Seq(groupCol))
+          .withColumn("rn", globalIdx - col("_goff") + 1L)
+          .join(broadcast(tgtDf), Seq(groupCol, "rn"), "left_semi")
+          .drop("_pid", "_mid", "_goff")
+          .localCheckpoint(eager = true)
       }
-      import spark.implicits._
-      val offDf = offsets.toDF(groupCol, "_goff")
-      val tgtDf = targetRows.toDF(groupCol, "rn")
-      val globalIdx = element_at(typedLit(pidOff), col("_pid")) +
-        (col("_mid") - shiftleft(col("_pid").cast("long"), 33))
-      val picked = sorted
-        .join(broadcast(offDf), Seq(groupCol))
-        .withColumn("rn", globalIdx - col("_goff") + 1L)
-        .join(broadcast(tgtDf), Seq(groupCol, "rn"), "left_semi")
-        .select(col(groupCol), col("rn"), col(valCol))
-        .localCheckpoint(eager = true)
       val auxOut = aux.map(f =>
-        f(sorted.select(col(groupCol), col(valCol)))
-          .localCheckpoint(eager = true))
+        f(sorted.drop("_pid", "_mid")).localCheckpoint(eager = true))
       (picked, counts, auxOut)
     } finally sorted.unpersist(): Unit
   }

@@ -411,9 +411,8 @@ object TextDedup {
     * read (SURVEY.md §7.5), exactly like GraphX's own vote-to-halt. At
     * 100 TB with a hub cluster, switch to the implemented skew-
     * resistant variant — [[Scale.starCC]], alternating large-star/
-    * small-star, equivalence property-tested in ScaleSpec and exposed
-    * as `CorpusPipeline.canonicalStar`; kept out of THIS query because
-    * the fixture's clique graphs converge in 2 linear-lineage rounds
+    * small-star, equivalence property-tested in ScaleSpec; kept out of
+    * THIS query because the fixture's clique graphs converge in 2 linear-lineage rounds
     * here versus star's two joins + convergence action per round (local
     * cost is action count × job launch). An iteration cap guards
     * runaway chains either way. The oracle replays CC as a recursive

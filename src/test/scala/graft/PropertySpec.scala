@@ -80,29 +80,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("binnedRangeJoin == plain range join on generated intervals (property)") {
-    import spark.implicits._
-    val values: Gen[List[Double]] = Gen.listOf(Gen.choose(-500.0, 500.0))
-    val intervals: Gen[List[(Double, Double)]] = Gen.listOf(for {
-      lo <- Gen.choose(-500.0, 500.0)
-      w <- Gen.oneOf(0.0, 10.0, 137.5) // incl. empty intervals
-    } yield (lo, lo + w))
-    (1 to 4).foreach { i =>
-      val vs = values(Gen.Parameters.default.withSize(40), Seed(i.toLong)).getOrElse(Nil)
-      val is = intervals(Gen.Parameters.default.withSize(15), Seed(100L + i)).getOrElse(Nil)
-      val big = vs.zipWithIndex.map { case (v, id) => (id.toLong, v) }.toDF("id", "v")
-      val small = is.zipWithIndex.map { case ((lo, hi), id) => (id.toLong, lo, hi) }
-        .toDF("iid", "lo", "hi")
-      Seq(50.0, 333.0).foreach { w =>
-        val plain = big.join(small, $"v" >= $"lo" && $"v" < $"hi")
-          .select($"id", $"iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val binned = graft.ops.Scale.binnedRangeJoin(big, small, "v", "lo", "hi", w)
-          .select($"id", $"iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(binned === plain, s"seed=$i binWidth=$w")
-      }
-    }
-  }
-
   test("intersect ⊎ except partitions the left distinct input (property)") {
     import spark.implicits._
     val ss = samples(10)

@@ -3,32 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Scale
 
-/** Plan-level verification of the 100 TB scale patterns: bucketed joins
-  * eliminate both exchanges; salted aggregation/join give identical
-  * results to their unsalted forms while splitting hot keys. */
+/** The 100 TB scale patterns against their plain formulations: salted
+  * aggregation, the range-sort rank-picks, star connected components,
+  * hub-capped wedges, blocked prefix sums and Z-order keys. */
 class ScaleSpec extends SparkSpec {
-
-  test("bucketed fact-fact join plans with NO shuffle exchange") {
-    val o = spark.read.parquet(s"$sf/orders.parquet")
-    val l = spark.read.parquet(s"$sf/lineitem.parquet")
-      .withColumnRenamed("l_orderkey", "o_orderkey")
-    Scale.writeBucketed(o, "t_orders_b", "o_orderkey", 4)
-    Scale.writeBucketed(l, "t_lineitem_b", "o_orderkey", 4)
-    // force the fact⋈fact (sort-merge) path — at sf0.001 orders is small
-    // enough to broadcast, which is the right plan at THIS size but not
-    // the scale scenario under test
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = Scale.bucketedJoin(spark, "t_orders_b", "t_lineitem_b", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"), plan)
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(plan.contains("Bucketed: true"), plan)
-      val expected = o.join(l, "o_orderkey").count()
-      assert(joined.count() === expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-  }
 
   test("saltedAgg == direct groupBy for sum/count, any salt count") {
     import spark.implicits._
@@ -45,27 +23,6 @@ class ScaleSpec extends SparkSpec {
       assert(salted(k)._2 === n)
       assert(math.abs(salted(k)._1 - s) < 1e-6) // double sum order differs
     }
-  }
-
-  test("binnedRangeJoin == plain non-equi join, and plans an equi join") {
-    import spark.implicits._
-    val l = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select($"l_orderkey", $"l_linenumber", $"l_extendedprice")
-    val p = spark.read.parquet(s"$sf/part.parquet")
-      .select($"p_partkey",
-        ($"p_retailprice" - 200).as("lo"), ($"p_retailprice" + 200).as("hi"))
-    val plain = l.join(p, $"l_extendedprice" >= $"lo" && $"l_extendedprice" < $"hi")
-    val binned = Scale.binnedRangeJoin(l, p, "l_extendedprice", "lo", "hi", 500.0)
-    assert(binned.count() === plain.count())
-    // row-level equality on the join keys
-    val key = Seq("l_orderkey", "l_linenumber", "p_partkey")
-    assert(binned.select(key.map(col): _*).except(
-      plain.select(key.map(col): _*)).count() === 0)
-    assert(plain.select(key.map(col): _*).except(
-      binned.select(key.map(col): _*)).count() === 0)
-    // the whole point: no nested loop in the binned plan
-    val plan = binned.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
   }
 
   test("rankPick returns exactly the requested ranks' values per group") {
@@ -170,6 +127,24 @@ class ScaleSpec extends SparkSpec {
     // and below the cap the same call succeeds
     assert(Scale.rankPick(spark, wide, "g", "v", n => Seq(1L),
       maxGroups = 64).count() === 50L)
+  }
+
+  test("rankPickBy refuses precounted counts that disagree with the sorted frame") {
+    import spark.implicits._
+    val df = Seq(("a", Some(1.0)), ("a", Some(2.0)), ("b", Some(3.0)),
+      ("b", None)).toDF("g", "v").repartition(3)
+    // the null measure drops before counting: b has ONE clean row
+    val clean = Seq("a" -> 2L, "b" -> 1L)
+    assert(Scale.rankPickBy(spark, df, "g", "v", (_, n) => Seq(n),
+      precounted = Some(clean)).count() === 2L)
+    // a miscount, a missing group and a driver-side re-order all fail
+    Seq(Seq("a" -> 2L, "b" -> 2L), Seq("a" -> 2L), clean.reverse).foreach { pre =>
+      val e = intercept[IllegalArgumentException] {
+        Scale.rankPickBy(spark, df, "g", "v", (_, n) => Seq(n),
+          precounted = Some(pre))
+      }
+      assert(e.getMessage.contains("cross-check failed"), pre.toString)
+    }
   }
 
   test("starCC labels == union-find ground truth: hub, chain, random, cliques") {
@@ -277,17 +252,6 @@ class ScaleSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(actual === expected, s"span=$span")
     }
-  }
-
-  test("saltedJoin == plain join row-for-row") {
-    import spark.implicits._
-    val l = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select($"l_orderkey", $"l_quantity")
-    val o = spark.read.parquet(s"$sf/orders.parquet")
-      .select($"o_orderkey", $"o_orderstatus")
-    val plain = l.join(o, $"l_orderkey" === $"o_orderkey").count()
-    val salted = Scale.saltedJoin(l, o, "l_orderkey", "o_orderkey", salts = 4).count()
-    assert(salted === plain)
   }
 
   test("zOrderKey: every 2^(2k)-aligned z-range is an exact 2^k × 2^k tile") {

@@ -105,18 +105,28 @@ def check(sf, out, only):
     print(f"== {sf}: {n_pass} pass, {n_fail} fail ==")
     return n_pass, n_fail
 
+def driver_mem():
+    """The forked JVM's heap when SPARK_DRIVER_MEM is unset: half of
+    MemTotal, clamped to 2-8 GB (the ScalaTest run's rule)."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return f"{min(8, max(2, kb // 2097152))}g"
+
 def gate(only):
     """Verify + compare at every fixture scale (the round-9 three-tier
-    gate). Query subset args pass through to both Verify and compare."""
+    gate). Query subset args pass through to both Verify and compare.
+    Verify runs at SPARK_GRAFT_CPUS if set, else every core of the box."""
+    env = dict(os.environ)
+    env.setdefault("SPARK_DRIVER_MEM", driver_mem())
+    cpus = env.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     total_fail = 0
     for sf in GATE_SFS:
         tag = sf.rstrip("/").rsplit("/", 1)[-1]
         out = f"/tmp/verify_gate_{tag}"
-        cpus = "16" if tag == "sf0.1" else "8"
         args = " ".join(sorted(only))
         cmd = f'runMain graft.Verify {sf} {out}' + (f" {args}" if args else "")
-        print(f"-- {tag}: {cmd} (cpus={cpus})")
-        env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
+        print(f"-- {tag}: {cmd} (cpus={cpus}, "
+              f"heap={env['SPARK_DRIVER_MEM']})")
         r = subprocess.run(["sbt", "-batch", cmd], env=env,
                            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
         if r.returncode != 0:
