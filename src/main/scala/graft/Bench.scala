@@ -37,9 +37,9 @@ object Bench {
     // an explicitly timed SHARED cost. Without this the alphabetically
     // first query touching each family absorbs the whole pipeline
     // rebuild (r4: q_corpus_report billed 13 s for two tiny aggregates),
-    // so per-query numbers don't mean what they say. At 100 TB these
-    // intermediates are a once-per-ingest bucketed table write, not a
-    // per-query cost — timing them as one line item matches that shape.
+    // so per-query numbers don't mean what they say. These intermediates
+    // are a per-session shared cost, not a per-query cost — timing them
+    // as one line item matches that shape.
     val tw0 = System.nanoTime()
     // memo keys carry a `|<dir>` suffix (one entry per sf dir); the
     // bench session only ever touches $sfDir, so drop it for display

@@ -1340,20 +1340,19 @@ object Joins {
       |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   /** Derived partsupp relation — the fixture ships no partsupp table,
-    * so the (part, supplier) pairs OBSERVED in lineitem become the
-    * supply catalog, with availqty/supplycost as pure-integer functions
-    * of the keys that both engines derive identically (no engine hash):
+    * so the DISTINCT (part, supplier) pairs OBSERVED in lineitem become
+    * the supply catalog, with availqty/supplycost as pure-integer
+    * functions of the keys that both engines derive identically (no
+    * engine hash):
     *   availqty      = (partkey·37 + suppkey·17) mod 9999 + 1
     *   supplycost_c  = (partkey·13 + suppkey·7) mod 9000 + 10000 cents
     * This preserves the JOIN TOPOLOGY and aggregation semantics of the
     * partsupp-dependent TPC-H shapes (Q11/Q16/Q20) without inventing
-    * untracked data. Mirrored verbatim in each oracle's `ps` CTE. */
-  /** Derived partsupp (the fixture set has no partsupp table; keys are
-    * the DISTINCT lineitem (part, supp) pairs with deterministic
-    * availqty/supplycost) — memoized: the distinct is a full lineitem
-    * shuffle and q_tpch_q11/q16/q20 each rebuilt it. */
+    * untracked data. Mirrored verbatim in each oracle's `ps` CTE.
+    * Memoized: the distinct is a full lineitem shuffle and
+    * q_tpch_q11/q16/q20 each rebuilt it. */
   private def partsupp(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "partsupp") {
+    memoized(s, dir, "partsupp") {
       import s.implicits._
       Tables.lineitem(s, dir)
         .select($"l_partkey".as("ps_partkey"), $"l_suppkey".as("ps_suppkey"))
@@ -1483,48 +1482,20 @@ object Joins {
       |  WHERE p_name LIKE 'red%' AND ps_availqty * 2 > qty)
       |ORDER BY s_suppkey""".stripMargin)
 
-  /** Persisted basket-family lineages, memoized per (session, dir) —
-    * the TextDedup/TextOps discipline: q_basket_lift and
-    * q_item_similarity consumed IDENTICAL basket aggregation + pair
+  /** Persisted basket-family lineages (and [[partsupp]]), memoized per
+    * (session, dir) — the TextDedup/TextOps discipline: q_basket_lift
+    * and q_item_similarity consumed IDENTICAL basket aggregation + pair
     * count + per-part support plans, each rebuilt per query (the
     * (pa, pb) pair shuffle is the family's dominant cost). One
-    * materialization per session; at 100 TB the basket table is a
-    * once-per-ingest bucketed write. */
-  private val sessionMemo = new graft.util.SessionMemo(onHit = { hit =>
-    if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) hit.persist()
-    hit
-  }, persistedLineage = true, name = "joins")
-  private def memoized(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    sessionMemo(s, s"$key|$dir")(build.persist())
-
-  /** [[memoized]] + the cross-session parquet cache (VERDICT r10
-    * item 5): the basket family and the derived partsupp relation are
-    * deterministic functions of `lineitem` — at 100 TB they are
-    * once-per-ingest bucketed-table writes, and locally the basket pair
-    * shuffle dominated every bench warm (20 s of the 35 s r10 close),
-    * so sessions after the first replay a parquet scan instead. NOTE:
-    * on a COLD cache this executes the build at DataFrame-construction
-    * time (the disk publish is eager); plan-only callers opt out via
-    * `graft.diskMemo=false` (PlanSpec does). The cache key folds in
-    * this object's and the Tables loaders' BYTECODE, so editing the
-    * basket/partsupp logic re-keys every entry by construction
-    * (VERDICT r11 item 2). `bucket` publishes an entry bucketed+sorted
-    * on its consumer-join key (VERDICT r11 item 4). */
-  private val buildLogic = Seq[Class[_]](Joins.getClass,
-    classOf[graft.functions.PackedPairs], graft.util.Tables.getClass)
-  private def memoizedDisk(s: SparkSession, dir: String, key: String,
-      bucket: Option[(Int, Seq[String])] = None)(
-      build: => DataFrame): DataFrame =
-    memoized(s, dir, key) {
-      graft.util.FixtureCache.parquetBacked(s, dir, key,
-        inputs = Seq("lineitem"), logic = buildLogic,
-        buckets = bucket)(build)
-    }
+    * materialization per session ([[graft.util.SessionMemo]]). */
+  private val lineages = graft.util.SessionMemo.lineages("joins")
+  private def memoized(s: SparkSession, dir: String, key: String,
+      partitionBy: Option[String] = None)(build: => DataFrame): DataFrame =
+    lineages(s, s"$key|$dir", partitionBy)(build)
 
   /** Per-order DISTINCT sorted item sets — ONE orderkey shuffle. */
   private def baskets(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "baskets") {
+    memoized(s, dir, "baskets") {
       import s.implicits._
       Tables.lineitem(s, dir)
         .groupBy($"l_orderkey")
@@ -1533,16 +1504,17 @@ object Joins {
 
   /** Per-part order support from the basket lineage. */
   private def basketPerPart(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "basketPerPart") {
+    memoized(s, dir, "basketPerPart") {
       import s.implicits._
       baskets(s, dir).select(explode($"ps").as("pk"))
         .groupBy($"pk").agg(count(lit(1)).as("n_p"))
     }
 
   /** Co-occurrence pair counts (pa < pb) — the family's dominant
-    * shuffle, shared by lift and similarity. */
+    * shuffle, shared by lift and similarity; persisted hash-partitioned
+    * on `pa`, the key of both consumers' first supports join. */
   private def basketPairCounts(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "basketPairCounts", bucket = Some((graft.util.Config.cacheBuckets, Seq("pa")))) {
+    memoized(s, dir, "basketPairCounts", Some("pa")) {
       import s.implicits._
       basketPairs(s, baskets(s, dir))
         .groupBy($"pa", $"pb")
@@ -1593,7 +1565,7 @@ object Joins {
       // Catalyst broadcasts them anyway (under threshold), and at
       // catalog scale — where a billion-item perPart is NOT
       // broadcastable — the planner falls back to SMJ on pa against the
-      // BUCKETED cached pair table with no pair-side exchange (PlanSpec
+      // pa-partitioned cached pair table with no pair-side exchange (PlanSpec
       // pins that shape with broadcast disabled). The 1-row nOrders
       // keeps its hint: that is the documented scalar-assembly pattern.
       val perPart = basketPerPart(s, dir)
@@ -1638,7 +1610,7 @@ object Joins {
       val perPart = basketPerPart(s, dir)
       // unhinted supports joins — same reasoning as q_basket_lift:
       // Catalyst broadcasts at fixture scale, SMJ-on-pa over the
-      // bucketed pair table when perPart outgrows the threshold
+      // pa-partitioned pair table when perPart outgrows the threshold
       basketPairCounts(s, dir)
         .filter($"n_ab" >= 2)
         .join(perPart.select($"pk".as("pa"), $"n_p".as("n_a")), "pa")

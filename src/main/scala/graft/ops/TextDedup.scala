@@ -23,60 +23,15 @@ import org.apache.spark.sql.functions._
   */
 object TextDedup {
 
-  /** Persisted intermediates memoized per (session, dir): repeated query
-    * invocations in one session (Verify runs every query; several share
-    * the shingle/signature lineage) reuse ONE cached DataFrame handle
-    * instead of re-calling persist() per invocation (which re-registers
-    * with the CacheManager and warns "already cached"). On a hit after
-    * spark.catalog.clearCache() (Bench between passes) the entry is
-    * re-persisted so the lineage is shared again. Stopped sessions are
-    * evicted by the shared [[graft.util.SessionMemo]]. */
-  private val sessionMemo = new graft.util.SessionMemo(onHit = { hit =>
-    if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) hit.persist()
-    hit
-  }, persistedLineage = true, name = "dedup")
-  private def memoized(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    sessionMemo(s, s"$key|$dir")(build.persist())
-
-  /** [[memoized]] + a cross-session parquet cache (VERDICT r10 item 5):
-    * the heavy dedup intermediates (LSH candidates, verified pairs, the
-    * CC canonical assignment, the oriented-triangle set) are
-    * deterministic functions of `documents`, so they materialize to
-    * disk ONCE per fixture — the local analog of the once-per-ingest
-    * bucketed-table write promised at 100 TB — and later sessions
-    * (Verify, Bench, every test JVM) replay a parquet scan instead of
-    * the whole chain. NOTE: on a COLD cache this executes the build at
-    * DataFrame-construction time (the disk publish is eager); plan-only
-    * callers opt out via `graft.diskMemo=false` (PlanSpec does).
-    *
-    * Staleness is structural, not disciplinary: the cache key folds in
-    * the BYTECODE of the classes that implement these builds (this
-    * object, the fused hash kernels it calls, and the Tables loaders) —
-    * editing any of them re-keys every entry, so a stale entry can
-    * never serve recompiled logic (VERDICT r11 item 2).
-    *
-    * `bucket = Some((n, cols))` publishes the entry bucketed+sorted on
-    * its consumer-join key (VERDICT r11 item 4): the pair/assignment
-    * tables are re-joined on doc ids by every consumer, so the publish
-    * pays the hash shuffle ONCE and each consumer SortMergeJoin reads
-    * the cached side with no Exchange and no Sort (PlanSpec pins it). */
-  private val buildLogic = Seq[Class[_]](
-    TextDedup.getClass,
-    graft.functions.HashKernels.getClass,
-    classOf[graft.functions.ShingleHash],
-    classOf[graft.functions.WordShingleHashes],
-    classOf[graft.functions.WindowGramHashes],
-    classOf[graft.functions.ArrayIntersectCard],
-    graft.util.Tables.getClass)
-  private def memoizedDisk(s: SparkSession, dir: String, key: String,
-      bucket: Option[(Int, Seq[String])] = None)(
-      build: => DataFrame): DataFrame =
-    memoized(s, dir, key) {
-      graft.util.FixtureCache.parquetBacked(s, dir, key,
-        inputs = Seq("documents"), logic = buildLogic,
-        buckets = bucket)(build)
-    }
+  /** Persisted intermediates memoized per (session, dir), shared by
+    * every query family that reads them ([[graft.util.SessionMemo]]).
+    * The pair and assignment lineages are re-joined on doc ids by every
+    * consumer, so they are persisted hash-partitioned on that key: the
+    * shuffle is paid once per session, never per consumer query. */
+  private val lineages = graft.util.SessionMemo.lineages("dedup")
+  private def memoized(s: SparkSession, dir: String, key: String,
+      partitionBy: Option[String] = None)(build: => DataFrame): DataFrame =
+    lineages(s, s"$key|$dir", partitionBy)(build)
 
   /** Vocabulary is tiny (31 words at sf0.01) so unigram sets degenerate;
     * 3-word shingles give meaningful document fingerprints. */
@@ -203,9 +158,9 @@ object TextDedup {
     * consume the pair set (near-dup verify, ngram, containment,
     * consensus, hamming, PageRank, triangles) and the band self-join +
     * distinct is the priciest step after shingling — one materialization
-    * per session; a bucketed table write at 100 TB. */
+    * per session, hash-partitioned on `da`, the key consumers join on. */
   private def lshCandidates(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "lshCandidates", bucket = Some((graft.util.Config.cacheBuckets, Seq("da")))) {
+    memoized(s, dir, "lshCandidates", Some("da")) {
     import s.implicits._
     val sig = signatures(s, dir)
     val bands = (0 until NumHashes / BandRows).map { bnd =>
@@ -290,7 +245,7 @@ object TextDedup {
     * same accepted risk class as every hash-keyed tier, and the oracle
     * replays the identical hash so both engines fold identically. */
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "verifiedPairs", bucket = Some((graft.util.Config.cacheBuckets, Seq("da")))) {
+    memoized(s, dir, "verifiedPairs", Some("da")) {
       import s.implicits._
       val sets = hashedShingles(s, dir).select($"doc_id", $"hs".as("ss"))
       val cand = lshCandidates(s, dir)
@@ -424,7 +379,7 @@ object TextDedup {
     * convergence actions run once per session; the stored plan is the
     * converged linear lineage and replays without re-iterating. */
   private def canonicalAssign(s: SparkSession, dir: String): DataFrame =
-    memoizedDisk(s, dir, "canonicalAssign", bucket = Some((graft.util.Config.cacheBuckets, Seq("doc_id")))) {
+    memoized(s, dir, "canonicalAssign", Some("doc_id")) {
       import s.implicits._
       val pairs = verifiedPairs(s, dir).select($"da", $"db")
       // undirected: propagate min in both directions
@@ -718,7 +673,7 @@ object TextDedup {
   private def winnowSketch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    memoizedDisk(s, dir, "winnowSketch") {
+    memoized(s, dir, "winnowSketch") {
       val C = 1048576L // position packing radix: 2^20 >> max gram count
       val docs = Tables.documents(s, dir)
       val w = split($"text", " ")
@@ -1264,7 +1219,7 @@ object TextDedup {
     * holds one row per ACTUAL triangle, the same order of magnitude as
     * the verified-pair cache it sits next to. */
   private def orientedTriangles(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = memoizedDisk(s, dir, "orientedTriangles") {
+      dir: String): DataFrame = memoized(s, dir, "orientedTriangles") {
     import s.implicits._
     val pairs = lshCandidates(s, dir)
     val edges = pairs.select($"da".as("u"), $"db".as("v"))

@@ -26,13 +26,10 @@ object TextOps {
     * N times in one plan tree re-executes its lineage N times unless
     * persisted, and per-invocation persist() calls would re-register
     * with the CacheManager. */
-  private val sessionMemo = new graft.util.SessionMemo(onHit = { hit =>
-    if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) hit.persist()
-    hit
-  }, persistedLineage = true, name = "text")
+  private val lineages = graft.util.SessionMemo.lineages("text")
   private def memoized(s: org.apache.spark.sql.SparkSession, dir: String,
       key: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    sessionMemo(s, s"$key|$dir")(build.persist())
+    lineages(s, s"$key|$dir")(build)
 
   /** Word frequencies per language — split + explode (UDTF surface) +
     * grouped counts; top-100 by (lang, count desc, word). */

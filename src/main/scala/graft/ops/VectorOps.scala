@@ -213,23 +213,10 @@ object VectorOps {
       |       CAST(clabel = true_label AS BIGINT) AS correct
       |FROM r WHERE rk = 1 ORDER BY vec_id""".stripMargin)
 
-  /** Embedding-cosine near-duplicate pairs — TWO-STAGE (the scalable
-    * contract, same shape as TextDedup's MinHash→LSH→verify): stage 1
-    * assigns every vector to its 2 nearest IVF seed cells (centroids =
-    * vec_id < 10, cos desc / cid asc tie-break — the q_sim_ivf
-    * machinery) and generates candidate pairs by a self EQUI-join on the
-    * cell id; stage 2 verifies exact cosine ≥ 0.35 on candidates only.
-    * The oracle replays both stages, so the result is the declared
-    * two-stage semantic — never a corpus-wide O(n²) pair stream (the
-    * r02 all-pairs BNLJ); PlanSpec asserts the candidate join is equi on
-    * the cell key. Measured on this corpus (isotropic noise — max
-    * pairwise cos ~0.5, so 0.35 sits in the random-similarity tail, the
-    * regime where NO sublinear candidate scheme can reach recall 1):
-    * candidates ≈ 37% of all pairs, recall ≈ 0.65-0.73 vs brute force
-    * (floor pinned in RecallSpec). On a real near-dup corpus (clusters
-    * at cos ≥ 0.9) the same pipeline approaches recall 1; ncent/nprobe
-    * are the tuning knobs. At 100 TB the cell id is the partition key
-    * and centroids come from an offline k-means refinement. */
+  /** Persisted lineages memoized per (session, dir)
+    * ([[graft.util.SessionMemo]]). */
+  private val lineages = graft.util.SessionMemo.lineages("vec")
+
   /** Verified embedding near-dup pairs (ida < idb, exact cos ≥ 0.35 on
     * the IVF candidate set) — dedup_embed's stage-2 output, extracted
     * so q_semantic_clusters can ride the same lineage, and MEMOIZED per
@@ -237,9 +224,7 @@ object VectorOps {
     * builder) would otherwise each re-run the probe + verify joins —
     * the lshCandidates discipline applied to the embedding tier. */
   private def semanticPairs(s: SparkSession, dir: String): DataFrame =
-    sessionMemo(s, s"semanticPairs|$dir") {
-      semanticPairsBuild(s, dir).persist()
-    }
+    lineages(s, s"semanticPairs|$dir")(semanticPairsBuild(s, dir))
 
   private def semanticPairsBuild(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -291,6 +276,23 @@ object VectorOps {
       |  WHERE list_sum(list_transform(list_zip(a.ve, b.ve), p -> p[1]*p[2]))
       |        / (a.nm * b.nm) >= 0.35)""".stripMargin
 
+  /** Embedding-cosine near-duplicate pairs — TWO-STAGE (the scalable
+    * contract, same shape as TextDedup's MinHash→LSH→verify): stage 1
+    * assigns every vector to its 2 nearest IVF seed cells (centroids =
+    * vec_id < 10, cos desc / cid asc tie-break — the q_sim_ivf
+    * machinery) and generates candidate pairs by a self EQUI-join on the
+    * cell id; stage 2 verifies exact cosine ≥ 0.35 on candidates only.
+    * The oracle replays both stages, so the result is the declared
+    * two-stage semantic — never a corpus-wide O(n²) pair stream (the
+    * r02 all-pairs BNLJ); PlanSpec asserts the candidate join is equi on
+    * the cell key. Measured on this corpus (isotropic noise — max
+    * pairwise cos ~0.5, so 0.35 sits in the random-similarity tail, the
+    * regime where NO sublinear candidate scheme can reach recall 1):
+    * candidates ≈ 37% of all pairs, recall ≈ 0.65-0.73 vs brute force
+    * (floor pinned in RecallSpec). On a real near-dup corpus (clusters
+    * at cos ≥ 0.9) the same pipeline approaches recall 1; ncent/nprobe
+    * are the tuning knobs. At 100 TB the cell id is the partition key
+    * and centroids come from an offline k-means refinement. */
   private val dedupEmbed = QueryDef(
     (s, dir) => {
       import s.implicits._
@@ -300,6 +302,24 @@ object VectorOps {
     },
     oracleSemanticPairs +
       "\nSELECT ida, idb, ROUND(cos, 4) AS cos FROM sem ORDER BY ida, idb")
+
+  /** starCC labels over the verified embedding pairs, memoized per
+    * (session, dir). Memoized DESPITE having a single consumer
+    * (q_semantic_clusters) — the exception to the r9 single-consumer
+    * prune, same rationale as TextDedup.canonicalAssign: the CC label
+    * assignment is an expensive ITERATIVE artifact (~11 s of starCC rounds at sf0.1 — measured
+    * when briefly unmemoized: every invocation re-paid the full build,
+    * since localCheckpoints don't reuse across invocations), and a
+    * one-off per-session build is exactly the cost shape the memo's
+    * warm line item represents.
+    * The prune stays in force for the cheap single-pass unigram/ngram
+    * lineages only. */
+  private def semanticLabels(s: SparkSession, dir: String): DataFrame =
+    lineages(s, s"semanticLabels|$dir") {
+      import s.implicits._
+      Scale.starCC(semanticPairs(s, dir).select($"ida", $"idb"),
+        "ida", "idb")
+    }
 
   /** Corpus-level SEMANTIC dedup (the SemDeDup shape, Abbas et al.
     * 2023, public): connected components over the verified
@@ -313,31 +333,6 @@ object VectorOps {
     * IVF-bucketed candidate stage bounds it — never all-pairs), via
     * [[Scale.starCC]]'s skew-resistant min-label propagation; the
     * final join is a left join of labels onto vector ids. */
-  /** starCC labels over the verified embedding pairs, memoized per
-    * (session, dir) — the TextDedup.canonicalAssign discipline: the CC
-    * fixpoint is tens of tiny jobs (iteration × convergence checks),
-    * so its one-off cost belongs in the session warm, not per query. */
-  private val sessionMemo = new graft.util.SessionMemo(onHit = { hit =>
-    if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) hit.persist()
-    hit
-  }, persistedLineage = true, name = "vec")
-  /** Memoized DESPITE having a single consumer (q_semantic_clusters) —
-    * the exception to the r9 single-consumer prune, same rationale as
-    * TextDedup.canonicalAssign: the CC label assignment is an expensive
-    * ITERATIVE artifact (~11 s of starCC rounds at sf0.1 — measured
-    * when briefly unmemoized: every invocation re-paid the full build,
-    * since localCheckpoints don't reuse across invocations) and at
-    * production scale is a once-per-ingest bucketed table write, which
-    * is exactly the cost shape the memo's warm line item represents.
-    * The prune stays in force for the cheap single-pass unigram/ngram
-    * lineages only. */
-  private def semanticLabels(s: SparkSession, dir: String): DataFrame =
-    sessionMemo(s, s"semanticLabels|$dir") {
-      import s.implicits._
-      Scale.starCC(semanticPairs(s, dir).select($"ida", $"idb"),
-        "ida", "idb").persist()
-    }
-
   private val semanticClusters = QueryDef(
     (s, dir) => {
       import s.implicits._

@@ -15,9 +15,6 @@ package graft.util
   * | SPARK_GRAFT_CPUS      | local[n] cores = shuffle partitions | the box's core count (the test session is fixed at 4) |
   * | (constant) [[aqe]]    | adaptive execution (every [[Session]]) | true |
   * | SPARK_GRAFT_BENCH_OUT | full bench-JSON output path         | bench_out.json |
-  * | SPARK_GRAFT_DISK_MEMO | cross-session parquet cache for heavy deterministic fixture intermediates ([[FixtureCache]]) | true |
-  * | SPARK_GRAFT_CACHE_DIR | FixtureCache root | $tmpdir/graft_fixture_cache |
-  * | SPARK_GRAFT_CACHE_BUCKETS | bucket count for FixtureCache bucketed publishes (caps the cached side's scan parallelism — see [[FixtureCache]] sizing rule) | 8 |
   * | (constant) [[codegenCacheEntries]] | spark.sql.codegen.cache.maxEntries (sized to the declared query surface) | 4000 |
   * | (constant) [[cteLocalAnchorRows]] | recursive-CTE LocalRelation fast-path anchor-row ceiling | 1000000 |
   */
@@ -36,16 +33,6 @@ object Config {
 
   def benchOut: String =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-
-  /** Bucket count for [[FixtureCache]] bucketed publishes. System
-    * property first (tests flip it per-JVM), then env. The count is
-    * part of the cache fingerprint, so changing it re-keys entries —
-    * it can never serve a table whose CLUSTERED BY spec disagrees with
-    * its files. */
-  def cacheBuckets: Int =
-    sys.props.get("graft.cacheBuckets")
-      .orElse(sys.env.get("SPARK_GRAFT_CACHE_BUCKETS"))
-      .map(_.trim.toInt).getOrElse(8)
 
   /** Whole-stage-codegen class-cache capacity
     * (`spark.sql.codegen.cache.maxEntries`, Spark default 100). The

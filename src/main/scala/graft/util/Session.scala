@@ -24,10 +24,8 @@ object Session {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.adaptive.enabled", Config.aqe)
       .config("spark.sql.session.timeZone", "UTC")
-      // deterministic bucket-aware scans for the FixtureCache bucketed
-      // tables (and g_bkt_*): the session-memo persist freezes the first
-      // planned scan, so auto mode would freeze whichever shape the
-      // first-touching query preferred
+      // deterministic bucket-aware scans for q_bucketed_join's g_bkt_*
+      // tables: auto mode would pick the scan shape per query
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // ~240 queries × ~8 codegen units ≈ 2000 generated classes per

@@ -1,9 +1,24 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
-/** Per-(session, key) DataFrame memo shared by Tables (scan plans) and
-  * TextDedup (persisted lineages).
+/** Per-(session, key) DataFrame memo, in two kinds: Tables' plan-only
+  * scan memo ([[SessionMemo.plans]]) and the ops modules' persisted
+  * lineages ([[SessionMemo.lineages]]).
+  *
+  * A persisted-lineage entry is `build.persist()`, so repeated query
+  * invocations in one session share ONE cached DataFrame handle instead
+  * of re-calling persist() per invocation (which re-registers with the
+  * CacheManager and warns "already cached"). On a hit after
+  * `spark.catalog.clearCache()` (Bench between passes) the entry is
+  * re-persisted so the lineage is shared again. An entry given a
+  * `partitionBy` key is persisted hash-partitioned and sorted on it:
+  * the lineage pays its hash shuffle once per session, and a consumer
+  * SortMergeJoin on that key reads the cached side with no Exchange and
+  * no Sort (PlanSpec pins it). Its partition count is
+  * `spark.sql.shuffle.partitions`, like every other shuffle.
   *
   * A WeakHashMap keyed by session is NOT enough on its own: a DataFrame
   * strongly references its SparkSession (via QueryExecution), so map
@@ -12,10 +27,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * evicts entries whose session has been stopped; session counts are
   * tiny (one per Verify/Bench/test JVM), so the sweep is O(sessions).
   */
-private[graft] final class SessionMemo(
-    onHit: DataFrame => DataFrame = identity,
-    persistedLineage: Boolean = false,
-    name: String = "") {
+private[graft] final class SessionMemo private (
+    persistedLineage: Boolean, name: String) {
 
   SessionMemo.register(this)
 
@@ -35,27 +48,33 @@ private[graft] final class SessionMemo(
         // deterministic (key-sorted) order so warm-time variance across
         // runs reflects the box, never HashMap iteration order
         m.entrySet().asScala.toSeq.sortBy(_.getKey).map { e =>
-          val k = if (name.isEmpty) e.getKey else s"$name.${e.getKey}"
-          k -> e.getValue
+          s"$name.${e.getKey}" -> e.getValue
         }
       }
     }
 
-  def apply(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+  /** `key`'s frame in `s`, building it on the first call. A plan memo
+    * stores `build` as is (and ignores `partitionBy`); a lineage memo
+    * stores it persisted, first hash-partitioned and sorted on
+    * `partitionBy` when given. */
+  def apply(s: SparkSession, key: String, partitionBy: Option[String] = None)(
+      build: => DataFrame): DataFrame =
     memo.synchronized {
       val it = memo.keySet().iterator()
       while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-      val perSession = {
-        val m = memo.get(s)
-        if (m != null) m
-        else {
-          val m2 = new java.util.HashMap[String, DataFrame]()
-          memo.put(s, m2); m2
-        }
-      }
+      val perSession = memo.computeIfAbsent(s, _ => new java.util.HashMap())
       val hit = perSession.get(key)
-      if (hit != null) onHit(hit)
-      else { val df = build; perSession.put(key, df); df }
+      if (hit != null) {
+        if (persistedLineage && hit.storageLevel == StorageLevel.NONE) hit.persist()
+        hit
+      } else {
+        val df =
+          if (!persistedLineage) build
+          else partitionBy.fold(build) { k =>
+            build.repartition(col(k)).sortWithinPartitions(col(k))
+          }.persist()
+        perSession.put(key, df); df
+      }
     }
 }
 
@@ -63,6 +82,13 @@ private[graft] object SessionMemo {
   private val instances = scala.collection.mutable.ArrayBuffer[SessionMemo]()
   private def register(m: SessionMemo): Unit =
     instances.synchronized { instances += m }
+
+  /** A memo of unpersisted plans (Tables' scans). */
+  def plans(): SessionMemo = new SessionMemo(false, "")
+
+  /** A memo of persisted lineages; `name` prefixes its keys in the
+    * bench warm breakdown. */
+  def lineages(name: String): SessionMemo = new SessionMemo(true, name)
 
   /** Re-persist and MATERIALIZE every persisted-lineage memo entry for
     * `s`. Benchmark hygiene: `spark.catalog.clearCache()` unpersists the
@@ -86,8 +112,7 @@ private[graft] object SessionMemo {
     val entries = instances.synchronized(instances.toList)
       .flatMap(_.persistedEntries(s))
     entries.foreach { case (_, df) =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persist()
+      if (df.storageLevel == StorageLevel.NONE) df.persist()
     }
     entries.map { case (key, df) =>
       val t0 = System.nanoTime()

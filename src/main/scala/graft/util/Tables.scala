@@ -18,7 +18,7 @@ object Tables {
     * to every caller is safe — this is the path-based analog of the
     * catalog's table-metadata cache. Stopped sessions are evicted on
     * access (see SessionMemo). */
-  private val memoized = new SessionMemo()
+  private val memoized = SessionMemo.plans()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     memoized(spark, s"$sfDir/$name") {

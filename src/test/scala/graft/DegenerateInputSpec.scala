@@ -24,6 +24,12 @@ class DegenerateInputSpec extends SparkSpec {
       }
     }
     assert(failed.isEmpty, failed.mkString("\n"))
+    // one document and one line item leave the memoized lshCandidates
+    // and basketPairCounts lineages EMPTY: their consumers run over an
+    // empty persisted (hash-partitioned) build and return no rows
+    Seq("q_dedup_near", "q_basket_lift").foreach { q =>
+      assert(SparkEntry.all(q).fn(spark, dir).count() === 0, q)
+    }
   }
 
   test("BPE train/encode degrade gracefully when the pair census is " +

@@ -108,10 +108,9 @@ class PlanSpec extends SparkSpec {
 
   test("q_dedup_ngram joins the pre-built candidate table back by doc id " +
     "— equi joins only, no pair enumeration") {
-    // since the FixtureCache the LSH candidate set reads as a prepared
-    // table (locally the parquet cache; at 100 TB the bucketed write),
-    // so the query-time plan is scan + two doc-id equi join-backs; the
-    // banding equi self-join itself is pinned on the BUILD below
+    // the LSH candidate set is a session-memo lineage, so the query-time
+    // plan is its cached scan + two doc-id equi join-backs; the banding
+    // equi self-join itself is pinned on the BUILD below
     val p = plan("q_dedup_ngram")
     val equiOnDoc = p.linesIterator.exists(l =>
       (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin") ||
@@ -122,8 +121,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_dedup_containment reuses the LSH candidate shape: equi joins only") {
-    // same pair space as q_dedup_near — candidates from the prepared
-    // candidate table, shingle-hash sets joined back by doc id; the
+    // same pair space as q_dedup_near — candidates from the memoized
+    // candidate set, shingle-hash sets joined back by doc id; the
     // directional divisions add no join or shuffle of their own
     val p = plan("q_dedup_containment")
     assert(!p.contains("BroadcastNestedLoopJoin") &&
@@ -135,95 +134,124 @@ class PlanSpec extends SparkSpec {
   }
 
   test("the LSH candidate BUILD is the banded (band, bucket) equi " +
-    "self-join — pinned with the disk cache off on a fresh fixture") {
-    // a fresh dir misses both the session memo and (with the prop off)
-    // the FixtureCache, so the plan inlines the real candidate build —
-    // the shape that must never degenerate to all-pairs
+    "self-join — pinned on a fresh fixture") {
+    // a fresh dir misses the session memo, so the plan carries the real
+    // candidate build inside its cached relation — the shape that must
+    // never degenerate to all-pairs
     val dir = java.nio.file.Files.createTempDirectory("graft_plan_lsh").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    sys.props("graft.diskMemo") = "false"
-    try {
-      val p = SparkEntry.all("q_dedup_ngram").fn(spark, dir)
-        .queryExecution.executedPlan.toString
-      val equiOnBand = p.linesIterator.exists(l =>
-        (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin") ||
-          l.contains("BroadcastHashJoin")) &&
-          l.contains("band") && l.contains("bucket"))
-      assert(equiOnBand, p)
-      assert(!p.contains("BroadcastNestedLoopJoin") &&
-        !p.contains("CartesianProduct"), p)
-    } finally sys.props.remove("graft.diskMemo"): Unit
+    val p = SparkEntry.all("q_dedup_ngram").fn(spark, dir)
+      .queryExecution.executedPlan.toString
+    val equiOnBand = p.linesIterator.exists(l =>
+      (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin") ||
+        l.contains("BroadcastHashJoin")) &&
+        l.contains("band") && l.contains("bucket"))
+    assert(equiOnBand, p)
+    assert(!p.contains("BroadcastNestedLoopJoin") &&
+      !p.contains("CartesianProduct"), p)
   }
 
-  test("q_corpus_report: the bucketed cached canonicalAssign joins back " +
-    "to documents with NO exchange on the cached side (VERDICT r11 item 4)") {
-    // fresh fixture + fresh cache root, disk memo ON: the test pays the
-    // one-off eager publish (the local once-per-ingest bucketed write),
-    // then pins the consumer shape — SortMergeJoin on doc_id whose
-    // cached side reads pre-bucketed, pre-sorted files
-    // (SelectedBucketsCount) with exactly ONE hashpartitioning(doc_id)
-    // exchange in the plan: the documents side. Broadcast disabled so
-    // fixture scale can't hide the 100 TB shape.
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_bkt").toString
-    spark.read.parquet(s"$sf/documents.parquet")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    sys.props("graft.cacheDir") =
-      java.nio.file.Files.createTempDirectory("graft_plan_bkt_root").toString
+  /** Pins a consumer SortMergeJoin on `key` against a memoized lineage
+    * persisted hash-partitioned on `key` (the one whose cached output
+    * has column `marker`): the cached child reaches its
+    * InMemoryTableScan through no ShuffleExchange and no Sort, and the
+    * other child has exactly `otherShuffles` exchanges hash-partitioning
+    * on `key`.
+    * Walks AQE's current physical plan of query `name` over a fresh
+    * copy of `table`, planned with broadcast disabled so fixture scale
+    * can't hide the large-scale shape. With `rewarm` the plan is taken
+    * after `clearCache` + `warmPersisted`, the bench's pass boundary. */
+  private def assertCachedSideUnshuffled(name: String, table: String,
+      key: String, marker: String, otherShuffles: Int,
+      rewarm: Boolean = false): Unit = {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_memo").toString
+    spark.read.parquet(s"$sf/$table.parquet")
+      .write.mode("overwrite").parquet(s"$dir/$table.parquet")
+    // the lineage is built (and re-warmed) under the session's own
+    // config, broadcast included, as the bench builds it
+    SparkEntry.all(name).fn(spark, dir).collect()
+    if (rewarm) {
+      spark.catalog.clearCache()
+      graft.util.SessionMemo.warmPersisted(spark): Unit
+    }
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val p = SparkEntry.all("q_corpus_report").fn(spark, dir)
-        .queryExecution.executedPlan.toString
-      val effective = p.indexOf("== Initial Plan ==") match {
-        case -1 => p
-        case i  => p.substring(0, i)
+      val root = SparkEntry.all(name).fn(spark, dir).queryExecution.executedPlan
+      val p = root match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
       }
-      assert(effective.contains("SortMergeJoin"), p.take(4000))
-      assert(effective.contains("SelectedBucketsCount"), p.take(4000))
-      assert("hashpartitioning\\(doc_id".r.findAllIn(effective).size === 1,
-        "only the documents side may shuffle on doc_id — the cached " +
-          "side is bucketed\n" + p.take(4000))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      sys.props.remove("graft.cacheDir"): Unit
-    }
+      def onKey(e: Seq[Expression]) =
+        e.exists { case a: Attribute => a.name == key; case _ => false }
+      // the operators from `n` down to the lineage's cached scan along a
+      // single-child chain, if `n` is that chain
+      def toCache(n: SparkPlan): Option[Seq[SparkPlan]] = n match {
+        case m: InMemoryTableScanExec
+            if m.relation.output.exists(_.name == marker) => Some(Nil)
+        case _ if n.children.size == 1 => toCache(n.children.head).map(n +: _)
+        case _ => None
+      }
+      val smjs = p.collect {
+        case j: SortMergeJoinExec if onKey(j.leftKeys) && onKey(j.rightKeys) => j
+      }
+      val pinned = smjs.flatMap { j =>
+        Seq(j.left -> j.right, j.right -> j.left).flatMap { case (c, o) =>
+          toCache(c).map(path => (path, o))
+        }
+      }
+      assert(pinned.size === 1, s"no single SMJ on $key over the cached " +
+        s"lineage\n$p")
+      val (path, other) = pinned.head
+      assert(!path.exists(n => n.isInstanceOf[ShuffleExchangeExec] ||
+        n.isInstanceOf[SortExec]),
+        s"the cached side is shuffled or sorted again\n$p")
+      val otherOnKey = other.collect {
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case h: HashPartitioning => onKey(h.expressions)
+          case _ => false
+        }) => e
+      }
+      assert(otherOnKey.size === otherShuffles, s"the other side must " +
+        s"shuffle on $key exactly $otherShuffles time(s)\n$p")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
   }
 
-  test("q_basket_lift: with broadcast disabled the bucketed cached pair " +
-    "table SMJs the per-part supports on pa with NO pair-side exchange " +
-    "(ADVICE r12: the non-broadcast consumer pin)") {
+  test("q_corpus_report: the memoized canonicalAssign, persisted " +
+    "hash-partitioned on doc_id, joins documents with NO exchange and " +
+    "NO sort on the cached side") {
+    assertCachedSideUnshuffled("q_corpus_report", "documents", "doc_id",
+      "canonical", otherShuffles = 1)
+  }
+
+  test("q_basket_lift: with broadcast disabled the memoized pair counts, " +
+    "persisted hash-partitioned on pa, SMJ the per-part supports with " +
+    "NO pair-side exchange") {
     // the catalog-scale shape: a billion-item perPart is not
-    // broadcastable, so the supports join must fall back to SMJ whose
-    // pair side reads the published buckets — pay the pair shuffle once
-    // at publish, never per consumer. Fresh fixture + fresh cache root,
-    // disk memo ON (the test pays the eager publish).
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_bkt2").toString
-    spark.read.parquet(s"$sf/lineitem.parquet")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    sys.props("graft.cacheDir") =
-      java.nio.file.Files.createTempDirectory("graft_plan_bkt2_root").toString
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val p = SparkEntry.all("q_basket_lift").fn(spark, dir)
-        .queryExecution.executedPlan.toString
-      val effective = p.indexOf("== Initial Plan ==") match {
-        case -1 => p
-        case i  => p.substring(0, i)
-      }
-      assert(effective.contains("SortMergeJoin"), p.take(4000))
-      assert(effective.contains("SelectedBucketsCount"), p.take(4000))
-      // Exactly ONE hashpartitioning(pa: the perPart supports side —
-      // the cached pair table side is bucketed. (The pb-side join and
-      // the 1-row nOrders broadcast are out of scope here.)
-      assert("hashpartitioning\\(pa".r.findAllIn(effective).size === 1,
-        "only the supports side may shuffle on pa — the cached pair " +
-          "side is bucketed\n" + p.take(4000))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      sys.props.remove("graft.cacheDir"): Unit
-    }
+    // broadcastable, so the supports join falls back to SMJ whose pair
+    // side reads the pa-partitioned cache — the pair shuffle is paid
+    // once per session, never per consumer. The supports side is the
+    // basketPerPart memo, already hash-partitioned on pk (= pa) by its
+    // own aggregate at the same partition count, so it needs no
+    // exchange either
+    assertCachedSideUnshuffled("q_basket_lift", "lineitem", "pa", "n_ab",
+      otherShuffles = 0)
+  }
+
+  test("after clearCache + warmPersisted (the bench's pass boundary) the " +
+    "cached sides still need no exchange") {
+    assertCachedSideUnshuffled("q_corpus_report", "documents", "doc_id",
+      "canonical", otherShuffles = 1, rewarm = true)
+    assertCachedSideUnshuffled("q_basket_lift", "lineitem", "pa", "n_ab",
+      otherShuffles = 0, rewarm = true)
   }
 
   test("q_dedup_substring runs the explode kernel once (keyed window, no join-back)") {
