@@ -257,12 +257,6 @@ object Bench {
     // (VERDICT r4) — record the budget each run actually had so a
     // future regression is diagnosable from the artifact alone
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
-    // kernel-registration telemetry (VERDICT r5 item 4): q_lang_id &
-    // friends pick the fused codegen kernels only when GraftExtensions
-    // actually registered them — record the branch the driver session
-    // took so a slow reading is attributable from the artifact alone
-    val kernelsLive = spark.catalog.functionExists("graft_char3grams") &&
-      spark.catalog.functionExists("graft_dot")
     val (storUsed, storMax) = {
       val s = spark.sparkContext.getExecutorMemoryStatus.values
       (s.map { case (mx, rem) => mx - rem }.sum / 1e9,
@@ -278,7 +272,6 @@ object Bench {
         s""""stream_rows":$streamRows,"stream_rows_per_sec":${f4(streamRps)},""" +
         s""""steal_pct":${f4(stealPct)},""" +
         s""""heap_gb":${f4(heapGb)},""" +
-        s""""kernels_registered":$kernelsLive,""" +
         s""""spark_version":"${spark.version}",""" +
         s""""storage_used_gb":${f4(storUsed)},"storage_max_gb":${f4(storMax)}}"""
     println(json)
@@ -309,7 +302,7 @@ object Bench {
           .map { case (k, v) => s"\"" + k + "\":" + f4(v) }
           .mkString("{", ",", "}")},""" +
         s""""steal_pct":${f4(stealPct)},""" +
-        s""""heap_gb":${f4(heapGb)},"kernels_registered":$kernelsLive,""" +
+        s""""heap_gb":${f4(heapGb)},""" +
         s""""spark_version":"${spark.version}","full_map":"$out","""
     val budget = 1700
     val picked = scala.collection.mutable.ArrayBuffer[String]()

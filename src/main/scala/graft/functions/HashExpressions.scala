@@ -7,13 +7,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen string-hash kernels for the dedup/fingerprint family
-  * (SURVEY.md §2.9, §7.5). Semantically identical to the built-in
-  * higher-order-function formulations in TextDedup (and to the DuckDB
-  * oracle SQL): plain integer arithmetic over CODE POINTS. Both Spark and
-  * DuckDB define `length`/`substr`/`ascii` over code points (not UTF-16
-  * units or bytes — `ascii('𝄞')` = 119070 in both engines), and the
-  * kernels iterate the Java String with codePointAt/charCount, so all
-  * three paths agree exactly even on supplementary-plane text
+  * (SURVEY.md §2.9, §7.5). Semantically identical to the DuckDB oracle
+  * SQL and to the built-in higher-order-function folds ExpressionSpec
+  * checks them against: plain integer arithmetic over CODE POINTS. Both
+  * Spark and DuckDB define `length`/`substr`/`ascii` over code points
+  * (not UTF-16 units or bytes — `ascii('𝄞')` = 119070 in both engines),
+  * and the kernels iterate the Java String with codePointAt/charCount,
+  * so all three paths agree exactly even on supplementary-plane text
   * (ExpressionSpec pins the mixed-script equality).
   */
 object HashKernels {
@@ -28,29 +28,6 @@ object HashKernels {
     while (i < str.length) {
       val cp = str.codePointAt(i)
       acc = (acc * 31L + cp) % P
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
-  /** Positional shingle hash: Σ codepoint_i · 13^(i-1) over the first
-    * 12 code points — TextDedup.shingleHash's formula. Every intermediate
-    * fits in int64 even at the Unicode maximum: Σ 0x10FFFF·13^i for
-    * i = 0..11 = 0x10FFFF·(13^12−1)/12 ≈ 2.2e18 < 2^63. The powers
-    * themselves (13^11 < 2^53) are exact doubles, so the fallback/oracle's
-    * `pow(13, i−1)::BIGINT` replay is exact; the codepoint·power product
-    * is integer arithmetic on all paths, never a double. */
-  def shingleHash(s: UTF8String): Long = {
-    val str = s.toString
-    var acc = 0L
-    var i = 0
-    var pos = 0
-    var pw = 1L
-    while (i < str.length && pos < 12) {
-      val cp = str.codePointAt(i)
-      acc += cp * pw
-      pw *= 13L
-      pos += 1
       i += Character.charCount(cp)
     }
     acc
@@ -92,17 +69,20 @@ object HashKernels {
   }
 
   /** Distinct word-3-shingle hashes of a whole document in ONE pass —
-    * the fused form of split(" ") → 3-word shingles → [[shingleHash]] →
-    * array_distinct that TextDedup.hashedShingles otherwise builds from
-    * four interpreted higher-order functions with full shingle-string
-    * materialization. Exact equivalences replicated:
+    * the fused form of split(" ") → 3-word shingles → positional hash →
+    * array_distinct, which as built-ins takes four interpreted
+    * higher-order functions with full shingle-string materialization.
+    * Exact equivalences replicated:
     *  - split(" ", -1) keeps empty tokens (Spark `split` regex
     *    semantics on repeated spaces);
     *  - the shingle is concat_ws(" ", w_i, w_i+1, w_i+2): word code
     *    points with a space (cp 32) after the first two words, empty
     *    words contributing only their separator;
     *  - hash = Σ codepoint · 13^pos over the shingle's FIRST 12 code
-    *    points ([[shingleHash]] formula);
+    *    points. Every intermediate fits in int64 even at the Unicode
+    *    maximum (Σ 0x10FFFF·13^i for i = 0..11 ≈ 2.2e18 < 2^63), and
+    *    13^11 < 2^53 is an exact double, so the oracle's
+    *    `pow(13, i−1)::BIGINT` replay is exact;
     *  - fewer than 3 words → empty array (`greatest(size-2, 0)`);
     *  - distinct keeps first-occurrence order (array_distinct).
     * ExpressionSpec pins equality against the HOF formulation. */
@@ -143,7 +123,7 @@ object HashKernels {
   }
 
   /** Distinct packed char-4-gram hashes of a whole document in ONE
-    * pass — the fused form of TextDedup.dedupNgram's interpreted
+    * pass (q_dedup_ngram) — the fused form of the interpreted
     * transform (4 × ascii(substr) per position + array_distinct).
     * Exact equivalences replicated:
     *  - position count = greatest(numChars - 3, 1) (a short doc yields
@@ -175,7 +155,7 @@ object HashKernels {
   }
 
   /** Packed char-TRIGRAM keys of a whole document, NON-distinct and in
-    * order — the fused form of TextOps.langId's interpreted
+    * order (q_lang_id) — the fused form of the interpreted
     * `transform(sequence(1, greatest(len-2, 1)), i => (c(i)·1021 +
     * c(i+1))·1021 + c(i+2))`. Same conventions as [[charGramHashes]]
     * at width 3 but keeping every occurrence (lang-ID needs term
@@ -203,7 +183,7 @@ object HashKernels {
   }
 
   /** Sliding 8-word-window xxhash64 keys of a whole document in ONE
-    * pass — the fused form of TextDedup.dedupSubstring's interpreted
+    * pass (q_dedup_substring) — the fused form of the interpreted
     * `transform(sequence(1, m), i => xxhash64(slice(w, i, 8)))`:
     * higher-order functions never enter whole-stage codegen and the
     * builtin `slice` copies an 8-element array per position, so the
@@ -244,18 +224,6 @@ object HashKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Char n-grams as UTF8String array — shared by CharNGrams eval+codegen.
-    * substringSQL is 1-based and clamps at the end, exactly like the SQL
-    * `substring(text, i, n)` the fallback and oracle use. */
-  def ngrams(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val len = s.numChars()
-    val m = math.max(len - (n - 1), 1)
-    val arr = new Array[Any](m)
-    var i = 0
-    while (i < m) { arr(i) = s.substringSQL(i + 1, n); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-  }
-
   /** All ordered pairs (i < j) of a non-negative id array, each packed
     * as (a << 32) | b — the basket pair generator for
     * q_basket_lift/q_item_similarity as ONE codegen call instead of
@@ -286,59 +254,6 @@ object HashKernels {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
-
-abstract class StringHashExpression extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.sql}")
-  }
-
-  /** Static method on [[HashKernels]] invoked from both eval and the
-    * generated code — one implementation, no interpreter/codegen skew. */
-  protected def kernel: String
-
-  override def nullSafeEval(input: Any): Any = kernel match {
-    case "rollingHash" => HashKernels.rollingHash(input.asInstanceOf[UTF8String])
-    case "shingleHash" => HashKernels.shingleHash(input.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.$kernel($c)")
-}
-
-/** Character n-grams of a string as array<string>: positions 1..max(len-n+1, 1),
-  * each `substring(pos, n)` (the final grams may be shorter, matching the
-  * built-in `transform(sequence(...), i => substr(i, n))` formulation and
-  * the oracle's substring replay). SQL function `graft_ngrams(str, n)`.
-  * The interpreted eval and generated code share [[HashKernels.ngrams]]. */
-case class CharNGrams(child: Expression, n: Expression)
-    extends BinaryExpression {
-  override def left: Expression = child
-  override def right: Expression = n
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, n.dataType) match {
-      case (StringType, IntegerType) if n.foldable => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"graft_ngrams expects (string, foldable int), got ${child.dataType.sql}, ${n.dataType.sql}")
-    }
-
-  override def nullSafeEval(s: Any, nv: Any): Any =
-    HashKernels.ngrams(s.asInstanceOf[UTF8String], nv.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, nn) =>
-      s"graft.functions.HashKernels.ngrams($s, $nn)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(child = newLeft, n = newRight)
 }
 
 /** |a ∩ b| for distinct string arrays — the near-dup verify hot path.
@@ -498,16 +413,24 @@ case class WindowGramHashes(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** SQL function `graft_fp` (see [[GraftExtensions]]). */
-case class RollingHash(child: Expression) extends StringHashExpression {
-  override protected def kernel: String = "rollingHash"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+/** SQL function `graft_fp` (see [[GraftExtensions]]): the rolling
+  * fingerprint [[HashKernels.rollingHash]], invoked from both eval and
+  * the generated code — one implementation, no interpreter/codegen skew. */
+case class RollingHash(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
 
-/** SQL function `graft_shingle_hash` (see [[GraftExtensions]]). */
-case class ShingleHash(child: Expression) extends StringHashExpression {
-  override protected def kernel: String = "shingleHash"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_fp expects string, got ${t.sql}")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    HashKernels.rollingHash(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.rollingHash($c)")
+
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

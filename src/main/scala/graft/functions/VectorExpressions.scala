@@ -20,9 +20,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * the built-in formulation and the DuckDB oracle.
   *
   * Registered as SQL functions `graft_dot` / `graft_l2norm` via
-  * [[GraftExtensions]] (SparkSessionExtensions — the public plugin API);
-  * VectorOps falls back to the built-in formulation when the extension
-  * is not installed, so results never depend on registration.
+  * [[GraftExtensions]] (SparkSessionExtensions — the public plugin API),
+  * which [[graft.util.Session]] installs in every session; the declared
+  * queries call them directly.
   *
   * Element types: accepts array<float> and array<double>; floats are
   * widened per-element (exact) before multiply-accumulate in double,
@@ -30,10 +30,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * non-null (embedding fixtures guarantee this; null elements read as 0).
   *
   * Length-mismatched inputs yield NULL — the identical observable the
-  * fallback produces (`zip_with` pads the shorter side with nulls, the
-  * null product nulls the aggregate) — so the "results never depend on
-  * registration" contract holds on malformed input too, not only on
-  * well-formed vectors.
+  * built-in `zip_with` fold produces (it pads the shorter side with
+  * nulls, and the null product nulls the aggregate) — so the kernel
+  * matches the built-in formulation on malformed input too, not only
+  * on well-formed vectors.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -144,9 +144,11 @@ case class L2Norm(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session-extension plugin: install with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * (done by Verify/Bench/tests). */
+/** Session-extension plugin, required by the engine: the declared
+  * queries call its functions, planner strategy and optimizer rules
+  * directly. [[graft.util.Session]] installs it
+  * (`spark.sql.extensions`) in every session — every main and the
+  * tests. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -162,17 +164,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[RollingHash].getName, "graft_fp"),
       (children: Seq[Expression]) => RollingHash(children.head)))
     ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hash"),
-      new ExpressionInfo(classOf[ShingleHash].getName, "graft_shingle_hash"),
-      (children: Seq[Expression]) => ShingleHash(children.head)))
-    ext.injectFunction((
       FunctionIdentifier("graft_intersect_card"),
       new ExpressionInfo(classOf[ArrayIntersectCard].getName, "graft_intersect_card"),
       (children: Seq[Expression]) => ArrayIntersectCard(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[CharNGrams].getName, "graft_ngrams"),
-      (children: Seq[Expression]) => CharNGrams(children(0), children(1))))
     ext.injectFunction((
       FunctionIdentifier("graft_shingle_hashes"),
       new ExpressionInfo(classOf[WordShingleHashes].getName, "graft_shingle_hashes"),

@@ -1300,11 +1300,12 @@ object Joins {
       // overwrite race another fork's read — scoping the dir per
       // process removes the cross-process race outright, and the
       // JVM-wide lock below serializes ingest within the process. In
-      // production this is a real warehouse table, written once.
-      val base = java.nio.file.Files
-        .createDirectories(java.nio.file.Paths.get(
+      // production this is a real warehouse table, written once. The
+      // dir is deleted when the process exits.
+      val base = org.apache.spark.sql.graftshim.Shim.deleteOnExit(
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
-          s"graft_bucketed_p${ProcessHandle.current.pid}")).toString
+          s"graft_bucketed_p${ProcessHandle.current.pid}")))
       // JVM-wide lock: concurrent builders (parallel test suites) must
       // not race the one-off bucketed ingest (double saveAsTable to the
       // same path corrupts the table)
@@ -1522,23 +1523,15 @@ object Joins {
     }
 
   /** Ordered co-occurrence pairs from each basket row: the codegen'd
-    * `graft_pairs` packed kernel when the extension is installed
-    * (unpacked with shifts), else the equivalent interpreted
-    * higher-order formulation — bit-identical outputs (ExpressionSpec
-    * pins the equality; partkeys fit the unsigned-32 pack by far). */
+    * `graft_pairs` packed kernel, unpacked with shifts — bit-identical
+    * to the interpreted higher-order formulation (ExpressionSpec pins
+    * the equality; partkeys fit the unsigned-32 pack by far). */
   private def basketPairs(s: SparkSession,
                           baskets: DataFrame): DataFrame = {
     import s.implicits._
-    if (s.catalog.functionExists("graft_pairs"))
-      baskets.select(explode(call_function("graft_pairs", $"ps")).as("pp"))
-        .select(shiftright($"pp", 32).as("pa"),
-          $"pp".bitwiseAND(lit(0xFFFFFFFFL)).as("pb"))
-    else
-      baskets.select(explode(expr(
-        """flatten(transform(ps, (a, i) ->
-          |  transform(slice(ps, i + 2, size(ps)),
-          |    b -> struct(a AS pa, b AS pb))))""".stripMargin)).as("p"))
-        .select($"p.pa", $"p.pb")
+    baskets.select(explode(call_function("graft_pairs", $"ps")).as("pp"))
+      .select(shiftright($"pp", 32).as("pa"),
+        $"pp".bitwiseAND(lit(0xFFFFFFFFL)).as("pb"))
   }
 
   /** Market-basket affinity (association rules): for part pairs

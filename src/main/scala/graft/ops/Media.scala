@@ -59,19 +59,13 @@ object Media {
     (s, _) => {
       import s.implicits._
       val feats = Multimodal.features(Multimodal.syntheticMedia(s, 200))
-      val dotf: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-          org.apache.spark.sql.Column =
-        if (s.catalog.functionExists("graft_dot"))
-          (a, b) => call_function("graft_dot", a, b)
-        else (a, b) => aggregate(zip_with(a, b, (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x)
       val q = feats.filter($"media_id" < 5)
         .select($"media_id".as("qid"), $"embedding".as("qv"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"qid").orderBy($"cos".desc, $"nid")
       feats.select($"media_id".as("nid"), $"embedding".as("nv"))
         .join(broadcast(q), $"nid" =!= $"qid")
-        .withColumn("cos", dotf($"qv", $"nv"))
+        .withColumn("cos", call_function("graft_dot", $"qv", $"nv"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter($"rk" <= 3)
         .select($"qid", $"nid", round($"cos", 4).as("cos"), $"rk")

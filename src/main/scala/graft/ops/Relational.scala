@@ -1009,13 +1009,11 @@ object Relational {
             "'k', k))").as("x"))
         .select($"event_id", $"event_type", $"k",
           expr("from_xml(x, 'id BIGINT, type STRING, k BIGINT')").as("p"),
-          // streaming StAX kernel when registered (XmlKernelSpec pins
-          // parity with xpath_long) — the xpath built-in's per-row DOM
-          // is this query's documented GC tail; the kernel pull-parses
-          // to the first match and allocates no tree
-          (if (s.catalog.functionExists("graft_xml_long"))
-            call_function("graft_xml_long", $"x", lit("ROW/id"))
-          else expr("xpath_long(x, '/ROW/id')")).as("xid"))
+          // streaming StAX kernel (XmlKernelSpec pins parity with
+          // xpath_long) — the xpath built-in's per-row DOM is this
+          // query's documented GC tail; the kernel pull-parses to the
+          // first match and allocates no tree
+          call_function("graft_xml_long", $"x", lit("ROW/id")).as("xid"))
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
           sum($"p.k").cast("long").as("sum_k"),

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.QueryDef
 import graft.util.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * word-3-gram shingles → exact-arithmetic hashes → MinHash signatures →
   * LSH band buckets → candidate pairs → exact Jaccard verify. Every stage
   * is oracle-checkable because the hash is plain integer arithmetic
-  * (base-13 positional char code, see [[shingleHash]]) that DuckDB
+  * (base-13 positional char code, see
+  * [[graft.functions.HashKernels.wordShingleHashes]]) that DuckDB
   * replays exactly — no engine-specific hash functions involved.
   *
   * Scale notes (100 TB):
@@ -40,50 +41,14 @@ object TextDedup {
   private val BandRows = 2 // 4 bands × 2 rows
   private val P = 1000000007L
 
-  /** doc_id + array of word-K-gram shingle strings. Docs with fewer
-    * than K words yield an EMPTY array via the explicit `when` guard:
-    * sequence(1, 0) would otherwise DESCEND ([1, 0]) and the
-    * element_at(w, 0) faults under ANSI — matching the fused kernel's
-    * empty-set semantics ([[graft.functions.HashKernels.wordShingleHashes]])
-    * and the oracle's naturally-empty `i.i <= len(w)-2` range. */
-  private def shingled(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.spread(Tables.documents(s, dir), "doc_id")
-      .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id",
-        when(size($"w") >= K,
-          transform(
-            sequence(lit(1), size($"w") - (K - 1)),
-            i => concat_ws(" ",
-              element_at($"w", i), element_at($"w", i + 1), element_at($"w", i + 2))))
-          .otherwise(array().cast("array<string>"))
-          .as("shingles"))
-  }
-
-  /** Exact integer hash of a shingle string: sum of CODEPOINT values
+  /** The shingle hash in DuckDB SQL (correlated over a position series):
+    * an exact integer sum of CODEPOINT values
     * weighted by 13^(pos-1) over the first 12 codepoints — Spark and
     * DuckDB both define length/substr/ascii over codepoints, so the
-    * arithmetic is identical cross-engine even beyond ASCII. Every
-    * intermediate fits in int64 at the Unicode max
-    * (0x10FFFF·(13^12−1)/12 ≈ 2.2e18 < 2^63) and 13^11 < 2^53 so the
-    * double `pow` is exact before its integer cast.
-    * Built-in higher-order-function form (interpreted — the fallback). */
-  private def shingleHashHof(sh: Column): Column =
-    aggregate(
-      sequence(lit(1), least(length(sh), lit(12))),
-      lit(0L),
-      (acc, i) => acc + ascii(sh.substr(i, lit(1))).cast("long") *
-        pow(lit(13.0), (i - 1).cast("double")).cast("long"))
-
-  /** Same hash via the native codegen kernel when the session has the
-    * graft extensions installed (identical arithmetic — ExpressionSpec
-    * pins equality). */
-  private def shingleHash(s: SparkSession)(sh: Column): Column =
-    if (s.catalog.functionExists("graft_shingle_hash"))
-      call_function("graft_shingle_hash", sh)
-    else shingleHashHof(sh)
-
-  /** Same hash in DuckDB SQL (correlated over a position series). */
+    * arithmetic is identical cross-engine even beyond ASCII. Docs with
+    * fewer than K words have no shingle: the fused kernel's empty set
+    * ([[graft.functions.HashKernels.wordShingleHashes]]) and the
+    * oracle's naturally-empty `i.i <= len(w)-2` range. */
   private def oracleShingleBase: String =
     s"""WITH docs AS (
        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -101,23 +66,19 @@ object TextDedup {
        |  FROM sh)""".stripMargin
 
   /** doc_id + distinct shingle-hash array, persisted: the shingle+hash
-    * pipeline is all interpreted higher-order functions (the priciest
-    * stage) and is consumed by minhash, LSH (band self-join), near-dup
-    * verify, and simhash — identical logical plans share one cache
-    * entry, so the work runs once per Verify/Bench session rather than
-    * ~8×. At 100 TB this materialization is a bucketed table write. */
+    * pass is the priciest stage and is consumed by minhash, LSH (band
+    * self-join), near-dup verify, and simhash — identical logical plans
+    * share one cache entry, so the work runs once per Verify/Bench
+    * session rather than ~8×. At 100 TB this materialization is a
+    * bucketed table write. */
   private def hashedShingles(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "hashedShingles") {
       import s.implicits._
-      // fused kernel when registered: text → distinct shingle-hash
-      // array in one codegen pass (K=3 baked into the kernel, matching
-      // [[K]]), skipping the shingle-string materialization entirely
-      if (s.catalog.functionExists("graft_shingle_hashes"))
-        Tables.spread(Tables.documents(s, dir), "doc_id")
-          .select($"doc_id", call_function("graft_shingle_hashes", $"text").as("hs"))
-      else shingled(s, dir)
-        .select($"doc_id",
-          array_distinct(transform($"shingles", sh => shingleHash(s)(sh))).as("hs"))
+      // fused kernel: text → distinct shingle-hash array in one codegen
+      // pass (K=3 baked into the kernel, matching [[K]]), skipping the
+      // shingle-string materialization entirely
+      Tables.spread(Tables.documents(s, dir), "doc_id")
+        .select($"doc_id", call_function("graft_shingle_hashes", $"text").as("hs"))
     }
 
   /** MinHash signature: mh_s = MIN over distinct shingle hashes of
@@ -249,17 +210,14 @@ object TextDedup {
       import s.implicits._
       val sets = hashedShingles(s, dir).select($"doc_id", $"hs".as("ss"))
       val cand = lshCandidates(s, dir)
-      // |sa ∩ sb| via the native count-only kernel when available —
+      // |sa ∩ sb| via the native count-only kernel —
       // size(array_intersect(...)) materializes the intersection array
       // per pair; on distinct inputs the two are identical
-      val interCol =
-        if (s.catalog.functionExists("graft_intersect_card"))
-          call_function("graft_intersect_card", $"sa", $"sb")
-        else size(array_intersect($"sa", $"sb"))
       cand
         .join(sets.select($"doc_id".as("da"), $"ss".as("sa")), "da")
         .join(sets.select($"doc_id".as("db"), $"ss".as("sb")), "db")
-        .withColumn("inter", interCol.cast("double"))
+        .withColumn("inter",
+          call_function("graft_intersect_card", $"sa", $"sb").cast("double"))
         .withColumn("uni",
           (size($"sa") + size($"sb")).cast("double") - $"inter")
         .withColumn("jac", round($"inter" / $"uni", 4))
@@ -613,19 +571,13 @@ object TextDedup {
 
   /** Document fingerprint: rolling polynomial hash of the whole text,
     * char by char, mod P — a true sequential fold on both engines
-    * (Spark `aggregate`, DuckDB `list_reduce`). */
+    * (the `graft_fp` kernel, DuckDB `list_reduce`). */
   private val fingerprint = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val fpCol =
-        if (s.catalog.functionExists("graft_fp")) call_function("graft_fp", $"text")
-        else aggregate(
-          sequence(lit(1), length($"text")),
-          lit(0L),
-          (acc, i) => (acc * 31L + ascii($"text".substr(i, lit(1))).cast("long")) % P)
       Tables.spread(Tables.documents(s, dir), "doc_id")
         .select($"doc_id", $"text")
-        .withColumn("fp", fpCol)
+        .withColumn("fp", call_function("graft_fp", $"text"))
         .select($"doc_id", $"fp", length($"text").cast("long").as("n_chars_m"))
         .orderBy($"doc_id")
     },
@@ -858,33 +810,23 @@ object TextDedup {
     * arithmetic — injective below codepoint 1021 (the corpus is ASCII;
     * max observed codepoint 121), so the packed-gram Jaccard EQUALS the
     * string-gram Jaccard while the pair intersection runs on primitive
-    * longs (native count-only kernel when registered). */
+    * longs (native count-only kernel). */
   private val dedupNgram = QueryDef(
     (s, dir) => {
       import s.implicits._
-      def cp(i: Column): Column = ascii($"text".substr(i, lit(1))).cast("long")
-      val packed = transform(
-        sequence(lit(1), greatest(length($"text") - 3, lit(1))),
-        i => ((cp(i) * 1021L + cp(i + 1)) * 1021L + cp(i + 2)) * 1021L + cp(i + 3))
-      // fused codegen kernel when registered (ExpressionSpec pins
-      // bit-equality with the interpreted HOF fallback below)
-      val gramCol =
-        if (s.catalog.functionExists("graft_chargram_hashes"))
-          call_function("graft_chargram_hashes", $"text")
-        else array_distinct(packed)
-      // single-consumer lineage (both join sides of this query only):
-      // plan-local persist, self-billed rather than memo-warmed
+      // fused codegen kernel (ExpressionSpec pins bit-equality with the
+      // interpreted HOF formulation) over a single-consumer lineage
+      // (both join sides of this query only): plan-local persist,
+      // self-billed rather than memo-warmed
       val grams = Tables.spread(Tables.documents(s, dir), "doc_id")
-        .select($"doc_id", gramCol.as("gs")).persist()
+        .select($"doc_id", call_function("graft_chargram_hashes", $"text").as("gs"))
+        .persist()
       val cand = lshCandidates(s, dir)
-      val interCol =
-        if (s.catalog.functionExists("graft_intersect_card"))
-          call_function("graft_intersect_card", $"ga", $"gb")
-        else size(array_intersect($"ga", $"gb"))
       cand
         .join(grams.select($"doc_id".as("da"), $"gs".as("ga")), "da")
         .join(grams.select($"doc_id".as("db"), $"gs".as("gb")), "db")
-        .withColumn("inter", interCol.cast("double"))
+        .withColumn("inter",
+          call_function("graft_intersect_card", $"ga", $"gb").cast("double"))
         .withColumn("uni",
           (size($"ga") + size($"gb")).cast("double") - $"inter")
         .withColumn("jac", round($"inter" / $"uni", 4))
@@ -1011,20 +953,12 @@ object TextDedup {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir)
-      val w = split($"text", " ")
-      val m = greatest(size(w) - 7, lit(0))
-      // sequence(1, 0) would generate a DESCENDING ramp — guard short docs
-      val grams =
-        // fused codegen kernel when registered (bit-identical to the
-        // HOF formulation — ExpressionSpec pins it): the transform +
-        // slice path is interpreted per window and copies an 8-element
-        // array per position, the kernel hashes each word's bytes once
-        if (s.catalog.functionExists("graft_window_hashes"))
-          call_function("graft_window_hashes", $"text")
-        else when(m > 0,
-          transform(sequence(lit(1), m), i => xxhash64(slice(w, i, lit(8)))))
-          .otherwise(array().cast("array<bigint>"))
-      val ex = docs.select($"doc_id", explode(grams).as("gh"))
+      // fused codegen kernel (bit-identical to the transform + slice
+      // HOF formulation — ExpressionSpec pins it): the HOF path is
+      // interpreted per window and copies an 8-element array per
+      // position, the kernel hashes each word's bytes once
+      val ex = docs.select($"doc_id",
+        explode(call_function("graft_window_hashes", $"text")).as("gh"))
       val per = ex
         .withColumn("c", count(lit(1)).over(Window.partitionBy($"gh")))
         .groupBy($"doc_id")
@@ -1166,14 +1100,11 @@ object TextDedup {
     (s, dir) => {
       import s.implicits._
       val sets = hashedShingles(s, dir).select($"doc_id", $"hs".as("ss"))
-      val interCol =
-        if (s.catalog.functionExists("graft_intersect_card"))
-          call_function("graft_intersect_card", $"sa", $"sb")
-        else size(array_intersect($"sa", $"sb"))
       lshCandidates(s, dir)
         .join(sets.select($"doc_id".as("da"), $"ss".as("sa")), "da")
         .join(sets.select($"doc_id".as("db"), $"ss".as("sb")), "db")
-        .withColumn("inter", interCol.cast("double"))
+        .withColumn("inter",
+          call_function("graft_intersect_card", $"sa", $"sb").cast("double"))
         .withColumn("cont_a", round($"inter" / size($"sa").cast("double"), 4))
         .withColumn("cont_b", round($"inter" / size($"sb").cast("double"), 4))
         .filter(greatest($"cont_a", $"cont_b") >= 0.5)

@@ -169,16 +169,10 @@ object TextOps {
       // injective below codepoint 1021, ASCII corpus; the dedup_ngram
       // trick): the (doc, trigram)-count shuffle and the profile join
       // key carry primitive longs instead of 3-char strings, and the
-      // score is invariant under any bijection of the trigram keys
-      def cp3(i: Column): Column = ascii($"text".substr(i, lit(1))).cast("long")
-      // fused codegen kernel when registered (bit-identical — the HOF
-      // chain evaluates 3 interpreted substr/ascii calls per position)
-      val triCol =
-        if (s.catalog.functionExists("graft_char3grams"))
-          call_function("graft_char3grams", $"text")
-        else transform(
-          sequence(lit(1), greatest(length($"text") - 2, lit(1))),
-          i => (cp3(i) * 1021L + cp3(i + 1)) * 1021L + cp3(i + 2))
+      // score is invariant under any bijection of the trigram keys.
+      // Fused codegen kernel (bit-identical to the HOF chain, which
+      // evaluates 3 interpreted substr/ascii calls per position)
+      val triCol = call_function("graft_char3grams", $"text")
       // Each branch gets its NATURAL aggregation key (r6 TriageBench
       // A/B: 1.53 vs 1.97 s median interleaved at sf0.1): the train
       // split (80% of docs) collapses straight to (lang, trigram) —

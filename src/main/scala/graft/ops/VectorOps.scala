@@ -25,32 +25,17 @@ object VectorOps {
   /** embedding (float32 list) → double list column. */
   private[graft] def vcol(c: Column): Column = transform(c, x => x.cast("double"))
 
-  private[graft] def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+  /** Native codegen dot product ([[graft.functions.DotProduct]]): the
+    * same float64 math as the oracle (per-element widening, left-to-right
+    * accumulation). */
+  private def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  private[graft] def l2(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
-
-  private def normed(s: SparkSession, dir: String): DataFrame = {
+  /** Vectors with their L2 norms ([[graft.functions.L2Norm]]). */
+  private def base(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.spread(Tables.embeddings(s, dir), "vec_id")
-      .select($"vec_id", vcol($"embedding").as("v"))
-      .withColumn("nm", l2($"v"))
-  }
-
-  /** (vectors+norms, dot) — uses the native codegen kernels
-    * (graft.functions.DotProduct via SparkSessionExtensions) when the
-    * session has them, else the interpreted higher-order-function
-    * formulation. Identical float64 math either way (same widening, same
-    * left-to-right accumulation), so plans differ but results don't. */
-  private def base(s: SparkSession, dir: String): (DataFrame, (Column, Column) => Column) = {
-    import s.implicits._
-    if (s.catalog.functionExists("graft_dot")) {
-      val df = Tables.spread(Tables.embeddings(s, dir), "vec_id")
-        .select($"vec_id", $"embedding".as("v"),
+      .select($"vec_id", $"embedding".as("v"),
         call_function("graft_l2norm", $"embedding").as("nm"))
-      (df, (a, b) => call_function("graft_dot", a, b))
-    } else (normed(s, dir), dot)
   }
 
   /** Shared oracle prelude: per-vector double list + L2 norm, and the
@@ -66,13 +51,13 @@ object VectorOps {
   private val simTopk = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val q = b0.filter($"vec_id" < 50)
         .select($"vec_id".as("qid"), $"v".as("qv"), $"nm".as("qn"))
       val cand = b0.select($"vec_id".as("nid"), $"v".as("nv"), $"nm".as("nn"))
       val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
       cand.join(broadcast(q), $"nid" =!= $"qid")
-        .withColumn("cos", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("cos", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter($"rk" <= 5)
         .select($"qid", $"nid", round($"cos", 4).as("cos"), $"rk")
@@ -106,7 +91,7 @@ object VectorOps {
   private val knnClassify = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val lab = Tables.embeddings(s, dir).select($"vec_id", $"label")
       val q = b0.filter($"vec_id" < 50)
         .select($"vec_id".as("qid"), $"v".as("qv"), $"nm".as("qn"))
@@ -114,7 +99,7 @@ object VectorOps {
         .select($"vec_id".as("nid"), $"v".as("nv"), $"nm".as("nn"))
       val wk = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
       val knn = cand.join(broadcast(q), lit(true))
-        .withColumn("cos", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("cos", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(wk).cast("long"))
         .filter($"rk" <= 5)
         .join(lab.select($"vec_id".as("nid"), $"label".as("nlabel")), "nid")
@@ -228,13 +213,13 @@ object VectorOps {
 
   private def semanticPairsBuild(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (b0, dotf) = base(s, dir)
+    val b0 = base(s, dir)
     val cents = b0.filter($"vec_id" < 10)
       .select($"vec_id".as("cid"), $"v".as("cv"), $"nm".as("cn"))
     // stage 1: every vector probes its 2 nearest seed cells
     val wProbe = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
     val probes = b0.crossJoin(broadcast(cents))
-      .withColumn("ccos", dotf($"v", $"cv") / ($"nm" * $"cn"))
+      .withColumn("ccos", dot($"v", $"cv") / ($"nm" * $"cn"))
       .withColumn("prk", row_number().over(wProbe))
       .filter($"prk" <= 2)
       .select($"vec_id", $"cid".as("cell"))
@@ -247,7 +232,7 @@ object VectorOps {
     val va = b0.select($"vec_id".as("ida"), $"v".as("va"), $"nm".as("na"))
     val vb = b0.select($"vec_id".as("idb"), $"v".as("vb"), $"nm".as("nb"))
     cand.join(va, "ida").join(vb, "idb")
-      .withColumn("cos", dotf($"va", $"vb") / ($"na" * $"nb"))
+      .withColumn("cos", dot($"va", $"vb") / ($"na" * $"nb"))
       .filter($"cos" >= 0.35)
       .select($"ida", $"idb", $"cos")
   }
@@ -366,13 +351,13 @@ object VectorOps {
   private val simIvf = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val cents = b0.filter($"vec_id" < 10)
         .select($"vec_id".as("cid"), $"v".as("cv"), $"nm".as("cn"))
       // nearest cell per vector (rank 1 over centroid cosine)
       val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
       val assigned = b0.crossJoin(broadcast(cents))
-        .withColumn("ccos", dotf($"v", $"cv") / ($"nm" * $"cn"))
+        .withColumn("ccos", dot($"v", $"cv") / ($"nm" * $"cn"))
         .withColumn("crk", row_number().over(wAssign))
         .filter($"crk" === 1)
         .select($"vec_id", $"v", $"nm", $"cid".as("cell"))
@@ -381,7 +366,7 @@ object VectorOps {
       val probes = b0.filter($"vec_id" >= 10 && $"vec_id" < 30)
         .select($"vec_id".as("qid"), $"v".as("qv"), $"nm".as("qn"))
         .crossJoin(broadcast(cents))
-        .withColumn("qcos", dotf($"qv", $"cv") / ($"qn" * $"cn"))
+        .withColumn("qcos", dot($"qv", $"cv") / ($"qn" * $"cn"))
         .withColumn("prk", row_number().over(wProbe))
         .filter($"prk" <= 2)
         .select($"qid", $"qv", $"qn", $"cid".as("probe_cell"))
@@ -389,7 +374,7 @@ object VectorOps {
       val wRank = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
       assigned.select($"vec_id".as("nid"), $"v".as("nv"), $"nm".as("nn"), $"cell")
         .join(broadcast(probes), $"cell" === $"probe_cell" && $"nid" =!= $"qid")
-        .withColumn("cos", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("cos", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(wRank).cast("long"))
         .filter($"rk" <= 3)
         .select($"qid", $"nid", $"cell".cast("long").as("cell"),
@@ -636,7 +621,7 @@ object VectorOps {
   private val simLsh = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val vd = transform($"v", x => x.cast("double"))
       val svec = aggregate(vd, lit(0.0), (acc, x) => acc + x)
       val bucketCol = (0 until NumPlanes).map { j =>
@@ -654,7 +639,7 @@ object VectorOps {
         $"nm".as("nn"), $"bucket")
       val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
       cand.join(broadcast(q), $"bucket" === $"qb" && $"nid" =!= $"qid")
-        .withColumn("cos", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("cos", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter($"rk" <= 3)
         .select($"qid", $"nid", $"bucket", round($"cos", 4).as("cos"), $"rk")
@@ -1147,7 +1132,7 @@ object VectorOps {
   private val mrrEval = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val labels = Tables.embeddings(s, dir)
         .select($"vec_id".as("lid"), $"label")
       val q = b0.filter($"vec_id" < 50)
@@ -1160,7 +1145,7 @@ object VectorOps {
           $"label".as("nlabel"))
       val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
       cand.join(broadcast(q), $"nid" =!= $"qid")
-        .withColumn("cos", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("cos", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter($"rk" <= 10)
         .groupBy($"qid", $"qlabel")
@@ -1210,7 +1195,7 @@ object VectorOps {
   private val ndcgEval = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val labels = Tables.embeddings(s, dir)
         .select($"vec_id".as("lid"), $"label")
       val q = b0.filter($"vec_id" < 50)
@@ -1225,7 +1210,7 @@ object VectorOps {
       val gain = round(lit(10000.0) /
         (log($"rk".cast("double") + 1.0) / log(lit(2.0)))).cast("long")
       val ranked = cand.join(broadcast(q), $"nid" =!= $"qid")
-        .withColumn("cos", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("cos", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter($"rk" <= 10)
       ranked
@@ -1303,7 +1288,7 @@ object VectorOps {
     (s, dir) => {
       import s.implicits._
       val Lambda = 0.7
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val q = b0.filter($"vec_id" < 20)
         .select($"vec_id".as("qid"), $"v".as("qv"), $"nm".as("qn"))
       val cand = b0.select($"vec_id".as("nid"), $"v".as("nv"), $"nm".as("nn"))
@@ -1313,7 +1298,7 @@ object VectorOps {
       // without truncation each step re-runs the store-wide scoring
       // scan — measured 3.0 s → ~1 s at sf0.1
       val pool = cand.join(broadcast(q), $"nid" =!= $"qid")
-        .withColumn("rel", dotf($"qv", $"nv") / ($"qn" * $"nn"))
+        .withColumn("rel", dot($"qv", $"nv") / ($"qn" * $"nn"))
         .withColumn("rk", row_number().over(wRel).cast("long"))
         .filter($"rk" <= 6)
         .select($"qid", $"nid", $"nv", $"nn", $"rel")
@@ -1321,7 +1306,7 @@ object VectorOps {
       val sims = pool.select($"qid", $"nid".as("ca"), $"nv".as("va"), $"nn".as("na"))
         .join(pool.select($"qid".as("q2"), $"nid".as("cb"), $"nv".as("vb"),
           $"nn".as("nb")), $"qid" === $"q2" && $"ca" =!= $"cb")
-        .select($"qid", $"ca", $"cb", (dotf($"va", $"vb") / ($"na" * $"nb")).as("sim"))
+        .select($"qid", $"ca", $"cb", (dot($"va", $"vb") / ($"na" * $"nb")).as("sim"))
         .localCheckpoint(eager = true)
       val w1 = Window.partitionBy($"qid").orderBy($"rel".desc, $"nid")
       var result = pool
@@ -1474,13 +1459,13 @@ object VectorOps {
   private val hybridRrf = QueryDef(
     (s, dir) => {
       import s.implicits._
-      val (b0, dotf) = base(s, dir)
+      val b0 = base(s, dir)
       val q = b0.filter($"vec_id" === 0)
         .select($"v".as("qv"), $"nm".as("qn"))
       val semTop = b0.filter($"vec_id" =!= 0)
         .crossJoin(broadcast(q))
         .select($"vec_id".as("doc_id"),
-          (dotf($"qv", $"v") / ($"qn" * $"nm")).as("cos"))
+          (dot($"qv", $"v") / ($"qn" * $"nm")).as("cos"))
         .orderBy($"cos".desc, $"doc_id").limit(100)
       val semRank = semTop.withColumn("r_sem",
           row_number().over(Window.orderBy($"cos".desc, $"doc_id"))

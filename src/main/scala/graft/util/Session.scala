@@ -38,8 +38,9 @@ object Session {
       .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
         Config.cteLocalAnchorRows)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      // a fresh warehouse, deleted when the JVM exits
+      .config("spark.sql.warehouse.dir", org.apache.spark.sql.graftshim.Shim
+        .deleteOnExit(java.nio.file.Files.createTempDirectory("graft_wh")))
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtil
 
 /** Minimal bridge into Spark's `private[sql]` surface, required to hand
   * a custom LogicalPlan (graft.plans.AsOfJoin) or Expression back to the
-  * public Dataset API. Placing one shim object inside the org.apache.spark.sql
+  * public Dataset API, and to its `private[spark]` shutdown-delete hook
+  * for the engine's temp dirs. Placing one shim object inside the org.apache.spark.sql
   * namespace is the standard technique external connectors/extensions
   * use (the alternative — reflection — is slower and more brittle).
   * Everything else in this repo lives in the graft.* namespace. */
@@ -22,16 +23,10 @@ object Shim {
   def logicalPlan(df: DataFrame): LogicalPlan =
     ClassicConversions.castToImpl(df).logicalPlan
 
-  /** Test-only: unregister a session function (lets specs exercise the
-    * built-in fallback paths that run when GraftExtensions is absent). */
-  def dropFunction(spark: SparkSession, name: String): Unit =
-    ClassicConversions.castToImpl(spark).sessionState.functionRegistry
-      .dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-
-  /** Test-only: (re-)register a function on a LIVE session — builder
-    * extensions only apply at session construction. */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    ClassicConversions.castToImpl(spark).sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** Registers `dir` with Spark's shutdown hook, which deletes it
+    * recursively when the JVM exits; returns it as a string path. */
+  def deleteOnExit(dir: java.nio.file.Path): String = {
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir.toFile)
+    dir.toString
+  }
 }

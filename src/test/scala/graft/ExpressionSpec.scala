@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.VectorOps
 
-/** Native codegen kernels (graft.functions.{DotProduct, L2Norm}) must be
-  * bit-identical to the built-in higher-order-function formulation —
-  * they are a physical optimization, never a semantic change. */
+/** Native codegen kernels (graft.functions.*) must be bit-identical to
+  * the built-in higher-order-function formulation — they are a physical
+  * optimization, never a semantic change — and every kernel-aware query
+  * must plan them. */
 class ExpressionSpec extends SparkSpec {
 
   test("graft_dot / graft_l2norm registered via SparkSessionExtensions") {
@@ -20,7 +21,7 @@ class ExpressionSpec extends SparkSpec {
       .crossJoin(e.select($"vec_id".as("idb"), $"embedding".as("eb")))
       .filter($"ida" < $"idb").limit(5000)
     val native = call_function("graft_dot", $"ea", $"eb")
-    val builtin = VectorOps.dot(VectorOps.vcol($"ea"), VectorOps.vcol($"eb"))
+    val builtin = HofFolds.dot(VectorOps.vcol($"ea"), VectorOps.vcol($"eb"))
     val diff = pairs.select(native.as("n"), builtin.as("b"))
       .filter($"n" =!= $"b") // exact compare — no tolerance
     assert(diff.count() === 0)
@@ -30,7 +31,7 @@ class ExpressionSpec extends SparkSpec {
     import spark.implicits._
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val native = call_function("graft_l2norm", $"embedding")
-    val builtin = VectorOps.l2(VectorOps.vcol($"embedding"))
+    val builtin = HofFolds.l2(VectorOps.vcol($"embedding"))
     assert(e.select(native.as("n"), builtin.as("b")).filter($"n" =!= $"b").count() === 0)
   }
 
@@ -56,11 +57,10 @@ class ExpressionSpec extends SparkSpec {
       df.select(c.as("d")).collect().toSeq
         .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     val native = read(call_function("graft_dot", $"a", $"b"))
-    val fallback = read(VectorOps.dot(VectorOps.vcol($"a"), VectorOps.vcol($"b")))
+    val fold = read(HofFolds.dot(VectorOps.vcol($"a"), VectorOps.vcol($"b")))
     assert(native === Seq(None, None, Some(35.0)))
-    assert(native === fallback,
-      "kernel and fallback must agree on malformed input — results " +
-        "must never depend on whether the extension is registered")
+    assert(native === fold,
+      "kernel and built-in fold must agree on malformed input")
   }
 
   test("native string hashes == built-in folds on the documents corpus") {
@@ -72,20 +72,14 @@ class ExpressionSpec extends SparkSpec {
       (acc, i) => (acc * 31L + ascii($"text".substr(i, lit(1))).cast("long")) % P)
     assert(d.select(call_function("graft_fp", $"text").as("n"), fpHof.as("b"))
       .filter($"n" =!= $"b").count() === 0)
-    val shHof = aggregate(
-      sequence(lit(1), least(length($"text"), lit(12))), lit(0L),
-      (acc, i) => acc + ascii($"text".substr(i, lit(1))).cast("long") *
-        pow(lit(13.0), (i - 1).cast("double")).cast("long"))
-    assert(d.select(call_function("graft_shingle_hash", $"text").as("n"), shHof.as("b"))
-      .filter($"n" =!= $"b").count() === 0)
   }
 
   test("native string hashes == built-in folds on mixed-script / supplementary-plane text") {
     import spark.implicits._
-    // all three paths (native kernel, HOF fallback, DuckDB oracle) iterate
+    // all three paths (native kernel, HOF fold, DuckDB oracle) iterate
     // CODEPOINTS with full codepoint values — Spark and DuckDB both define
     // length/substr/ascii over codepoints (ascii('𝄞') = 119070 in
-    // both engines). Pin native == fallback beyond ASCII: accents, CJK,
+    // both engines). Pin native == fold beyond ASCII: accents, CJK,
     // emoji, and musical symbols (supplementary plane, surrogate pairs).
     val texts = Seq(
       "café naïve résumé",
@@ -99,12 +93,6 @@ class ExpressionSpec extends SparkSpec {
       sequence(lit(1), length($"text")), lit(0L),
       (acc, i) => (acc * 31L + ascii($"text".substr(i, lit(1))).cast("long")) % P)
     assert(d.select(call_function("graft_fp", $"text").as("n"), fpHof.as("b"))
-      .filter($"n" =!= $"b").count() === 0)
-    val shHof = aggregate(
-      sequence(lit(1), least(length($"text"), lit(12))), lit(0L),
-      (acc, i) => acc + ascii($"text".substr(i, lit(1))).cast("long") *
-        pow(lit(13.0), (i - 1).cast("double")).cast("long"))
-    assert(d.select(call_function("graft_shingle_hash", $"text").as("n"), shHof.as("b"))
       .filter($"n" =!= $"b").count() === 0)
   }
 
@@ -139,24 +127,6 @@ class ExpressionSpec extends SparkSpec {
       i => (cp(i) * 1021L + cp(i + 1)) * 1021L + cp(i + 2))
     assert(d.select(call_function("graft_char3grams", $"text").as("n"), hof.as("b"))
       .filter(not($"n" <=> $"b")).count() === 0)
-  }
-
-  test("native ngrams == substring-transform fold on the documents corpus") {
-    import spark.implicits._
-    val d = spark.read.parquet(s"$sf/documents.parquet")
-    val hof = transform(
-      sequence(lit(1), greatest(length($"text") - 2, lit(1))),
-      i => $"text".substr(i, lit(3)))
-    val diff = d.select(call_function("graft_ngrams", $"text", lit(3)).as("n"),
-      hof.as("b")).filter($"n" =!= $"b")
-    assert(diff.count() === 0)
-    // short-string edge: len < n yields one truncated gram, same as HOF
-    val edge = Seq("ab", "", "abcd").toDF("text")
-      .select(call_function("graft_ngrams", $"text", lit(3)).as("n"),
-        transform(sequence(lit(1), greatest(length($"text") - 2, lit(1))),
-          i => $"text".substr(i, lit(3))).as("b"))
-      .filter($"n" =!= $"b")
-    assert(edge.count() === 0)
   }
 
   test("native intersect-card == size(array_intersect) on distinct arrays") {
@@ -252,10 +222,38 @@ class ExpressionSpec extends SparkSpec {
     assert(diff.count() === 0, diff.collect().take(3).mkString("; "))
   }
 
-  test("q_sim_topk plan uses the native kernel (not interpreted HOFs)") {
-    val p = SparkEntry.all("q_sim_topk").fn(spark, sf)
-      .queryExecution.optimizedPlan.toString
-    assert(p.toLowerCase.contains("dotproduct"), p)
+  test("every kernel-aware query plans its native kernel (not interpreted HOFs)") {
+    import graft.functions._
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // one row per builder that calls a graft kernel: the query and the
+    // kernel class its optimized plan must contain. Persisted lineages
+    // appear as InMemoryRelation, whose cached plan is an inner child,
+    // and an adaptive cached plan keeps its physical plan as inputPlan.
+    val rows: Seq[(String, Class[_])] = Seq(
+      "q_sim_topk" -> classOf[DotProduct],
+      "q_lang_id" -> classOf[CharTrigrams],
+      "q_xml_extract" -> classOf[XmlFirstLong],
+      "q_basket_lift" -> classOf[PackedPairs],
+      "q_media_features" -> classOf[DotProduct],
+      "q_dedup_minhash" -> classOf[WordShingleHashes],
+      "q_dedup_near" -> classOf[ArrayIntersectCard],
+      "q_text_fingerprint" -> classOf[RollingHash],
+      "q_dedup_ngram" -> classOf[CharGramHashes],
+      "q_dedup_ngram" -> classOf[ArrayIntersectCard],
+      "q_dedup_substring" -> classOf[WindowGramHashes],
+      "q_dedup_containment" -> classOf[ArrayIntersectCard])
+    def has(p: QueryPlan[_], cls: Class[_]): Boolean =
+      p.expressions.exists(_.exists(cls.isInstance)) ||
+        (p.children ++ p.innerChildren).exists {
+          case a: AdaptiveSparkPlanExec => has(a.inputPlan, cls)
+          case q: QueryPlan[_] => has(q, cls)
+          case _ => false
+        }
+    val missing = rows.filterNot { case (q, cls) =>
+      has(SparkEntry.all(q).fn(spark, sf).queryExecution.optimizedPlan, cls)
+    }
+    assert(missing.isEmpty, missing.map { case (q, c) => s"$q lacks ${c.getSimpleName}" })
   }
 
   test("graft_pairs packed kernel == interpreted pair HOF, and rejects " +

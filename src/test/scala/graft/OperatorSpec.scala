@@ -64,8 +64,8 @@ class OperatorSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, Array(0.5f, -0.25f, 2.0f))).toDF("id", "embedding")
       .select($"id", VectorOps.vcol($"embedding").as("v"))
-      .select((VectorOps.dot($"v", $"v") /
-        (VectorOps.l2($"v") * VectorOps.l2($"v"))).as("cos"))
+      .select((HofFolds.dot($"v", $"v") /
+        (HofFolds.l2($"v") * HofFolds.l2($"v"))).as("cos"))
     assert(math.abs(df.as[Double].head() - 1.0) < 1e-12)
   }
 

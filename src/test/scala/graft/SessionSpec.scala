@@ -26,4 +26,11 @@ class SessionSpec extends SparkSpec {
     assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.RoundDouble])), opt)
     assert(!exprs.exists(_.exists(_.isInstanceOf[Round])), opt)
   }
+
+  test("the session's warehouse dir is deleted when the JVM exits") {
+    val wh = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    assert(wh.getName.startsWith("graft_wh"), wh)
+    assert(org.apache.spark.graftshim.Bus.deletedOnExit(wh), wh)
+  }
 }
