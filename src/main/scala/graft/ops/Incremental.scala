@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** The reference's own semantics, re-grounded on the `events` fixture
   * (SURVEY.md §2.10, §3): watermark → bounded delta → daily per-group
-  * mean → append. Plus the batch analogs of the three streaming window
-  * kinds (tumbling / sliding / session); the live Structured Streaming
-  * variants are in graft.streaming and are MemoryStream-tested (no
-  * oracle — runtime semantics, SURVEY.md §5.2.4).
+  * mean → append. Plus batch forms of the three window kinds
+  * (tumbling / sliding / session); only the tumbling one has a live
+  * Structured Streaming form, `graft.streaming.Streams.dailyAvg`, which
+  * is MemoryStream-tested (no oracle — runtime semantics, SURVEY.md
+  * §5.2.4).
   *
   * Determinism: raw `events.ts` is nanosecond-precision and never
   * emitted or compared un-truncated (SURVEY.md §7.4). Window starts are

@@ -137,34 +137,6 @@ class HttpSourceSpec extends SparkSpec {
     }
   }
 
-  test("pollingIngest: each trigger fetches over HTTP and appends to the sink") {
-    withServer { base =>
-      import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val sink = java.nio.file.Files.createTempDirectory("graft_poll").toString + "/sink"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_poll_ck").toString
-      val ticks = MemoryStream[Long](spark)
-      val fetches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = graft.streaming.Streams.pollingIngest(
-        ticks.toDF(), sink, ckpt) { _ =>
-        fetches.incrementAndGet()
-        // the reference loop body: fetch live pages, keep the healthy ones
-        HttpSource.fetch(spark, Seq(s"$base/ok1", s"$base/ok2"),
-            maxAttempts = 1, delayMs = 0L)
-          .filter(col("status") === 200)
-          .select(col("url"), col("body"))
-      }
-      try {
-        ticks.addData(1L); q.processAllAvailable()
-        ticks.addData(2L); q.processAllAvailable()
-        assert(fetches.get() === 2) // one fetch per trigger tick
-        val rows = spark.read.parquet(sink)
-        assert(rows.count() === 4)  // 2 pages appended per tick
-        assert(rows.filter(col("body").contains("SE1")).count() === 2)
-      } finally q.stop()
-    }
-  }
-
   test("fetchOne sleeps delayMs after every failed attempt but the last") {
     withServer { base =>
       val slept = scala.collection.mutable.ArrayBuffer[Long]()

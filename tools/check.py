@@ -14,7 +14,7 @@ two real bugs the smaller scales masked (a LIMIT over a non-total
 ORDER BY; a double-ROUND .00005 split) — scale-dependent total-order
 and rounding defects only surface when groups get big enough to tie.
 """
-import json, os, subprocess, sys, math
+import json, os, re, subprocess, sys, math
 import duckdb
 import pandas as pd
 
@@ -105,19 +105,21 @@ def check(sf, out, only):
     print(f"== {sf}: {n_pass} pass, {n_fail} fail ==")
     return n_pass, n_fail
 
-def driver_mem():
-    """The forked JVM's heap when SPARK_DRIVER_MEM is unset: half of
-    MemTotal, clamped to 2-8 GB (the ScalaTest run's rule)."""
-    with open("/proc/meminfo") as f:
-        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
-    return f"{min(8, max(2, kb // 2097152))}g"
+def heap(env):
+    """The -Xmx build.sbt gives the forked JVM under `env` (its
+    SPARK_DRIVER_MEM, else build.sbt's own fallback)."""
+    r = subprocess.run(["sbt", "-batch", "-Dsbt.log.noformat=true",
+                        "show javaOptions"], env=env,
+                       capture_output=True, text=True)
+    m = re.search(r"-Xmx(\S+)", r.stdout)
+    return m.group(1) if m else "?"
 
 def gate(only):
     """Verify + compare at every fixture scale (the round-9 three-tier
     gate). Query subset args pass through to both Verify and compare.
     Verify runs at SPARK_GRAFT_CPUS if set, else every core of the box."""
     env = dict(os.environ)
-    env.setdefault("SPARK_DRIVER_MEM", driver_mem())
+    mem = heap(env)
     cpus = env.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     total_fail = 0
     for sf in GATE_SFS:
@@ -126,7 +128,7 @@ def gate(only):
         args = " ".join(sorted(only))
         cmd = f'runMain graft.Verify {sf} {out}' + (f" {args}" if args else "")
         print(f"-- {tag}: {cmd} (cpus={cpus}, "
-              f"heap={env['SPARK_DRIVER_MEM']})")
+              f"heap={mem})")
         r = subprocess.run(["sbt", "-batch", cmd], env=env,
                            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
         if r.returncode != 0:
