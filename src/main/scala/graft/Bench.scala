@@ -160,7 +160,9 @@ object Bench {
         val dirName = org.apache.spark.sql.catalyst.catalog
           .ExternalCatalogUtils.getPartitionPathString("date", doomedVal.toString)
         val doomed = new java.io.File(s"$ddir/$dirName")
-        val stash = java.nio.file.Files.createTempDirectory("graft_del_stash").toFile
+        // under wroot, so its fullyDelete reaps the stash on every path
+        val stash = java.nio.file.Files.createDirectory(
+          wroot.resolve("del_stash")).toFile
         doomed.listFiles().filter(_.isFile).foreach { f =>
           java.nio.file.Files.copy(f.toPath,
             new java.io.File(stash, f.getName).toPath): Unit
@@ -177,10 +179,6 @@ object Bench {
         }
         graft.etl.Pipeline.deleteKeys(spark, keys, ddir): Unit
         require(!doomed.exists(), "recovery re-run must complete the rm")
-        // the stash lives outside wroot — reap it here or it leaks a
-        // tmpdir per run (ADVICE r11)
-        stash.listFiles().foreach(f => f.delete(): Unit)
-        stash.delete(): Unit
       },
       // streaming-throughput surface (VERDICT r11 item 6): the first
       // TIMED streaming entry — the rest of the streaming surface is

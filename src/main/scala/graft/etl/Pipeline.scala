@@ -269,7 +269,7 @@ object Pipeline {
     // executor-local blocks with TRUNCATED lineage, so no task
     // (including retries) can re-read sink files mid-replacement;
     // (b) crash isolation — the sink is untouched until the single
-    // overwrite job. Cluster caveat (rankPickBy's class): an executor
+    // overwrite job. Cluster caveat (rankPickCounted's class): an executor
     // loss during the overwrite fails the job instead of recomputing
     // from half-replaced files; the re-run IS the recovery path
     // (idempotent), exactly as for a crash mid-overwrite before.
@@ -405,11 +405,15 @@ object Pipeline {
     * exactly-once semantics by keeping only the LATEST load per key.
     * This is the standard at-least-once-writer / dedup-on-read pattern;
     * at 100 TB the window shuffles only the sink (already daily rows,
-    * not raw events). */
+    * not raw events). Two loads of one key on the same `load_date` (a
+    * same-day rerun that saw late source rows) resolve to the row with
+    * the larger `n`, then the larger `avg_value` — the row a
+    * `max(struct(load_date, n, avg_value))` aggregate would pick — so
+    * the answer never depends on file order. */
   def readDeduped(spark: SparkSession, sinkDir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("date"), col("group_key"))
-      .orderBy(col("load_date").desc)
+      .orderBy(col("load_date").desc, col("n").desc, col("avg_value").desc)
     spark.read.schema(sinkSchema).parquet(sinkDir)
       .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")

@@ -145,8 +145,9 @@ case class L2Norm(child: Expression) extends UnaryExpression {
 }
 
 /** Session-extension plugin, required by the engine: the declared
-  * queries call its functions, planner strategy and optimizer rules
-  * directly. [[graft.util.Session]] installs it
+  * queries call its functions directly, and its one optimizer rule
+  * ([[NativeDoubleRound]]) rewrites their double ROUNDs; it injects no
+  * planner strategy. [[graft.util.Session]] installs it
   * (`spark.sql.extensions`) in every session — every main and the
   * tests. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -216,11 +217,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graft_might_contain"),
       (children: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(children(0), children(1))))
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // custom logical nodes are opaque to Catalyst's own pushdown — this
-    // rule (operator-optimization fixed point) relocates filters through
-    // AsOfJoin so the standard rules can carry them into the scans
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
     // Spark rounds a double through java.math.BigDecimal on every row;
     // this rule swaps in the bit-equal native kernel
     ext.injectOptimizerRule(_ => NativeDoubleRound)

@@ -414,11 +414,11 @@ object Relational {
 
   /** Exact percentiles (disc + cont median) per group — the statistical
     * aggregate family (§2.4 REF↑ of stddev/variance), computed by the
-    * DISTRIBUTED rank-pick ([[Scale.rankPick]]) instead of the built-in
+    * DISTRIBUTED rank-pick ([[Scale.rankPickCounted]]) instead of the built-in
     * `percentile` aggregate: the built-in buffers EVERY group value in
     * an in-memory map on one reducer (OOM by construction at 100 TB
     * with 3 group keys), and even a window `row_number` formulation
-    * sorts each group on a single task. rankPick global-RANGE-sorts
+    * sorts each group on a single task. The rank-pick global-RANGE-sorts
     * (group, value) across all cores and selects only the rows at the
     * target ranks via zipWithIndex + per-group offsets.
     * Bit-equivalence with `percentile`: for percentage p over n values,
@@ -449,7 +449,7 @@ object Relational {
       }
       // BOTH measures share ONE global range sort: melt to a composite
       // "flag|measure" group key and give each composite its own rank
-      // set (rankPickBy) — one sort + one zipWithIndex instead of two.
+      // set (rankPickCounted) — one sort + one zipWithIndex instead of two.
       // Composite order == Spark's sort order: flags ascend (counted is
       // engine-sorted) and '|p' < '|q' in binary UTF8.
       val melted = li
@@ -1498,9 +1498,9 @@ object Relational {
       val res = ev.join(broadcast(meds), "event_type")
         .select($"event_type".as("gk"), abs($"v" - $"med").as("r"),
           $"v", $"med")
-      val mads = Scale.rankPickBy(s,
+      val mads = Scale.rankPickCounted(s,
           res.select($"gk", $"r".as("v")), "gk", "v",
-          (_, n) => disc(n), precounted = Some(counted))
+          (_, n) => disc(n), precounted = Some(counted))._1
         .select($"gk".as("event_type"), $"v".as("mad"))
       res.select($"gk".as("event_type"), $"r")
         .join(broadcast(mads), "event_type")
@@ -1600,7 +1600,7 @@ object Relational {
         .groupBy($"gk")
         .agg(
           // Column./ on longs is DOUBLE division — `div` keeps the rank
-          // arithmetic integral, matching rankPickBy's Scala ranks
+          // arithmetic integral, matching rankPickCounted's Scala ranks
           max(when($"rn" === expr("(n + 19) div 20"), $"v")).as("lo"),
           max(when($"rn" === expr("(19 * n + 19) div 20"), $"v")).as("hi"))
       ev.join(broadcast(bounds), $"event_type" === $"gk")

@@ -230,50 +230,27 @@ object Scale {
     * sample or the watermark scalar (SURVEY.md §7.5); row data never
     * leaves the cluster. More than `maxGroups` groups fail fast.
     *
-    * `ranksFor` maps each group's row count n to the ranks wanted
-    * (e.g. percentile interpolation needs ⌊p·(n−1)⌋+1 and ⌈p·(n−1)⌉+1).
-    * Returns (group, rn, v) — one row per requested rank.
+    * `ranksFor` maps each group and its row count n to the ranks wanted
+    * (e.g. percentile interpolation needs ⌊p·(n−1)⌋+1 and ⌈p·(n−1)⌉+1;
+    * pass `(_, n) => …` when the ranks ignore the group). Because the
+    * ranks are GROUP-AWARE, several logical rank-picks can share ONE
+    * global sort: melt the measures into a single (composite group,
+    * value) frame and give each composite its own rank set (q_percentile
+    * fuses its two measures this way, halving the sort job count).
     *
     * `precounted` is a cross-check, not an input: per-group totals the
     * caller already holds, in SPARK SORT ORDER of the group key (e.g.
-    * the counts an earlier [[rankPickCounted]] returned). They must
-    * equal the counts the pick derives from its own sort, or the call
-    * fails. The order is compared too, so the list must come from the
-    * engine, never a driver-side re-sort — Scala's UTF-16 String
-    * ordering and Spark's UTF8 binary ordering disagree on
-    * supplementary-plane characters. */
-  def rankPick(
-      spark: SparkSession,
-      df: DataFrame,
-      groupCol: String,
-      valCol: String,
-      ranksFor: Long => Seq[Long],
-      precounted: Option[Seq[(String, Long)]] = None,
-      maxGroups: Int = 100000): DataFrame =
-    rankPickBy(spark, df, groupCol, valCol, (_, n) => ranksFor(n), precounted,
-      maxGroups)
-
-  /** [[rankPick]] with GROUP-AWARE target ranks — lets several logical
-    * rank-picks share ONE global sort: melt the measures into a single
-    * (composite group, value) frame and give each composite its own rank
-    * set (q_percentile fuses its two measures this way, halving the
-    * sort job count). */
-  def rankPickBy(
-      spark: SparkSession,
-      df: DataFrame,
-      groupCol: String,
-      valCol: String,
-      ranksFor: (String, Long) => Seq[Long],
-      precounted: Option[Seq[(String, Long)]] = None,
-      maxGroups: Int = 100000): DataFrame =
-    rankPickCounted(spark, df, groupCol, valCol, ranksFor, precounted,
-      maxGroups)._1
-
-  /** [[rankPickBy]] that ALSO returns the per-group clean-row counts (in
-    * the global sort's group order) and, optionally, an `aux` frame the
-    * caller computes over the persisted sorted rows while they are still
-    * cached (eagerly localCheckpointed, same lifetime rules as the
-    * picked frame).
+    * the counts an earlier call returned). They must equal the counts
+    * the pick derives from its own sort, or the call fails. The order is
+    * compared too, so the list must come from the engine, never a
+    * driver-side re-sort — Scala's UTF-16 String ordering and Spark's
+    * UTF8 binary ordering disagree on supplementary-plane characters.
+    *
+    * Returns the picked (group, rn, v) rows — one per requested rank —
+    * the per-group clean-row counts (in the global sort's group order)
+    * and, optionally, an `aux` frame the caller computes over the
+    * persisted sorted rows while they are still cached (eagerly
+    * localCheckpointed, same lifetime rules as the picked frame).
     *
     * The counts cost no input pass of their own: they come from the
     * same (partition, group) census that yields the rank offsets, so a
@@ -318,7 +295,7 @@ object Scale {
     * task per ordering. Here the sort is a parallel RANGE sort over
     * (group, sortCols…) — desc/ties supported, pass the exact ORDER BY
     * columns. Several logical orderings share ONE sort via the
-    * [[rankPickBy]] melt idiom: tag each ordering's rows with a group
+    * [[rankPickCounted]] melt idiom: tag each ordering's rows with a group
     * and express the ordering so the tagged sort is ascending (q_rfm
     * melts its three quintile-boundary orderings into signed-long
     * metrics this way — one sort + one census + one pick instead of

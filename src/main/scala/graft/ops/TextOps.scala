@@ -2172,7 +2172,7 @@ FROM enc ORDER BY doc_id"""
     * NTILE(10) is the textbook formulation, but a global ntile is a
     * single-partition window sort — the q_percentile scale argument —
     * so the Spark side computes the 9 boundary keys with ONE
-    * range-sorted rank-pick ([[Scale.rankPickBy]], ntile's cumulative
+    * range-sorted rank-pick ([[Scale.rankPickCounted]], ntile's cumulative
     * bucket-size ranks b·⌊n/10⌋ + min(b, n mod 10)), broadcasts them,
     * and assigns bucket = 1 + #boundaries below the row's key — a
     * narrow projection. Oracle uses NTILE directly; the rank totalizer
@@ -2186,8 +2186,8 @@ FROM enc ORDER BY doc_id"""
         .select($"doc_id", $"n_chars".cast("long").as("nc"),
           ($"n_chars".cast("long") * lit(1000000000L) + $"doc_id").as("v"))
       val melted = docs.select(lit("all").as("gk"), $"v".cast("double").as("vv"))
-      val bounds = Scale.rankPickBy(s, melted, "gk", "vv",
-        (_, n) => (1L to 9L).map(b => (n / 10) * b + math.min(b, n % 10)).distinct)
+      val bounds = Scale.rankPickCounted(s, melted, "gk", "vv",
+        (_, n) => (1L to 9L).map(b => (n / 10) * b + math.min(b, n % 10)).distinct)._1
       val bArr = bounds.agg(sort_array(collect_list($"vv")).as("bs"))
       docs.crossJoin(broadcast(bArr))
         .withColumn("bucket",

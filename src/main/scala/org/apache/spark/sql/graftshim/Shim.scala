@@ -1,27 +1,19 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
+import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into Spark's `private[sql]` surface, required to hand
-  * a custom LogicalPlan (graft.plans.AsOfJoin) or Expression back to the
-  * public Dataset API, and to its `private[spark]` shutdown-delete hook
-  * for the engine's temp dirs. Placing one shim object inside the org.apache.spark.sql
-  * namespace is the standard technique external connectors/extensions
-  * use (the alternative — reflection — is slower and more brittle).
-  * Everything else in this repo lives in the graft.* namespace. */
+/** Minimal bridge into Spark's `private[sql]` surface, required to wrap
+  * a custom Expression (the pipeline's load-date parameter) in a public
+  * Column, and to its `private[spark]` shutdown-delete hook for the
+  * engine's temp dirs. Placing one shim object inside the
+  * org.apache.spark.sql namespace is the standard technique external
+  * connectors/extensions use (the alternative — reflection — is slower
+  * and more brittle). Everything else in this repo lives in the graft.*
+  * namespace. */
 object Shim {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    Dataset.ofRows(ClassicConversions.castToImpl(spark), plan)
-
-  def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
   def column(e: Expression): Column = ExpressionUtils.column(e)
-
-  def logicalPlan(df: DataFrame): LogicalPlan =
-    ClassicConversions.castToImpl(df).logicalPlan
 
   /** Registers `dir` with Spark's shutdown hook, which deletes it
     * recursively when the JVM exits; returns it as a string path. */

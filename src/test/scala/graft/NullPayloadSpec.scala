@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * way SQL aggregates do, never crash. (This sweep caught the
   * rank-pick family failing on null measures — q_percentile /
   * q_mad_outliers / q_winsorized_mean now null-skip like the built-in
-  * percentile, and Scale.rankPickBy drops null (group, value) rows
+  * percentile, and Scale.rankPickCounted drops null (group, value) rows
   * with a documented precounted contract.) */
 class NullPayloadSpec extends SparkSpec {
 

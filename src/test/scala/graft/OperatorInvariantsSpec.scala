@@ -1068,6 +1068,45 @@ class OperatorInvariantsSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  test("q_join_asof: equal-time orders are visible and the higher key wins, " +
+    "later orders are invisible, and null keys/times never match") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    def ts(t: String) = Option(t).map(java.sql.Timestamp.valueOf)
+    Seq(
+      (1L, ts("2024-01-05 00:00:00"), Some(5L)), // ties two orders
+      (2L, ts("2024-01-01 00:00:00"), Some(7L)), // before any order
+      (3L, ts("2024-03-01 00:00:00"), None),     // null user_id
+      (4L, ts(null), Some(5L)),                  // null ts
+      (5L, ts("2024-03-01 00:00:00"), Some(8L))) // only a null-date order
+      .toDF("event_id", "ts", "user_id")
+      .write.parquet(s"$dir/events.parquet")
+    val orders = Seq(
+      (10L, Some(5L), ts("2024-01-05 00:00:00")), // same instant as event 1
+      (11L, Some(5L), ts("2024-01-05 00:00:00")), // tie: higher key wins
+      (12L, Some(5L), ts("2024-01-06 00:00:00")), // after event 1: invisible
+      (20L, Some(7L), ts("2024-02-01 00:00:00")), // after event 2
+      (30L, None, ts("2024-01-01 00:00:00")),     // null custkey
+      (40L, Some(8L), ts(null)))                  // null orderdate
+      .toDF("o_orderkey", "o_custkey", "o_orderdate")
+    orders.write.parquet(s"$dir/orders.parquet")
+    def asof(d: String) = SparkEntry.all("q_join_asof").fn(spark, d)
+      .select($"event_id", $"asof_orderkey", $"asof_date".cast("string"))
+      .as[(Long, Option[Long], Option[String])].collect().toSeq
+    assert(asof(dir) === Seq(
+      (1L, Some(11L), Some("2024-01-05")),
+      (2L, None, None),
+      (3L, None, None),
+      (4L, None, None),
+      (5L, None, None)))
+    // an empty orders table: every event comes back once, unmatched
+    val noOrders = java.nio.file.Files.createTempDirectory("graft_asof0").toString
+    spark.read.parquet(s"$dir/events.parquet")
+      .write.parquet(s"$noOrders/events.parquet")
+    orders.filter(lit(false)).write.parquet(s"$noOrders/orders.parquet")
+    assert(asof(noOrders) === (1L to 5L).map(e => (e, None, None)))
+  }
+
   test("q_join_asof_near picks the closer of its backward/forward parents, " +
     "ties to backward") {
     import spark.implicits._

@@ -115,6 +115,30 @@ class PipelineSpec extends SparkSpec {
     assert(deduped.select($"avg_value").as[Double].head() === 99.0) // latest load wins
   }
 
+  test("readDeduped breaks an equal-load_date tie on the larger n, in either file order") {
+    import spark.implicits._
+    // a same-day rerun that saw late source rows: same (date, group,
+    // load_date), more rows behind the second mean. The larger-n row has
+    // the SMALLER avg_value, so an avg_value-first tie rule would fail.
+    def row(avg: Double, n: Long) =
+      Seq(("2024-01-01", "SE1", avg, n, "2024-01-02"))
+        .toDF("date", "group_key", "avg_value", "n", "load_date")
+        .select($"date".cast("date"), $"group_key", $"avg_value", $"n",
+          $"load_date".cast("date"))
+    val early = row(50.0, 3L)
+    val late = row(40.0, 5L)
+    Seq(Seq(early, late), Seq(late, early)).foreach { order =>
+      val sink = Files.createTempDirectory("graft_dedup_tie").toString + "/t"
+      // one file per append
+      order.foreach(_.coalesce(1).write.partitionBy("date").mode("append")
+        .parquet(sink))
+      assert(spark.read.parquet(sink).inputFiles.length === 2)
+      val got = Pipeline.readDeduped(spark, sink)
+        .select($"n", $"avg_value").as[(Long, Double)].collect().toSeq
+      assert(got === Seq((5L, 40.0)))
+    }
+  }
+
   test("partition-overwrite replaces only the delta's own date partitions") {
     val sink = Files.createTempDirectory("graft_dyn").toString + "/t"
     Pipeline.runIncremental(spark,

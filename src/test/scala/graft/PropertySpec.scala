@@ -64,8 +64,8 @@ class PropertySpec extends SparkSpec {
       val ref = data.groupBy(_._2).map { case (g, rs) =>
         g -> rs.map(_._3).sorted.toVector
       }
-      val picked = graft.ops.Scale.rankPick(spark, df, "g", "v",
-        n => Seq(1L, (n + 1) / 2, n).distinct)
+      val picked = graft.ops.Scale.rankPickCounted(spark, df, "g", "v",
+        (_, n) => Seq(1L, (n + 1) / 2, n).distinct)._1
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       assert(picked.nonEmpty)
       picked.foreach { case ((g, rn), v) =>

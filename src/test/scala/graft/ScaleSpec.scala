@@ -33,8 +33,8 @@ class ScaleSpec extends SparkSpec {
       ("a", 5.0), ("a", 1.0), ("a", 3.0), ("a", 3.0), ("a", 9.0),
       ("b", 2.0), ("b", 2.0), ("b", 8.0)
     ).toDF("g", "v").repartition(4) // scatter across partitions
-    val picked = Scale.rankPick(spark, df, "g", "v",
-      n => Seq(1L, (n + 1) / 2, n)) // min, lower median, max
+    val picked = Scale.rankPickCounted(spark, df, "g", "v",
+      (_, n) => Seq(1L, (n + 1) / 2, n))._1 // min, lower median, max
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(picked === Map(
       ("a", 1L) -> 1.0, ("a", 3L) -> 3.0, ("a", 5L) -> 9.0,
@@ -42,7 +42,8 @@ class ScaleSpec extends SparkSpec {
     // and it agrees with the window row_number formulation on real data
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select($"l_returnflag".as("g"), $"l_quantity".cast("double").as("v"))
-    val viaPick = Scale.rankPick(spark, li, "g", "v", n => Seq(1L, n / 2, n))
+    val viaPick = Scale.rankPickCounted(spark, li, "g", "v",
+      (_, n) => Seq(1L, n / 2, n))._1
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"g").orderBy($"v")
     val viaWindow = li.withColumn("rn", row_number().over(w).cast("long"))
@@ -114,19 +115,20 @@ class ScaleSpec extends SparkSpec {
     // not silently funnel the group census through the driver.
     val wide = (1 to 50).map(i => (s"g$i", i.toDouble)).toDF("g", "v")
     val e = intercept[IllegalArgumentException] {
-      Scale.rankPick(spark, wide, "g", "v", n => Seq(1L), maxGroups = 10)
+      Scale.rankPickCounted(spark, wide, "g", "v", (_, _) => Seq(1L),
+        maxGroups = 10)
     }
     assert(e.getMessage.contains("maxGroups") || e.getMessage.contains("groups"))
     // precounted path enforces the same cap
     val pre = (1 to 50).map(i => (s"g$i", 1L))
     val e2 = intercept[IllegalArgumentException] {
-      Scale.rankPick(spark, wide, "g", "v", n => Seq(1L),
+      Scale.rankPickCounted(spark, wide, "g", "v", (_, _) => Seq(1L),
         precounted = Some(pre), maxGroups = 10)
     }
     assert(e2.getMessage.contains("maxGroups"))
     // and below the cap the same call succeeds
-    assert(Scale.rankPick(spark, wide, "g", "v", n => Seq(1L),
-      maxGroups = 64).count() === 50L)
+    assert(Scale.rankPickCounted(spark, wide, "g", "v", (_, _) => Seq(1L),
+      maxGroups = 64)._1.count() === 50L)
   }
 
   test("rankPickBy refuses precounted counts that disagree with the sorted frame") {
@@ -135,12 +137,12 @@ class ScaleSpec extends SparkSpec {
       ("b", None)).toDF("g", "v").repartition(3)
     // the null measure drops before counting: b has ONE clean row
     val clean = Seq("a" -> 2L, "b" -> 1L)
-    assert(Scale.rankPickBy(spark, df, "g", "v", (_, n) => Seq(n),
-      precounted = Some(clean)).count() === 2L)
+    assert(Scale.rankPickCounted(spark, df, "g", "v", (_, n) => Seq(n),
+      precounted = Some(clean))._1.count() === 2L)
     // a miscount, a missing group and a driver-side re-order all fail
     Seq(Seq("a" -> 2L, "b" -> 2L), Seq("a" -> 2L), clean.reverse).foreach { pre =>
       val e = intercept[IllegalArgumentException] {
-        Scale.rankPickBy(spark, df, "g", "v", (_, n) => Seq(n),
+        Scale.rankPickCounted(spark, df, "g", "v", (_, n) => Seq(n),
           precounted = Some(pre))
       }
       assert(e.getMessage.contains("cross-check failed"), pre.toString)
