@@ -1320,8 +1320,9 @@ object TextOps {
       val block = Seq("slow", "dup", "big")
       val w = split($"text", " ")
       val hits = size(filter(w, x => x.isin(block: _*))).cast("long")
-      // no Tables.spread: ABBench r5 medians 0.31 s nospread vs 0.43 s
-      // spread — the per-row work is too light to amortize the exchange
+      // no Tables.spread: QTimer 7 at sf0.1 on 4 cores, 3 alternations,
+      // medians 0.39/0.36/0.48 s nospread vs 0.39/0.29/0.39 s spread — 2
+      // wins of 3, inside the 0.12 s swing between alternations
       Tables.documents(s, dir)
         .select(
           $"doc_id",
@@ -1356,7 +1357,8 @@ object TextOps {
       import s.implicits._
       val deny = Seq("customer", "value")
       val w = split($"text", " ")
-      // no Tables.spread: ABBench r5 medians 0.39 s nospread vs 0.48 s
+      // no Tables.spread: QTimer 7 at sf0.1 on 4 cores, 3 alternations,
+      // medians 0.40/0.39/0.47 s nospread vs 0.40/0.28/0.36 s spread
       Tables.documents(s, dir)
         .select(
           $"doc_id",
@@ -1463,7 +1465,8 @@ object TextOps {
   private val docChunks = QueryDef(
     (s, dir) => {
       import s.implicits._
-      // no Tables.spread: ABBench r5 medians 0.37 s nospread vs 0.82 s
+      // no Tables.spread: QTimer 7 at sf0.1 on 4 cores, 3 alternations,
+      // medians 0.33/0.28/0.40 s nospread vs 0.37/0.27/0.35 s spread
       Tables.documents(s, dir)
         .select($"doc_id", split($"text", " ").as("ws"))
         .withColumn("n", size($"ws").cast("long"))

@@ -3,7 +3,7 @@ package graft.util
 /** The engine's environment-variable config surface, in one documented
   * place — the neutral analog of the reference's `.env` keys
   * (`scripts/energy_etl.py:13-14`, GCP project/dataset via dotenv).
-  * Every tool main (`Bench`, `Verify`, `QTimer`, `JobProf`, `Explain`)
+  * Every tool main (`Bench`, `Verify`, `QTimer`, `Explain`)
   * and the test session build their SparkSession through [[Session]],
   * which reads through here, so the knob inventory and its defaults
   * can't drift between tools. Session values that only ever had one

@@ -1,16 +1,22 @@
 package graft.util
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
-/** Observability surface: a QueryExecutionListener that records, per
-  * completed action, the wall duration and the executed plan's headline
-  * metrics (output rows of the root node, files/bytes read summed over
+/** Observability surface, and the engine's one listener. Per session, a
+  * QueryExecutionListener records, per completed action, the wall
+  * duration and the executed plan's headline metrics (output rows of
+  * the topmost node that counts them, files/bytes read summed over
   * parquet scans) into a bounded in-memory ring. `report` hands the
   * captures back as a DataFrame so dashboards/tests consume them with
-  * the same API as everything else.
+  * the same API as everything else. Per SparkContext, a SparkListener
+  * records the jobs [[jobsDuring]] tags: wall, tasks and executor run
+  * time, with each stage attributed to the job that launched it.
   *
   * This is the single-process analog of a metrics sink: at production
   * scale the same listener forwards to the metrics system instead of a
@@ -19,108 +25,151 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * are collected by the executors as SQLMetrics regardless; reading
   * them after completion costs nothing extra).
   *
-  * Registration: `Metrics.install(spark)` (idempotent per session). */
+  * Registration: [[Session]] calls `Metrics.install(spark)` (idempotent
+  * per session) for every tool main and the test session. */
 object Metrics {
 
-  final case class Capture(
-      action: String,
-      durationMs: Long,
-      outputRows: Long,
-      filesRead: Long,
-      bytesRead: Long,
-      error: Option[String])
+  final case class Capture(action: String, durationMs: Long, outputRows: Long,
+      filesRead: Long, bytesRead: Long, error: Option[String])
 
-  /** Bounded ring per session — a listener that grows without bound is
-    * a driver leak; 4096 captures ≈ hours of interactive use.
-    *
-    * Both per-session maps hold WEAK keys: a session-cycling process
-    * (notebook kernels, test harnesses, long-lived services creating
-    * short-lived sessions) must not accumulate a ring + listener per
-    * dead session forever. The listener deliberately holds its RING,
-    * never its session — a strong session reference in a map value
-    * would pin the weak key of the same entry (the classic WeakHashMap
-    * self-reference pitfall) and re-create the leak. With that edge
-    * absent, an unreferenced session, its listenerManager, its
-    * listener, and its ring form one garbage cycle and are collected
-    * together; [[evict]] offers the deterministic form. */
-  private val MaxCaptures = 4096
-  private val rings = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.ArrayDeque[Capture]]())
+  /** One Spark job: wall from start to end event (`endMs` is -1 if the
+    * end never arrived), and the task count and executor run time of
+    * the stages it ran. */
+  final case class Job(id: Int, description: String, startMs: Long,
+      endMs: Long, tasks: Int, taskRunMs: Long)
 
-  private final class Listener(ring: java.util.ArrayDeque[Capture])
+  /** The local property [[jobsDuring]] sets; the jobs an action submits
+    * inherit it, including those of broadcasts and adaptive query stages
+    * run from other threads. */
+  private val TagKey = "graft.metrics.tag"
+
+  /** A session's listener. Its ring is bounded — a listener that grows
+    * without bound is a driver leak; 4096 captures ≈ hours of
+    * interactive use. It shares its context's job listener and never
+    * holds the session (see [[listeners]]). */
+  private final class Listener(val jobs: JobListener)
       extends QueryExecutionListener {
+    val ring = new java.util.ArrayDeque[Capture]()
     override def onSuccess(funcName: String, qe: QueryExecution,
                            durationNs: Long): Unit =
-      record(ring, funcName, qe, durationNs, None)
+      record(funcName, qe, durationNs, None)
     override def onFailure(funcName: String, qe: QueryExecution,
                            exception: Exception): Unit =
-      record(ring, funcName, qe, 0L, Some(exception.toString.take(200)))
+      record(funcName, qe, 0L, Some(exception.toString.take(200)))
+
+    private def record(funcName: String, qe: QueryExecution,
+                       durationNs: Long, err: Option[String]): Unit = {
+      // AdaptiveSparkPlanExec hides the current physical plan from
+      // child traversal, and a materialized AQE stage is a leaf whose
+      // real subplan hangs off `plan` — unwrap both (at any nesting
+      // depth), or every scan under a shuffle boundary goes uncounted
+      def below(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case n => n.children
+      }
+      // the root is often a WholeStageCodegenExec (whose only metric is
+      // pipelineTime), an InputAdapter or an adaptive wrapper: take the
+      // first node from the root down that counts its output rows
+      def rows(p: SparkPlan): Option[Long] = p.metrics.get("numOutputRows")
+        .map(_.value).orElse(below(p).iterator.flatMap(rows).nextOption())
+      def sum(p: SparkPlan, metric: String): Long =
+        p.metrics.get(metric).fold(0L)(_.value) +
+          (below(p) ++ p.subqueries).map(sum(_, metric)).sum
+      val plan = qe.executedPlan
+      val c = Capture(funcName, durationNs / 1000000L, rows(plan).getOrElse(-1L),
+        sum(plan, "numFiles"), sum(plan, "filesSize"), err)
+      ring.synchronized {
+        if (ring.size >= 4096) ring.removeFirst()
+        ring.addLast(c)
+      }
+    }
   }
 
-  private def record(ring: java.util.ArrayDeque[Capture], funcName: String,
-                     qe: QueryExecution, durationNs: Long,
-                     err: Option[String]): Unit = {
-    val plan = qe.executedPlan
-    val rows = plan.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-    var files = 0L; var bytes = 0L
-    // AdaptiveSparkPlanExec hides the current physical plan from child
-    // traversal — unwrap it (at any nesting depth) or scans go uncounted
-    def walk(p: SparkPlan): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      // materialized AQE stages are leaves whose real subplan hangs off
-      // `plan`, not `children` — without this case every scan under a
-      // shuffle boundary goes uncounted
-      case q: QueryStageExec => walk(q.plan)
-      case n =>
-        n.metrics.get("numFiles").foreach(m => files += m.value)
-        n.metrics.get("filesSize").foreach(m => bytes += m.value)
-        n.children.foreach(walk)
-        n.subqueries.foreach(walk)
-    }
-    walk(plan)
-    ring.synchronized {
-      if (ring.size >= MaxCaptures) ring.removeFirst()
-      ring.addLast(Capture(funcName, durationNs / 1000000L, rows,
-        files, bytes, err))
+  /** Records tagged jobs only; every callback runs on the listener-bus
+    * thread, and [[take]] reads after the bus is drained. */
+  private final class JobListener extends SparkListener {
+    private final class Rec(val tag: String, val id: Int, val desc: String,
+        val start: Long, var end: Long = -1L, var tasks: Int = 0,
+        var taskRunMs: Long = 0L)
+    private val recs = scala.collection.mutable.LinkedHashMap[Int, Rec]()
+    private val stageToJob = scala.collection.mutable.HashMap[Int, Int]()
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      Option(j.properties).flatMap(p => Option(p.getProperty(TagKey))).foreach {
+        tag => synchronized {
+          j.stageIds.foreach(stageToJob(_) = j.jobId)
+          recs(j.jobId) = new Rec(tag, j.jobId,
+            j.properties.getProperty("spark.job.description", ""), j.time)
+        }
+      }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      synchronized(recs.get(j.jobId).foreach(_.end = j.time))
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val info = s.stageInfo
+        stageToJob.get(info.stageId).flatMap(recs.get).foreach { r =>
+          r.tasks += info.numTasks
+          Option(info.taskMetrics).foreach(r.taskRunMs += _.executorRunTime)
+        }
+      }
+
+    /** The jobs that carried `tag`, in start order; drops them. */
+    def take(tag: String): Seq[Job] = synchronized {
+      val mine = recs.values.filter(_.tag == tag).toSeq
+      recs --= mine.map(_.id)
+      stageToJob.filterInPlace((_, job) => recs.contains(job))
+      mine.map(r => Job(r.id, r.desc, r.start, r.end, r.tasks, r.taskRunMs))
     }
   }
 
-  /** Listener per session, weak-keyed like [[rings]] (the value holds
-    * only the ring — see the leak note there). */
+  /** Listener per session, weak-keyed: a session-cycling process
+    * (notebook kernels, test harnesses, long-lived services creating
+    * short-lived sessions) must not keep a ring per dead session. A
+    * value that held its session would pin its own weak key (the
+    * classic WeakHashMap self-reference pitfall). */
   private val listeners = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, Listener]())
 
-  /** Idempotent install — one listener per session. */
-  def install(spark: SparkSession): Unit = listeners.synchronized {
-    if (!listeners.containsKey(spark)) {
-      val ring = rings.computeIfAbsent(spark,
-        _ => new java.util.ArrayDeque[Capture]())
-      val l = new Listener(ring)
+  /** Idempotent install — one QueryExecutionListener per session, one
+    * job listener per SparkContext. */
+  def install(spark: SparkSession): Unit = listener(spark): Unit
+
+  private def listener(spark: SparkSession): Listener = listeners.synchronized {
+    Option(listeners.get(spark)).getOrElse {
+      val sc = spark.sparkContext
+      val jobs = listeners.asScala
+        .collectFirst { case (s, l) if s.sparkContext eq sc => l.jobs }
+        .getOrElse { val j = new JobListener; sc.addSparkListener(j); j }
+      val l = new Listener(jobs)
       listeners.put(spark, l)
       spark.listenerManager.register(l)
+      l
     }
   }
 
-  /** Deterministic eviction for session-cycling drivers: unregister the
-    * listener and drop the ring; a later [[install]] starts fresh.
-    * (Sessions that are simply dropped are reclaimed by GC via the weak
-    * keys — this is the explicit form for immediate release.) */
-  def evict(spark: SparkSession): Unit = listeners.synchronized {
-    val l = listeners.remove(spark)
-    if (l != null) spark.listenerManager.unregister(l)
-    rings.remove(spark): Unit
+  /** `f`'s result and the Spark jobs it ran, in start order. `f` runs
+    * under a fresh tag (the previous one is restored afterwards); the
+    * listener bus is drained after `f`, outside any span `f` times. */
+  def jobsDuring[T](spark: SparkSession)(f: => T): (T, Seq[Job]) = {
+    val sc = spark.sparkContext
+    val jobs = listener(spark).jobs
+    val prev = sc.getLocalProperty(TagKey)
+    val tag = java.util.UUID.randomUUID().toString
+    sc.setLocalProperty(TagKey, tag)
+    val out = try scala.util.Try(f) finally sc.setLocalProperty(TagKey, prev)
+    Shim.drainListenerBus(sc)
+    val ran = jobs.take(tag)
+    (out.get, ran)
   }
 
-  /** Captures so far, oldest first. */
-  def captures(spark: SparkSession): Seq[Capture] = {
-    val ring = rings.get(spark)
-    if (ring == null) Seq.empty
-    else ring.synchronized {
-      val it = ring.iterator(); val b = Seq.newBuilder[Capture]
-      while (it.hasNext) b += it.next()
-      b.result()
+  /** Captures so far, oldest first; drains the listener bus first, so
+    * every action that has returned is in them. */
+  def captures(spark: SparkSession): Seq[Capture] =
+    Option(listeners.get(spark)).fold(Seq.empty[Capture]) { l =>
+      Shim.drainListenerBus(spark.sparkContext)
+      l.ring.synchronized(l.ring.asScala.toList)
     }
-  }
 
   /** The captures as a DataFrame (the library-idiomatic report form). */
   def report(spark: SparkSession): DataFrame = {
@@ -132,8 +181,6 @@ object Metrics {
         "bytes_read", "error")
   }
 
-  def reset(spark: SparkSession): Unit = {
-    val ring = rings.get(spark)
-    if (ring != null) ring.synchronized(ring.clear())
-  }
+  def reset(spark: SparkSession): Unit =
+    Option(listeners.get(spark)).foreach(l => l.ring.synchronized(l.ring.clear()))
 }

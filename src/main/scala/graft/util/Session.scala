@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession every tool main and the test suite run under, so
   * plan pins, Explain output and the oracle gate see the plans Bench
   * times. Cores and log level are the only things that vary; every other
-  * knob is read through [[Config]]. */
+  * knob is read through [[Config]]. Every session records its actions
+  * and tagged jobs through [[Metrics]]. */
 object Session {
   /** `SPARK_GRAFT_CPUS`, else every core of the box. */
   def defaultCores: Int =
@@ -43,6 +44,7 @@ object Session {
         .deleteOnExit(java.nio.file.Files.createTempDirectory("graft_wh")))
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    Metrics.install(spark)
     spark
   }
 }

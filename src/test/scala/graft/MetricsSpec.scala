@@ -3,72 +3,61 @@ package graft
 import graft.util.Metrics
 import org.apache.spark.sql.functions._
 
-/** The observability surface: listener captures actions with plausible
-  * metrics, the report round-trips as a DataFrame, and scan-level
-  * file/byte metrics surface for parquet reads. */
+/** The observability surface: the listener captures actions with
+  * plausible metrics, the report round-trips as a DataFrame, scan-level
+  * file/byte metrics surface for parquet reads, and tagged jobs carry
+  * their task counts. `captures` drains the listener bus, so nothing
+  * here polls. */
 class MetricsSpec extends SparkSpec {
 
-  private def awaitCaptures(timeoutMs: Long = 30000): Seq[Metrics.Capture] = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var caps = Metrics.captures(spark)
-    while (caps.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      caps = Metrics.captures(spark)
-    }
-    caps
-  }
-
   test("listener captures actions; parquet scans report files and bytes") {
-    Metrics.install(spark)
-    Metrics.install(spark) // idempotent
+    Metrics.install(spark) // a second install (the session made the first)
     Metrics.reset(spark)
     val n = spark.read.parquet(s"$sf/orders.parquet")
       .filter(col("o_totalprice") > 0).count()
     assert(n > 0)
-    // listener fires asynchronously on the listener bus — poll
-    val caps = awaitCaptures()
-    assert(caps.nonEmpty, "no captures recorded")
-    val withFiles = caps.filter(_.filesRead > 0)
-    assert(withFiles.nonEmpty, caps.toString)
-    assert(withFiles.exists(_.bytesRead > 0), withFiles.toString)
-    assert(caps.forall(_.durationMs >= 0))
-    assert(caps.forall(_.error.isEmpty), caps.flatMap(_.error).toString)
+    val caps = Metrics.captures(spark)
+    assert(caps.map(_.action) === Seq("count"), caps.toString)
+    val c = caps.head
+    assert(c.filesRead > 0 && c.bytesRead > 0, c.toString)
+    assert(c.outputRows === 1L, c.toString)
+    assert(c.durationMs >= 0 && c.error.isEmpty, c.toString)
+  }
+
+  test("a nation read and collect each run one one-task job; the collect " +
+    "captures its 25 rows") {
+    Metrics.reset(spark)
+    // the read infers the schema from the file footer in a job of its own
+    val (nation, readJobs) = Metrics.jobsDuring(spark)(
+      spark.read.parquet(s"$sf/nation.parquet"))
+    assert(readJobs.map(_.tasks) === Seq(1), readJobs.toString)
+    val (rows, jobs) = Metrics.jobsDuring(spark)(nation.collect())
+    assert(rows.length === 25)
+    assert(jobs.map(_.tasks) === Seq(1), jobs.toString)
+    assert(jobs.head.endMs >= jobs.head.startMs, jobs.toString)
+    val caps = Metrics.captures(spark)
+    assert(caps.map(c => (c.action, c.outputRows)) === Seq(("collect", 25L)),
+      caps.toString)
+  }
+
+  test("a failed action is captured once, with its error and no duration") {
+    Metrics.reset(spark)
+    intercept[Exception](spark.sql("SELECT assert_true(false)").collect())
+    val caps = Metrics.captures(spark)
+    assert(caps.size === 1, caps.toString)
+    assert(caps.head.error.exists(_.contains("USER_RAISED_EXCEPTION")), caps.toString)
+    assert(caps.head.durationMs === 0L, caps.toString)
   }
 
   test("report is a queryable DataFrame of the captures") {
-    Metrics.install(spark)
     Metrics.reset(spark)
     spark.read.parquet(s"$sf/nation.parquet").count()
-    val n = awaitCaptures().size
+    val n = Metrics.captures(spark).size
     val rep = Metrics.report(spark)
     assert(rep.columns.toSeq === Seq("action", "duration_ms", "output_rows",
       "files_read", "bytes_read", "error"))
     // collect() itself appends a capture AFTER materializing, so the
     // snapshot row count equals the pre-report capture count
     assert(rep.collect().length === n)
-  }
-
-  test("evict releases a session's captures and stops its listener; " +
-    "reinstall starts fresh without double-capturing") {
-    Metrics.install(spark)
-    Metrics.reset(spark)
-    spark.read.parquet(s"$sf/nation.parquet").count()
-    assert(awaitCaptures().nonEmpty)
-    Metrics.evict(spark)
-    assert(Metrics.captures(spark).isEmpty)
-    // evicted listener is unregistered: actions record nothing (listener
-    // bus is async — give it a beat before asserting the negative)
-    spark.read.parquet(s"$sf/region.parquet").count()
-    Thread.sleep(1500)
-    assert(Metrics.captures(spark).isEmpty)
-    // reinstall after evict records again, exactly once per action
-    Metrics.install(spark)
-    spark.read.parquet(s"$sf/nation.parquet").count()
-    assert(awaitCaptures().nonEmpty)
-    Thread.sleep(1500)
-    val perAction = Metrics.captures(spark).groupBy(_.action)
-    assert(perAction.values.forall(_.size == 1),
-      s"double capture after reinstall: $perAction")
-    Metrics.evict(spark)
   }
 }

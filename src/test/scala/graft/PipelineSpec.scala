@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Date
 import org.apache.spark.sql.functions._
 import graft.etl.Pipeline
+import graft.util.Metrics
 
 /** The re-grounded reference pipeline (graft.etl.Pipeline): cold start,
   * watermark resume, delta-only processing, schema-enforced append —
@@ -427,19 +428,20 @@ class PipelineSpec extends SparkSpec {
       ("2024-01-02 01:00:00", "SE1", 2.0), ("2024-01-02 01:00:00", "SE2", 3.0))),
       "zone", sink, Date.valueOf("2024-01-03"))
     // a MAX(date) scan before the listing: 3 jobs
-    assert(jobsDuring(Pipeline.watermark(spark, sink))._2 === 0)
+    assert(Metrics.jobsDuring(spark)(Pipeline.watermark(spark, sink))._2.size === 0)
     // the known sink schema replaces the footer schema-inference job:
     // 3 jobs before
-    assert(jobsDuring(Pipeline.readDeduped(spark, sink).collect())._2 <= 2)
+    assert(Metrics.jobsDuring(spark)(Pipeline.readDeduped(spark, sink).collect())
+      ._2.size <= 2)
     // a warm upsert observes its partition set on the checkpoint of the
     // updates instead of a separate distinct-collect: 6 jobs before
     val fix = Seq(("2024-01-02", "SE1", 20.0, 1L, "2024-01-04"))
       .toDF("date", "group_key", "avg_value", "n", "load_date")
       .select(col("date").cast("date"), col("group_key"), col("avg_value"),
         col("n"), col("load_date").cast("date"))
-    val (n, upsertJobs) = jobsDuring(Pipeline.upsert(spark, fix, sink))
+    val (n, upsertJobs) = Metrics.jobsDuring(spark)(Pipeline.upsert(spark, fix, sink))
     assert(n === 2L)
-    assert(upsertJobs <= 5)
+    assert(upsertJobs.size <= 5)
   }
 
   test("clusteredWrite yields disjoint per-file key ranges (file-skipping layout)") {
@@ -858,7 +860,7 @@ class PipelineSpec extends SparkSpec {
     try {
       assert(Pipeline.runIncremental(spark, src, "zone", sink,
         Date.valueOf("2024-08-04")) === 2)
-      org.apache.spark.graftshim.Bus.drain(spark.sparkContext)
+      org.apache.spark.sql.graftshim.Shim.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     // to_date(ts) > 2024-08-01 reaches parquet as ts >= 2024-08-02 00:00
     val scans = plans.toArray.map(_.toString).flatMap(_.linesIterator)

@@ -33,4 +33,10 @@ class SessionSpec extends SparkSpec {
     assert(wh.getName.startsWith("graft_wh"), wh)
     assert(org.apache.spark.graftshim.Bus.deletedOnExit(wh), wh)
   }
+
+  test("the session records actions with no install call") {
+    graft.util.Metrics.reset(spark)
+    spark.range(3).collect()
+    assert(graft.util.Metrics.captures(spark).map(_.action) === Seq("collect"))
+  }
 }
