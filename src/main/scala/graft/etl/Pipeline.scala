@@ -375,6 +375,10 @@ object Pipeline {
     // partitions the delete emptied never appear in the staged frame —
     // dynamic overwrite leaves their files behind; drop them explicitly
     val survivors = partitionsSeen(obsA).toSet
+    // through the sink's own FileSystem, as watermark and upsert read
+    // it: a `file:/…` or `hdfs://…` sink names no local java.io path
+    val root = new org.apache.hadoop.fs.Path(sinkDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     affected.filterNot(survivors.contains).foreach { p =>
       // Spark URL-escapes partition values in directory names (spaces,
       // ':', '%', …) and writes NULL as __HIVE_DEFAULT_PARTITION__ — a
@@ -383,7 +387,7 @@ object Pipeline {
       // escaping the writer used (null/empty → the default partition).
       val dirName = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .getPartitionPathString(partitionCol, if (p == null) null else p.toString)
-      FileUtil.fullyDelete(new java.io.File(s"$sinkDir/$dirName")): Unit
+      fs.delete(new org.apache.hadoop.fs.Path(root, dirName), true): Unit
     }
     val deleted = before - after
     // post-condition — GDPR verb, verify don't trust: no surviving sink

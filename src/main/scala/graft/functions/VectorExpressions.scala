@@ -145,8 +145,10 @@ case class L2Norm(child: Expression) extends UnaryExpression {
 }
 
 /** Session-extension plugin, required by the engine: the declared
-  * queries call its functions directly, and its one optimizer rule
-  * ([[NativeDoubleRound]]) rewrites their double ROUNDs; it injects no
+  * queries call its functions directly, its optimizer rule
+  * ([[NativeDoubleRound]]) rewrites their double ROUNDs, and its
+  * query-stage preparation rule ([[GatherSmallSort]]) gathers a small
+  * ORDER BY result into one partition when AQE re-plans; it injects no
   * planner strategy. [[graft.util.Session]] installs it
   * (`spark.sql.extensions`) in every session — every main and the
   * tests. */
@@ -220,5 +222,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Spark rounds a double through java.math.BigDecimal on every row;
     // this rule swaps in the bit-equal native kernel
     ext.injectOptimizerRule(_ => NativeDoubleRound)
+    // a small ORDER BY result skips the range exchange's sampling job
+    ext.injectQueryStagePrepRule(_ => GatherSmallSort)
   }
 }

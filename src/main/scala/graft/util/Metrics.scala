@@ -34,7 +34,9 @@ object Metrics {
 
   /** One Spark job: wall from start to end event (`endMs` is -1 if the
     * end never arrived), and the task count and executor run time of
-    * the stages it ran. */
+    * the stages it ran. `description` is `spark.job.description` when
+    * set, else the RDD operation scopes of the job's last stage, topmost
+    * first. */
   final case class Job(id: Int, description: String, startMs: Long,
       endMs: Long, tasks: Int, taskRunMs: Long)
 
@@ -100,9 +102,14 @@ object Metrics {
         tag => synchronized {
           j.stageIds.foreach(stageToJob(_) = j.jobId)
           recs(j.jobId) = new Rec(tag, j.jobId,
-            j.properties.getProperty("spark.job.description", ""), j.time)
+            Option(j.properties.getProperty("spark.job.description"))
+              .getOrElse(lastStageScopes(j)), j.time)
         }
       }
+    // no description set: name the job by the operators its last stage
+    // runs
+    private def lastStageScopes(j: SparkListenerJobStart): String =
+      j.stageInfos.maxByOption(_.stageId).fold("")(Shim.scopeNames(_).mkString(", "))
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       synchronized(recs.get(j.jobId).foreach(_.end = j.time))
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =

@@ -6,8 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into Spark's `private[sql]` surface, required to wrap
   * a custom Expression (the pipeline's load-date parameter) in a public
-  * Column, and to two `private[spark]` calls: the shutdown-delete hook
-  * for the engine's temp dirs and the listener-bus drain. Placing one
+  * Column, and to three `private[spark]` calls: the shutdown-delete hook
+  * for the engine's temp dirs, the listener-bus drain and a stage's RDD
+  * operation scopes. Placing one
   * shim object inside the org.apache.spark.sql namespace is the
   * standard technique external connectors/extensions use (the
   * alternative — reflection — is slower and more brittle). Everything else in this repo lives in the graft.*
@@ -26,4 +27,11 @@ object Shim {
     * far (`util.Metrics` reads its records after this). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The distinct RDD operation-scope names of a stage's RDDs, the
+    * topmost RDD first: the physical operators (`Exchange`,
+    * `WholeStageCodegen (2)`, `Scan parquet`) or RDD API calls that
+    * built them. `RDDOperationScope` is `private[spark]`. */
+  def scopeNames(stage: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    stage.rddInfos.sortBy(-_.id).flatMap(_.scope.map(_.name)).distinct
 }

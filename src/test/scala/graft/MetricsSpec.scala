@@ -40,6 +40,20 @@ class MetricsSpec extends SparkSpec {
       caps.toString)
   }
 
+  test("a job with no spark.job.description is named by its last stage's " +
+    "operation scopes") {
+    val df = SparkEntry.all("q_daily_avg").fn(spark, sf)
+    val (_, jobs) = Metrics.jobsDuring(spark)(df.collect())
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.description.nonEmpty), jobs.toString)
+    // a set description wins
+    spark.sparkContext.setJobDescription("nation count")
+    val (_, named) = try Metrics.jobsDuring(spark)(
+      spark.read.parquet(s"$sf/nation.parquet").collect())
+      finally spark.sparkContext.setJobDescription(null)
+    assert(named.nonEmpty && named.forall(_.description == "nation count"), named.toString)
+  }
+
   test("a failed action is captured once, with its error and no duration") {
     Metrics.reset(spark)
     intercept[Exception](spark.sql("SELECT assert_true(false)").collect())

@@ -635,6 +635,23 @@ class PipelineSpec extends SparkSpec {
     assert(state() === Set(("2024-01-01", "SE2"), ("2024-01-02", "SE3")))
   }
 
+  test("deleteKeys on a sink given as a file: URI removes the date it " +
+    "emptied, and the watermark moves back") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_del_uri").resolve("t")
+    val sink = dir.toUri.toString
+    assert(sink.startsWith("file:"), sink)
+    Pipeline.runIncremental(spark, events(Seq(
+      ("2024-01-01 01:00:00", "SE1", 10.0), ("2024-01-02 01:00:00", "SE9", 20.0))),
+      "zone", sink, Date.valueOf("2024-01-03"))
+    assert(Pipeline.watermark(spark, sink) === Some(Date.valueOf("2024-01-02")))
+    assert(Pipeline.deleteKeys(spark, Seq("SE9").toDF("group_key"), sink) === 1L)
+    assert(!dir.resolve("date=2024-01-02").toFile.exists())
+    assert(Pipeline.watermark(spark, sink) === Some(Date.valueOf("2024-01-01")))
+    // the re-run is a no-op, not a post-condition failure
+    assert(Pipeline.deleteKeys(spark, Seq("SE9").toDF("group_key"), sink) === 0L)
+  }
+
   test("deleteKeys: crash between commit and dir removal — re-run IS the " +
     "recovery path; post-condition blocks a false success") {
     import spark.implicits._

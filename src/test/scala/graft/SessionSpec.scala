@@ -27,6 +27,11 @@ class SessionSpec extends SparkSpec {
     assert(!exprs.exists(_.exists(_.isInstanceOf[Round])), opt)
   }
 
+  test("the session installs the small-sort gathering rule") {
+    assert(spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
+      .contains(graft.functions.GatherSmallSort))
+  }
+
   test("the session's warehouse dir is deleted when the JVM exits") {
     val wh = new java.io.File(new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
