@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.hadoop.fs.FileUtil
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.LeafExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -44,7 +45,10 @@ import org.apache.spark.sql.types._
   *    A `reprocessDays` overlap window rolls the watermark back n days
   *    each run, making partial-write damage self-healing (the standard
   *    reprocessing-window idiom); [[upsert]] and [[deleteKeys]] commit
-  *    their copy-on-write result as the same overwrite.
+  *    their copy-on-write result as the same overwrite;
+  *  - every verb reaches its files through the sink's own Hadoop file
+  *    system, and [[writeVersioned]] and [[compact]] move a staged
+  *    directory into place with one no-overwrite [[publish]].
   */
 object Pipeline {
 
@@ -87,32 +91,53 @@ object Pipeline {
     * footer or data read: the newest `date=` directory that holds a
     * visible data file. That is the answer a `MAX(date)` scan of the
     * sink gives, because the scan sees exactly the rows of those files:
-    *  - names starting with `_` or `.` are hidden from Spark's file
-    *    listing (`_temporary`, `.spark-staging-*`, `_SUCCESS`, `.crc`), so
-    *    a crashed append's or overwrite's uncommitted output never counts;
+    *  - [[hidden]] names never count, so neither does a crashed
+    *    append's or overwrite's uncommitted output;
     *  - a date directory with no visible file (a partition whose removal
     *    was interrupted) contributes no rows;
     *  - `__HIVE_DEFAULT_PARTITION__` is the NULL date, which MAX ignores.
     * Newest first, so a daily run lists the sink root and one date
     * directory. */
   def watermark(spark: SparkSession, sinkDir: String): Option[java.sql.Date] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val root = new Path(sinkDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("date=") &&
-        d.getPath.getName != s"date=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")
-      .map(d => java.time.LocalDate.parse(ExternalCatalogUtils.unescapePathName(
-        d.getPath.getName.stripPrefix("date="))) -> d.getPath)
+    val fs = fileSystem(spark, root)
+    partitionDirs(fs, root)
+      .collect { case ("date", day, dir) if day != ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
+        java.time.LocalDate.parse(day) -> dir }
       .sortBy(-_._1.toEpochDay)
       .collectFirst { case (day, dir)
-        if fs.listStatus(dir).exists(f => f.isFile && visible(f.getPath)) =>
+        if fs.listStatus(dir).exists(f => f.isFile && !hidden(f.getPath)) =>
         java.sql.Date.valueOf(day)
       }
   }
+
+  /** The Hadoop file system that holds `dir`: a plain path, a `file:`
+    * URI or any scheme Hadoop serves. */
+  private def fileSystem(spark: SparkSession, dir: Path): FileSystem =
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Names Spark's file listing skips: `_temporary`, `.spark-staging-*`,
+    * `_SUCCESS`, `.crc`, and the staging names of this object's verbs. */
+  private def hidden(p: Path): Boolean =
+    p.getName.startsWith("_") || p.getName.startsWith(".")
+
+  /** The visible `key=value` subdirectories of `root` (none if `root` is
+    * missing), as (key, unescaped value, directory). */
+  private def partitionDirs(fs: FileSystem, root: Path): Seq[(String, String, Path)] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.collect {
+      case d if d.isDirectory && !hidden(d.getPath) && d.getPath.getName.contains("=") =>
+        val Array(key, value) = d.getPath.getName.split("=", 2)
+        (key, ExternalCatalogUtils.unescapePathName(value), d.getPath)
+    }
+
+  /** Publishes the complete directory `staged` as `live` in one rename
+    * that fails, leaving both as they were, when `live` already exists.
+    * `FileSystem.rename` cannot do this: onto an existing directory it
+    * moves `staged` inside it. */
+  private def publish(spark: SparkSession, staged: Path, live: Path): Unit =
+    FileContext.getFileContext(fileSystem(spark, live).getUri,
+      spark.sparkContext.hadoopConfiguration).rename(staged, live, Options.Rename.NONE)
 
   /** One incremental run: reduce source rows with date > watermark to one
     * (date, group) mean row each and commit them to the sink. Returns the
@@ -250,8 +275,8 @@ object Pipeline {
     // so the per-call parquet footer schema-inference read is pure
     // overhead — the streaming sink pays it every micro-batch (§6). With
     // the schema known, a new (empty) sink directory reads as zero rows.
-    val root = new org.apache.hadoop.fs.Path(sinkDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root): Unit
+    val root = new Path(sinkDir)
+    fileSystem(spark, root).mkdirs(root): Unit
     val existing = spark.read.schema(updates.schema).parquet(sinkDir)
       .filter(inPartitions(partitionCol, affected))
     // null-safe key match: an update keyed on a NULL partition value
@@ -260,19 +285,6 @@ object Pipeline {
     val keep = existing.join(newKeys,
       keyCols.map(k => existing(k) <=> newKeys(k)).reduce(_ && _), "left_anti")
     val merged = keep.unionByName(upd)
-    // r14 (guide §1.4/§6): materialize the merge with an eager
-    // localCheckpoint instead of the parquet staging round-trip the
-    // r13 shape paid per call (staging write job + dir listing +
-    // footer read + re-read + rm — the streaming sink calls through
-    // here EVERY micro-batch). The checkpoint serves staging's two
-    // purposes: (a) read-overwrite hazard — the overwrite's input is
-    // executor-local blocks with TRUNCATED lineage, so no task
-    // (including retries) can re-read sink files mid-replacement;
-    // (b) crash isolation — the sink is untouched until the single
-    // overwrite job. Cluster caveat (rankPickCounted's class): an executor
-    // loss during the overwrite fails the job instead of recomputing
-    // from half-replaced files; the re-run IS the recovery path
-    // (idempotent), exactly as for a crash mid-overwrite before.
     commit(merged.localCheckpoint(eager = true), sinkDir, partitionCol,
       replace = true)
   }
@@ -362,12 +374,8 @@ object Pipeline {
     val keep = existing.observe(obsB, count(lit(1)).as("n"))
       .join(keyFrame, keyCols.toIndexedSeq, "left_anti")
       .observe(obsA, count(lit(1)).as("n"), parts, nulls)
-    // r14: eager localCheckpoint replaces the parquet staging round-trip
-    // (write + list + re-read + rm per call — the bench delete entry
-    // calls this twice); the observations ride the checkpoint job. Same
-    // hazard analysis as upsert stage 2: truncated lineage means no
-    // overwrite task can re-read sink files, and an executor loss fails
-    // the job — the idempotent re-run is the recovery path.
+    // the observations ride the checkpoint job; as in upsert's stage 2,
+    // its truncated lineage keeps every overwrite task off the sink files
     val staged = keep.localCheckpoint(eager = true)
     val before = obsB.get("n").asInstanceOf[Long]
     val after = obsA.get("n").asInstanceOf[Long]
@@ -375,19 +383,17 @@ object Pipeline {
     // partitions the delete emptied never appear in the staged frame —
     // dynamic overwrite leaves their files behind; drop them explicitly
     val survivors = partitionsSeen(obsA).toSet
-    // through the sink's own FileSystem, as watermark and upsert read
-    // it: a `file:/…` or `hdfs://…` sink names no local java.io path
-    val root = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(sinkDir)
+    val fs = fileSystem(spark, root)
     affected.filterNot(survivors.contains).foreach { p =>
       // Spark URL-escapes partition values in directory names (spaces,
       // ':', '%', …) and writes NULL as __HIVE_DEFAULT_PARTITION__ — a
       // raw s"$col=$p" path misses those dirs and silently leaves
       // "deleted" rows on disk. getPartitionPathString applies the same
       // escaping the writer used (null/empty → the default partition).
-      val dirName = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      val dirName = ExternalCatalogUtils
         .getPartitionPathString(partitionCol, if (p == null) null else p.toString)
-      fs.delete(new org.apache.hadoop.fs.Path(root, dirName), true): Unit
+      fs.delete(new Path(root, dirName), true): Unit
     }
     val deleted = before - after
     // post-condition — GDPR verb, verify don't trust: no surviving sink
@@ -468,69 +474,57 @@ object Pipeline {
   // ------------------------------------------------ versioned snapshots
 
   /** Versioned snapshot write (time-travel-lite — the Delta/Iceberg
-    * commit idea re-grounded on plain Parquet): each publish lands in
-    * an immutable `v=N` subdirectory, and a `_latest` pointer file is
-    * swapped in with an atomic rename ONLY after the data write
-    * completed — readers either see the previous consistent version or
-    * the new one, never a half-written directory. Old versions stay
-    * readable (audit / rollback / reproducing a training run) until
-    * [[vacuumVersions]] retires them. Returns the new version number.
+    * commit idea re-grounded on plain Parquet): the frame is written to
+    * a hidden `.v=N.staging`, then [[publish]]ed as an immutable `v=N`,
+    * so a visible `v=N` is always complete. A crashed write leaves only
+    * the staging directory, which readers and vacuum never see and the
+    * next write drops. Old versions stay readable (audit / rollback)
+    * until [[vacuumVersions]] retires them. Returns the new version.
     *
-    * Concurrency contract (same as [[upsert]]): one writer per table —
-    * the rename is the commit point, not a lock. */
+    * One writer per table (as [[upsert]]): a second publish of the same
+    * `N` fails and leaves `v=N` untouched. */
   def writeVersioned(spark: SparkSession, df: DataFrame,
                      tableDir: String): Int = {
-    val next = versions(tableDir).lastOption.getOrElse(0) + 1
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$tableDir/v=$next")
-    val tmp = java.nio.file.Paths.get(tableDir, s"._latest.tmp$next")
-    java.nio.file.Files.writeString(tmp, next.toString)
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(tableDir, "_latest"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val root = new Path(tableDir)
+    val fs = fileSystem(spark, root)
+    val next = versions(spark, tableDir).lastOption.getOrElse(0) + 1
+    val staged = new Path(root, s".v=$next.staging")
+    fs.delete(staged, true): Unit
+    df.write.parquet(staged.toString)
+    try publish(spark, staged, new Path(root, s"v=$next"))
+    finally fs.delete(staged, true): Unit
     next
   }
 
-  /** Committed versions of a [[writeVersioned]] table, ascending. */
-  def versions(tableDir: String): Seq[Int] = {
-    val d = new java.io.File(tableDir)
-    val kids = Option(d.listFiles()).getOrElse(Array.empty)
-    kids.collect {
-      case f if f.isDirectory && f.getName.startsWith("v=") =>
-        f.getName.stripPrefix("v=").toInt
-    }.sorted.toSeq
+  /** Published versions of a [[writeVersioned]] table, ascending. */
+  def versions(spark: SparkSession, tableDir: String): Seq[Int] = {
+    val root = new Path(tableDir)
+    partitionDirs(fileSystem(spark, root), root)
+      .collect { case ("v", n, _) => n.toInt }.sorted
   }
 
-  /** Read a specific snapshot (time travel) or, by default, the version
-    * the `_latest` commit pointer names — NOT simply the max directory,
-    * so a crashed writer's orphan `v=N` (data written, pointer never
-    * swapped) is invisible until its commit completes. */
+  /** [[versions]], refusing a table that has none. */
+  private def published(spark: SparkSession, tableDir: String): Seq[Int] = {
+    val vs = versions(spark, tableDir)
+    require(vs.nonEmpty, s"$tableDir has no published version (no v=N directory)")
+    vs
+  }
+
+  /** Read a specific snapshot (time travel) or, by default, the newest
+    * published one. */
   def readVersion(spark: SparkSession, tableDir: String,
-                  version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse {
-      val p = java.nio.file.Paths.get(tableDir, "_latest")
-      require(java.nio.file.Files.exists(p),
-        s"$tableDir has no committed version (_latest missing)")
-      java.nio.file.Files.readString(p).trim.toInt
-    }
-    spark.read.parquet(s"$tableDir/v=$v")
-  }
+                  version: Option[Int] = None): DataFrame =
+    spark.read.parquet(s"$tableDir/v=${version.getOrElse(published(spark, tableDir).last)}")
 
-  /** Retire all but the newest `keep` committed versions (the vacuum
-    * half of the snapshot lifecycle). Only versions BELOW the `_latest`
-    * pointer are eligible: the pointed-at version is live, and anything
-    * above it is an in-flight commit (data written, pointer not yet
-    * swapped) that vacuum must never race. Returns the dropped
+  /** Retire all but the newest `keep` published versions (the vacuum
+    * half of the snapshot lifecycle). An in-flight write is a hidden
+    * staging directory, so vacuum never races it. Returns the dropped
     * version numbers. */
-  def vacuumVersions(tableDir: String, keep: Int = 2): Seq[Int] = {
+  def vacuumVersions(spark: SparkSession, tableDir: String, keep: Int = 2): Seq[Int] = {
     require(keep >= 1, "must keep at least the latest version")
-    val latestPath = java.nio.file.Paths.get(tableDir, "_latest")
-    require(java.nio.file.Files.exists(latestPath),
-      s"$tableDir has no committed version (_latest missing) — " +
-        "not a versioned table, or no commit completed; refusing to vacuum")
-    val latest = java.nio.file.Files.readString(latestPath).trim.toInt
-    val drop = versions(tableDir).filter(_ < latest).dropRight(keep - 1)
-    drop.foreach(v => FileUtil.fullyDelete(new java.io.File(s"$tableDir/v=$v")): Unit)
+    val drop = published(spark, tableDir).dropRight(keep)
+    val fs = fileSystem(spark, new Path(tableDir))
+    drop.foreach(v => fs.delete(new Path(tableDir, s"v=$v"), true): Unit)
     drop
   }
 
@@ -544,7 +538,7 @@ object Pipeline {
     * the file-count drop, and crash-point recovery). Row content is
     * untouched.
     *
-    * Commit protocol (each step is a single directory rename):
+    * Commit protocol (each rename is one [[publish]]):
     *  1. write the compacted copy to `<parent>/.<leaf>.compact_staging`
     *     (beside, never inside, the target);
     *  2. verify the staged row count;
@@ -570,37 +564,30 @@ object Pipeline {
     * would flatten its partition columns into file columns. */
   def compact(spark: SparkSession, dir: String,
               targetRowsPerFile: Long): Int = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val base = dir.stripSuffix("/")
-    val live = Paths.get(base)
-    val staging = live.resolveSibling(s".${live.getFileName}.compact_staging").toString
-    val retired = live.resolveSibling(s".${live.getFileName}.compact_old").toString
+    val live = new Path(dir)
+    val fs = fileSystem(spark, live)
+    val staging = new Path(live.getParent, s".${live.getName}.compact_staging")
+    val retired = new Path(live.getParent, s".${live.getName}.compact_old")
     // crash recovery from a previous interrupted run (see scaladoc)
-    if (!Files.exists(Paths.get(base)) && Files.exists(Paths.get(retired)))
-      Files.move(Paths.get(retired), Paths.get(base),
-        StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(Paths.get(retired))) FileUtil.fullyDelete(new java.io.File(retired)): Unit
-    if (Files.exists(Paths.get(staging))) FileUtil.fullyDelete(new java.io.File(staging)): Unit
+    if (!fs.exists(live) && fs.exists(retired)) publish(spark, retired, live)
+    fs.delete(retired, true): Unit
+    fs.delete(staging, true): Unit
     // a partitioned root (`k=v` subdirectories) would come back flat: the
     // rewrite turns its partition columns into file columns, and the
     // watermark listing then finds no `date=` directory
-    val partitionDir = Option(new java.io.File(base).listFiles()).toSeq.flatten
-      .collectFirst { case f if f.isDirectory && f.getName.contains("=") &&
-        !f.getName.startsWith("_") && !f.getName.startsWith(".") => f.getName }
-    require(partitionDir.isEmpty, s"compact: $base is a partitioned table " +
+    val partitionDir = partitionDirs(fs, live).headOption.map(_._3.getName)
+    require(partitionDir.isEmpty, s"compact: $live is a partitioned table " +
       s"root (${partitionDir.get}); compact one leaf partition directory at a time")
 
-    val df = spark.read.parquet(base)
+    val df = spark.read.parquet(live.toString)
     val n = df.count()
     val files = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
-    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(staging)
-    require(spark.read.schema(df.schema).parquet(staging).count() == n,
+    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    require(spark.read.schema(df.schema).parquet(staging.toString).count() == n,
       "compaction must not change row count")
-    Files.move(Paths.get(base), Paths.get(retired),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(staging), Paths.get(base),
-      StandardCopyOption.ATOMIC_MOVE)
-    FileUtil.fullyDelete(new java.io.File(retired)): Unit
+    publish(spark, live, retired)
+    publish(spark, staging, live)
+    fs.delete(retired, true): Unit
     files
   }
 }

@@ -36,7 +36,7 @@ object Metrics {
     * end never arrived), and the task count and executor run time of
     * the stages it ran. `description` is `spark.job.description` when
     * set, else the RDD operation scopes of the job's last stage, topmost
-    * first. */
+    * first, then `[shuffle map]` or `[result]` for that stage's kind. */
   final case class Job(id: Int, description: String, startMs: Long,
       endMs: Long, tasks: Int, taskRunMs: Long)
 
@@ -107,9 +107,13 @@ object Metrics {
         }
       }
     // no description set: name the job by the operators its last stage
-    // runs
+    // runs and by whether that stage feeds a shuffle — a range exchange's
+    // sampling job and its shuffle-map job share the operators
     private def lastStageScopes(j: SparkListenerJobStart): String =
-      j.stageInfos.maxByOption(_.stageId).fold("")(Shim.scopeNames(_).mkString(", "))
+      j.stageInfos.maxByOption(_.stageId).fold("") { s =>
+        Shim.scopeNames(s).mkString(", ") +
+          (if (Shim.isShuffleMap(s)) " [shuffle map]" else " [result]")
+      }
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       synchronized(recs.get(j.jobId).foreach(_.end = j.time))
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =

@@ -6,9 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into Spark's `private[sql]` surface, required to wrap
   * a custom Expression (the pipeline's load-date parameter) in a public
-  * Column, and to three `private[spark]` calls: the shutdown-delete hook
-  * for the engine's temp dirs, the listener-bus drain and a stage's RDD
-  * operation scopes. Placing one
+  * Column, and to four `private[spark]` calls: the shutdown-delete hook
+  * for the engine's temp dirs, the listener-bus drain, a stage's RDD
+  * operation scopes and its shuffle dependency. Placing one
   * shim object inside the org.apache.spark.sql namespace is the
   * standard technique external connectors/extensions use (the
   * alternative — reflection — is slower and more brittle). Everything else in this repo lives in the graft.*
@@ -34,4 +34,9 @@ object Shim {
     * built them. `RDDOperationScope` is `private[spark]`. */
   def scopeNames(stage: org.apache.spark.scheduler.StageInfo): Seq[String] =
     stage.rddInfos.sortBy(-_.id).flatMap(_.scope.map(_.name)).distinct
+
+  /** Whether a stage writes shuffle output rather than returning results;
+    * `StageInfo.shuffleDepId` is `private[spark]`. */
+  def isShuffleMap(stage: org.apache.spark.scheduler.StageInfo): Boolean =
+    stage.shuffleDepId.isDefined
 }

@@ -54,6 +54,33 @@ class MetricsSpec extends SparkSpec {
     assert(named.nonEmpty && named.forall(_.description == "nation count"), named.toString)
   }
 
+  test("a range exchange's sampling job and its shuffle-map job get " +
+    "different descriptions") {
+    // no AQE broadcast threshold turns GatherSmallSort off, so the final
+    // ORDER BY keeps its range exchange
+    val key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    def run() = {
+      spark.conf.set(key, "-1")
+      try Metrics.jobsDuring(spark)(SparkEntry.all("q_daily_avg").fn(spark, sf).collect())._2
+      finally spark.conf.unset(key)
+    }
+    val jobs = run()
+    def kind(j: Metrics.Job) = j.description.drop(j.description.lastIndexOf(" ["))
+    def scopes(j: Metrics.Job) = j.description.stripSuffix(kind(j))
+    // the sampling job returns its sketch to the driver, the shuffle-map
+    // job writes the exchange's shuffle output: the same operators
+    val sampling = jobs.filter(j => kind(j) == " [result]" && scopes(j).startsWith("Exchange"))
+    assert(sampling.nonEmpty, jobs.toString)
+    sampling.foreach { s =>
+      assert(jobs.exists(j => kind(j) == " [shuffle map]" && scopes(j) == scopes(s)),
+        jobs.toString)
+    }
+    // a set description wins
+    spark.sparkContext.setJobDescription("daily avg")
+    val named = try run() finally spark.sparkContext.setJobDescription(null)
+    assert(named.nonEmpty && named.forall(_.description == "daily avg"), named.toString)
+  }
+
   test("a failed action is captured once, with its error and no duration") {
     Metrics.reset(spark)
     intercept[Exception](spark.sql("SELECT assert_true(false)").collect())

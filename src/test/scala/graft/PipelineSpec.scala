@@ -470,34 +470,87 @@ class PipelineSpec extends SparkSpec {
       docs.filter(col("doc_id").between(10, 20)).count())
   }
 
-  test("versioned snapshots: time travel reads old versions, _latest " +
-    "tracks the last COMMITTED one, vacuum keeps the newest") {
+  test("versioned snapshots: time travel reads old versions, default reads " +
+    "the newest") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_versioned").toString + "/t"
     val v1 = Pipeline.writeVersioned(spark, Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
     val v2 = Pipeline.writeVersioned(spark, Seq((1, "a2"), (3, "c")).toDF("k", "v"), dir)
     assert(v1 === 1 && v2 === 2)
-    assert(Pipeline.versions(dir) === Seq(1, 2))
+    assert(Pipeline.versions(spark, dir) === Seq(1, 2))
     // default read = latest; explicit version = time travel
     assert(Pipeline.readVersion(spark, dir).orderBy("k")
       .as[(Int, String)].collect().toSeq === Seq((1, "a2"), (3, "c")))
     assert(Pipeline.readVersion(spark, dir, Some(1)).orderBy("k")
       .as[(Int, String)].collect().toSeq === Seq((1, "a"), (2, "b")))
-    // a crashed writer: data directory exists but pointer never swapped
-    Seq((9, "orphan")).toDF("k", "v").write.parquet(s"$dir/v=3")
+    // a crashed writer: its hidden staging directory, never published,
+    // holds a corrupt file
+    val staging = java.nio.file.Paths.get(dir, ".v=3.staging")
+    Files.createDirectories(staging)
+    Files.writeString(staging.resolve("part-00000-crashed.parquet"), "not parquet")
+    assert(Pipeline.versions(spark, dir) === Seq(1, 2))
     assert(Pipeline.readVersion(spark, dir).count() === 2) // still v2
-    // vacuum retires old versions but never the committed latest
-    val dropped = Pipeline.vacuumVersions(dir, keep = 1)
+    // vacuum retires old versions but never the newest, and never sees
+    // the staging directory
+    val dropped = Pipeline.vacuumVersions(spark, dir, keep = 1)
     assert(dropped === Seq(1))
     assert(!new java.io.File(s"$dir/v=1").exists())
+    assert(Files.exists(staging.resolve("part-00000-crashed.parquet")))
     assert(Pipeline.readVersion(spark, dir).count() === 2)
-    // an unversioned dir (no _latest pointer) is refused with a clear
-    // message instead of a raw NoSuchFileException from deep inside
+    // the next write drops the leftover staging and publishes v=3
+    assert(Pipeline.writeVersioned(spark, Seq((4, "d")).toDF("k", "v"), dir) === 3)
+    assert(Pipeline.readVersion(spark, dir).as[(Int, String)].collect().toSeq ===
+      Seq((4, "d")))
+    assert(!Files.exists(staging))
+    // an unversioned dir (no v=N directory) is refused with a clear
+    // message instead of a raw file-not-found error from deep inside
     val plain = Files.createTempDirectory("graft_unversioned").toString
     val e = intercept[IllegalArgumentException] {
-      Pipeline.vacuumVersions(plain)
+      Pipeline.vacuumVersions(spark, plain)
     }
-    assert(e.getMessage.contains("_latest missing"))
+    assert(e.getMessage.contains("has no published version"))
+  }
+
+  test("versioned snapshots on a table given as a file: URI answer as on " +
+    "the plain path") {
+    import spark.implicits._
+    def run(dir: String) = {
+      val written = Seq(Seq((1, "a"), (2, "b")), Seq((1, "a2"), (3, "c")))
+        .map(rows => Pipeline.writeVersioned(spark, rows.toDF("k", "v"), dir))
+      def read(v: Option[Int]) = Pipeline.readVersion(spark, dir, v).orderBy("k")
+        .as[(Int, String)].collect().toSeq
+      (written, Pipeline.versions(spark, dir), read(None), read(Some(1)),
+        Pipeline.vacuumVersions(spark, dir, keep = 1), Pipeline.versions(spark, dir))
+    }
+    val expected = (Seq(1, 2), Seq(1, 2), Seq((1, "a2"), (3, "c")),
+      Seq((1, "a"), (2, "b")), Seq(1), Seq(2))
+    assert(run(Files.createTempDirectory("graft_versioned").resolve("t").toString) ===
+      expected)
+    assert(run(Files.createTempDirectory("graft_versioned_uri").resolve("t").toUri
+      .toString) === expected)
+  }
+
+  test("a second publish of a version fails and leaves the existing v=N " +
+    "unchanged") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_versioned_race").resolve("t")
+    assert(Pipeline.writeVersioned(spark, Seq((1, "a")).toDF("k", "v"), dir.toString) === 1)
+    // a rival writer publishes v=2 while this write runs, after it listed
+    // the versions
+    val rival = dir.resolve("v=2")
+    val rivalDir = rival.toString
+    val publishRival = udf { (k: Int) => PipelineSpec.createOnce(rivalDir, "f1"); k }
+      .asNondeterministic()
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Pipeline.writeVersioned(spark,
+        Seq((2, "b")).toDF("k", "v").withColumn("k", publishRival(col("k"))),
+        dir.toString)
+    }
+    assert(rival.toFile.list().toSeq === Seq("f1"))
+    assert(rival.toFile.listFiles().forall(_.isFile), "nothing is nested under v=2")
+    assert(Pipeline.versions(spark, dir.toString) === Seq(1, 2))
+    // the failed write leaves no staging copy behind
+    assert(dir.toFile.list().filter(_.contains("staging")).isEmpty)
   }
 
   test("compact rewrites to the planned file count without changing content") {
@@ -597,6 +650,42 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.compact(spark, leaf, 100L) === 1)
     assert(new java.io.File(sink).list().filter(_.contains("compact")).isEmpty)
     assert(rows() === live)
+  }
+
+  test("compact on a file: URI answers as on the plain path, for a flat " +
+    "directory and for one leaf of a sink") {
+    import spark.implicits._
+    def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    // (files planned, rows kept, parquet files left, hidden leftovers)
+    def flat(arg: java.nio.file.Path => String) = {
+      val dir = Files.createTempDirectory("graft_compact_uri").resolve("t")
+      (0 until 4).foreach { i =>
+        (i * 25 until (i + 1) * 25).map(k => (k.toLong, s"r$k"))
+          .toDF("k", "v").coalesce(1).write.mode("append").parquet(dir.toString)
+      }
+      val before = rows(dir.toString)
+      val files = Pipeline.compact(spark, arg(dir), targetRowsPerFile = 40)
+      (files, rows(dir.toString) == before,
+        dir.toFile.list().count(_.endsWith(".parquet")),
+        dir.getParent.toFile.list().filter(_.contains("compact")).toSeq)
+    }
+    assert(flat(_.toString) === ((3, true, 3, Nil)))
+    assert(flat(_.toUri.toString) === ((3, true, 3, Nil)))
+    // (files planned, rows kept, watermark, hidden leftovers in the sink)
+    def leaf(arg: java.nio.file.Path => String) = {
+      val root = Files.createTempDirectory("graft_compact_uri_leaf").resolve("t")
+      val sink = arg(root)
+      Pipeline.runIncremental(spark, events(Seq(("2024-05-01 01:00:00", "a", 1.0),
+        ("2024-05-01 02:00:00", "b", 2.0), ("2024-05-02 01:00:00", "b", 3.0))),
+        "zone", sink, Date.valueOf("2024-05-03")): Unit
+      val before = rows(sink)
+      val files = Pipeline.compact(spark, s"$sink/date=2024-05-01", 100L)
+      (files, rows(sink) == before, Pipeline.watermark(spark, sink),
+        root.toFile.list().filter(_.contains("compact")).toSeq)
+    }
+    val expected = (1, true, Some(Date.valueOf("2024-05-02")), Nil)
+    assert(leaf(_.toString) === expected)
+    assert(leaf(_.toUri.toString) === expected)
   }
 
   test("deleteKeys: copy-on-write of matching partitions only, emptied " +
@@ -893,6 +982,16 @@ object PipelineSpec {
   def compactSibling(dir: String, suffix: String): String = {
     val p = java.nio.file.Paths.get(dir)
     p.resolveSibling(s".${p.getFileName}$suffix").toString
+  }
+
+  /** Creates `dir` holding one file `name`, once; later calls find it
+    * there. Tasks of the local test session share this JVM. */
+  def createOnce(dir: String, name: String): Unit = synchronized {
+    val d = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(d)) {
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.writeString(d.resolve(name), "published by a rival writer"): Unit
+    }
   }
 
   /** A parquet committer whose job commit publishes the files and then
