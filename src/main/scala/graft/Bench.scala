@@ -131,14 +131,13 @@ object Bench {
         graft.etl.Pipeline.clusteredWrite(spark.read.parquet(sink),
           "group_key", 8, s"$wroot/clustered")
       },
-      // GDPR keyed delete under failure injection (VERDICT r10 item 6):
-      // a delete that EMPTIES partitions (keys are made partition-local
-      // so every matching row lives in the 5 oldest dates), a simulated
-      // crash inside the documented commit→rm window (the emptied
-      // partition's old files resurrected), and the idempotent re-run
-      // as the recovery path. deleteKeys' internal post-condition
-      // (zero surviving matches) gates success — a partial recovery
-      // reports as a failed entry, never a fast time.
+      // GDPR keyed delete, then a re-run over restored files: a delete
+      // that EMPTIES partitions (keys are made partition-local so every
+      // matching row lives in the 5 oldest dates), the emptied
+      // partition's old files copied back into place, and the idempotent
+      // re-run that deletes them again. deleteKeys' internal
+      // post-condition (zero surviving matches) gates success — a
+      // partial recovery reports as a failed entry, never a fast time.
       timedW("pipeline_w_delete") {
         import spark.implicits._
         val ddir = s"$wroot/delsink"
@@ -170,8 +169,7 @@ object Bench {
         val n1 = graft.etl.Pipeline.deleteKeys(spark, keys, ddir)
         require(n1 > 0L && !doomed.exists(),
           s"delete must empty the doomed partition (deleted $n1)")
-        // crash aftermath: the dynamic-overwrite commit landed but the
-        // emptied-partition rm never ran — its old files are back
+        // the emptied partition's old files are back on disk
         doomed.mkdirs()
         stash.listFiles().foreach { f =>
           java.nio.file.Files.copy(f.toPath,

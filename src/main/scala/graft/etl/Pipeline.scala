@@ -44,8 +44,11 @@ import org.apache.spark.sql.types._
   *    idempotent WRITE-side, closing the reference's one semantic hole.
   *    A `reprocessDays` overlap window rolls the watermark back n days
   *    each run, making partial-write damage self-healing (the standard
-  *    reprocessing-window idiom); [[upsert]] and [[deleteKeys]] commit
-  *    their copy-on-write result as the same overwrite;
+  *    reprocessing-window idiom);
+  *  - [[upsert]] and [[deleteKeys]] end in one copy-on-write step
+  *    ([[rewrite]]): checkpoint the merged rows, remove the partitions
+  *    left empty, then commit the rest as the same overwrite, so a crash
+  *    between the removal and the commit brings no deleted row back;
   *  - every verb reaches its files through the sink's own Hadoop file
   *    system, and [[writeVersioned]] and [[compact]] move a staged
   *    directory into place with one no-overwrite [[publish]].
@@ -216,18 +219,12 @@ object Pipeline {
     *     watermark-class driver state (days, not rows), enforced by
     *     `maxPartitions`. An empty batch observes no dates and returns 0
     *     before anything touches disk;
-    *  2. existing rows of ONLY those dates are read (the isin literal
-    *     list static-prunes the partitioned scan; a NULL date adds an
-    *     isNull arm), updates' keys are anti-joined away (null-safe
-    *     match), and the union with the updates is
-    *     MATERIALIZED via an eager localCheckpoint — computing the
-    *     merge result BEFORE touching the sink sidesteps the
-    *     read-overwrite-same-path hazard (the checkpoint truncates
-    *     lineage, so no overwrite task can re-read sink files) and
-    *     keeps the sink untouched until stage 3;
-    *  3. the checkpointed rows go through the sink's one [[commit]] as a
-    *     dynamic partition overwrite of exactly the affected dates. A
-    *     missing sink is created empty first and reads as zero rows, so
+    *  2. the sink's one copy-on-write step ([[rewrite]]) reads the
+    *     existing rows of ONLY those dates, anti-joins the updates' keys
+    *     away (null-safe match), unions the updates in and commits the
+    *     result as a dynamic partition overwrite of exactly the affected
+    *     dates. Every affected date holds an update, so none is emptied.
+    *     A missing sink is created empty first and reads as zero rows, so
     *     the first upsert into a new sink takes the same path. Replaying
     *     the same upsert regenerates the same merge content, so retries
     *     are idempotent end-to-end.
@@ -266,27 +263,67 @@ object Pipeline {
     val (parts, nulls) = partitionsObserved(partitionCol)
     val upd = updates.observe(seen, parts, nulls).localCheckpoint(eager = true)
     val affected = partitionsSeen(seen)
-    require(affected.length <= maxPartitions,
-      s"upsert touches >$maxPartitions $partitionCol partitions — " +
-        "that is a table rewrite, not an incremental merge; split the batch")
     if (affected.isEmpty) return 0L
     // schema given explicitly: upsert's merge contract already requires
     // updates.schema == sink schema (unionByName below fails otherwise),
     // so the per-call parquet footer schema-inference read is pure
     // overhead — the streaming sink pays it every micro-batch (§6). With
     // the schema known, a new (empty) sink directory reads as zero rows.
+    rewrite(spark, spark.read.schema(updates.schema).parquet(sinkDir), sinkDir,
+        partitionCol, affected, maxPartitions) { existing =>
+      // null-safe key match: an update keyed on a NULL partition value
+      // replaces its old row instead of landing beside it
+      val newKeys = upd.select(keyCols.map(col): _*)
+      existing.join(newKeys,
+        keyCols.map(k => existing(k) <=> newKeys(k)).reduce(_ && _), "left_anti")
+        .unionByName(upd)
+    }
+  }
+
+  /** The sink's one copy-on-write step, which [[upsert]] and
+    * [[deleteKeys]] both end in. It refuses more than `maxPartitions`
+    * affected partitions before it touches disk. Then it creates a
+    * missing `sinkDir` empty and reads `sink`, passed by name so the read
+    * comes after the creation. Only the `affected` partitions of `sink`
+    * go through the verb's `merge`, and one eager localCheckpoint
+    * materializes the result and observes its partition values on the
+    * same job. The checkpoint truncates the lineage, so no later task
+    * re-reads a sink file. Then, in this order:
+    *  1. every affected partition with no surviving row is removed —
+    *     dynamic overwrite replaces only the partitions the frame holds,
+    *     so an emptied one would otherwise keep its old files (the
+    *     classic dynamic-overwrite delete pitfall);
+    *  2. the survivors go through the one [[commit]] as a dynamic
+    *     partition overwrite, skipped when nothing survives.
+    * A crash between the two leaves a state a re-run repairs: a removed
+    * partition held only rows the verb drops, and every other affected
+    * partition still holds its old rows, so the re-run matches them
+    * again. Directory names use Spark's own escaping
+    * (ExternalCatalogUtils), so values with spaces/':'/'%' and the NULL
+    * partition (__HIVE_DEFAULT_PARTITION__) resolve to the real on-disk
+    * directories. Returns the rows written. */
+  private def rewrite(spark: SparkSession, sink: => DataFrame, sinkDir: String,
+      partitionCol: String, affected: Seq[Any], maxPartitions: Int)(
+      merge: DataFrame => DataFrame): Long = {
+    require(affected.length <= maxPartitions,
+      s"the rewrite touches >$maxPartitions $partitionCol partitions — that is " +
+        "a table rewrite, not an incremental merge or delete; split the batch/request")
     val root = new Path(sinkDir)
-    fileSystem(spark, root).mkdirs(root): Unit
-    val existing = spark.read.schema(updates.schema).parquet(sinkDir)
-      .filter(inPartitions(partitionCol, affected))
-    // null-safe key match: an update keyed on a NULL partition value
-    // replaces its old row instead of landing beside it
-    val newKeys = upd.select(keyCols.map(col): _*)
-    val keep = existing.join(newKeys,
-      keyCols.map(k => existing(k) <=> newKeys(k)).reduce(_ && _), "left_anti")
-    val merged = keep.unionByName(upd)
-    commit(merged.localCheckpoint(eager = true), sinkDir, partitionCol,
-      replace = true)
+    val fs = fileSystem(spark, root)
+    fs.mkdirs(root): Unit
+    val obs = org.apache.spark.sql.Observation()
+    val (parts, nulls) = partitionsObserved(partitionCol)
+    val staged = merge(sink.filter(inPartitions(partitionCol, affected)))
+      .observe(obs, parts, nulls)
+      .localCheckpoint(eager = true)
+    val survivors = partitionsSeen(obs).toSet
+    affected.filterNot(survivors.contains).foreach { p =>
+      val dirName = ExternalCatalogUtils
+        .getPartitionPathString(partitionCol, if (p == null) null else p.toString)
+      fs.delete(new Path(root, dirName), true): Unit
+    }
+    if (survivors.isEmpty) 0L
+    else commit(staged, sinkDir, partitionCol, replace = true)
   }
 
   /** Observed metrics for the set of `partitionCol` values a frame holds.
@@ -319,30 +356,21 @@ object Pipeline {
     * the one write primitive [[upsert]] doesn't express, since an
     * upsert needs a replacement row): removes every sink row whose
     * `keyCols` match a row of `keys`, rewriting ONLY the partitions
-    * that contain matches (copy-on-write: checkpoint the surviving rows,
-    * then the same dynamic-overwrite [[commit]] as [[upsert]]); untouched
-    * partitions keep their files as-is. The affected-partition set
-    * comes from the SINK side — a deletion request typically knows the
-    * key, not which partitions hold it. Partitions left EMPTY by the
-    * delete are removed explicitly after the commit: dynamic partition
-    * overwrite only replaces partitions present in the staged frame, so
-    * an all-rows-deleted partition would otherwise silently keep its
-    * old files — the classic dynamic-overwrite delete pitfall, pinned
-    * in PipelineSpec. Idempotent: re-applying the same delete finds no
-    * matches and is a no-op. Returns the number of rows deleted.
+    * that contain matches through the same copy-on-write step
+    * ([[rewrite]]) as [[upsert]]; untouched partitions keep their files
+    * as-is. The affected-partition set comes from the SINK side — a
+    * deletion request typically knows the key, not which partitions
+    * hold it. A partition the delete empties is removed before the
+    * commit. Idempotent: re-applying the same delete finds no matches
+    * and is a no-op. Returns the number of rows deleted.
     *
-    * Crash window (documented, recovery = re-run): the dynamic-overwrite
-    * commit lands first and the emptied-partition directory removal
-    * after, so a crash between the two resurrects fully-deleted
-    * partitions' old files. Because the delete is idempotent, re-running
-    * the same request IS the recovery path — the resurrected rows match
-    * the keys again, the partition re-lists as affected, and the rm
-    * completes. A post-condition anti-join (count of surviving matches
-    * === 0) runs before returning, so a partial apply can never report
-    * success. Partition directory names are built with Spark's own
-    * escaping (ExternalCatalogUtils), so values with spaces/':'/'%' and
-    * NULL partition values (__HIVE_DEFAULT_PARTITION__) resolve to the
-    * real on-disk directories. */
+    * Crash state (recovery = re-run): a crash after the emptied
+    * partitions' removal and before the commit leaves those partitions
+    * gone and every other affected partition with its old rows. No
+    * deleted row comes back; the rows still to delete match the keys
+    * again, so re-running the same request finishes the delete. A
+    * post-condition anti-join (count of surviving matches === 0) runs
+    * before returning, so a partial apply can never report success. */
   def deleteKeys(
       spark: SparkSession,
       keys: DataFrame,
@@ -354,48 +382,16 @@ object Pipeline {
     val keyFrame = keys.select(keyCols.map(col): _*).distinct()
     val hit = sink.join(keyFrame, keyCols.toIndexedSeq, "left_semi")
     val affected = hit.select(col(partitionCol)).distinct()
-      .limit(maxPartitions + 1).collect().map(_.get(0))
-    require(affected.length <= maxPartitions,
-      s"delete touches >$maxPartitions $partitionCol partitions — " +
-        "that is a table rewrite; split the request")
+      .limit(maxPartitions + 1).collect().map(_.get(0)).toIndexedSeq
     if (affected.isEmpty) return 0L
-    val existing = sink.filter(inPartitions(partitionCol, affected.toIndexedSeq))
-    // both counts ride the staging write as observations (the
-    // runIncremental load-report discipline): `before` observes rows
-    // ENTERING the anti-join, `after` rows surviving it — the pre-r13
-    // shape paid a separate existing.count() scan, a staged.isEmpty
-    // probe and a staged.count() re-read (3 extra jobs per call; the
-    // bench delete entry calls this twice)
-    val obsB = org.apache.spark.sql.Observation()
-    val obsA = org.apache.spark.sql.Observation()
-    // `after` also observes the surviving partition set, so the
-    // emptied partitions are known without a job of their own
-    val (parts, nulls) = partitionsObserved(partitionCol)
-    val keep = existing.observe(obsB, count(lit(1)).as("n"))
-      .join(keyFrame, keyCols.toIndexedSeq, "left_anti")
-      .observe(obsA, count(lit(1)).as("n"), parts, nulls)
-    // the observations ride the checkpoint job; as in upsert's stage 2,
-    // its truncated lineage keeps every overwrite task off the sink files
-    val staged = keep.localCheckpoint(eager = true)
-    val before = obsB.get("n").asInstanceOf[Long]
-    val after = obsA.get("n").asInstanceOf[Long]
-    if (after > 0L) commit(staged, sinkDir, partitionCol, replace = true): Unit
-    // partitions the delete emptied never appear in the staged frame —
-    // dynamic overwrite leaves their files behind; drop them explicitly
-    val survivors = partitionsSeen(obsA).toSet
-    val root = new Path(sinkDir)
-    val fs = fileSystem(spark, root)
-    affected.filterNot(survivors.contains).foreach { p =>
-      // Spark URL-escapes partition values in directory names (spaces,
-      // ':', '%', …) and writes NULL as __HIVE_DEFAULT_PARTITION__ — a
-      // raw s"$col=$p" path misses those dirs and silently leaves
-      // "deleted" rows on disk. getPartitionPathString applies the same
-      // escaping the writer used (null/empty → the default partition).
-      val dirName = ExternalCatalogUtils
-        .getPartitionPathString(partitionCol, if (p == null) null else p.toString)
-      fs.delete(new Path(root, dirName), true): Unit
+    // `before` observes the rows entering the anti-join on the rewrite's
+    // checkpoint job, so the deleted count costs no scan of its own
+    val before = org.apache.spark.sql.Observation()
+    val after = rewrite(spark, sink, sinkDir, partitionCol, affected, maxPartitions) {
+      _.observe(before, count(lit(1)).as("n"))
+        .join(keyFrame, keyCols.toIndexedSeq, "left_anti")
     }
-    val deleted = before - after
+    val deleted = before.get("n").asInstanceOf[Long] - after
     // post-condition — GDPR verb, verify don't trust: no surviving sink
     // row may match a requested key. A fresh read (the listing reflects
     // the rewrite and the removals) with the first read's schema, so it
@@ -414,20 +410,19 @@ object Pipeline {
     * failure (energy_etl.py:103-107 — no merge); readers recover
     * exactly-once semantics by keeping only the LATEST load per key.
     * This is the standard at-least-once-writer / dedup-on-read pattern;
-    * at 100 TB the window shuffles only the sink (already daily rows,
-    * not raw events). Two loads of one key on the same `load_date` (a
-    * same-day rerun that saw late source rows) resolve to the row with
-    * the larger `n`, then the larger `avg_value` — the row a
-    * `max(struct(load_date, n, avg_value))` aggregate would pick — so
-    * the answer never depends on file order. */
-  def readDeduped(spark: SparkSession, sinkDir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("date"), col("group_key"))
-      .orderBy(col("load_date").desc, col("n").desc, col("avg_value").desc)
+    * at 100 TB the aggregate shuffles only the sink (already daily rows,
+    * not raw events), partial-aggregated map-side. `max(struct(load_date,
+    * n, avg_value))` compares lexicographically, so two loads of one key
+    * on the same `load_date` (a same-day rerun that saw late source rows)
+    * resolve to the row with the larger `n`, then the larger
+    * `avg_value`, and the answer never depends on file order — the idiom
+    * [[graft.streaming.Streams.latestPerKey]] uses. */
+  def readDeduped(spark: SparkSession, sinkDir: String): DataFrame =
     spark.read.schema(sinkSchema).parquet(sinkDir)
-      .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-  }
+      .groupBy(col("date"), col("group_key"))
+      .agg(max(struct(col("load_date"), col("n"), col("avg_value"))).as("_m"))
+      .select(col("date"), col("group_key"), col("_m.avg_value").as("avg_value"),
+        col("_m.n").as("n"), col("_m.load_date").as("load_date"))
 
   /** The reference's raw ingest shape (energy_etl.py:64-69): each payload is
     * a JSON array of hourly records carrying a price field. Parse with an

@@ -300,6 +300,11 @@ class PipelineSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Pipeline.upsert(spark, seed, sink, maxPartitions = 1)
     }
+    // a refused upsert into a new sink leaves nothing on disk
+    intercept[IllegalArgumentException] {
+      Pipeline.upsert(spark, seed, sink + "_new", maxPartitions = 1)
+    }
+    assert(!new java.io.File(sink + "_new").exists())
     intercept[IllegalArgumentException] {
       Pipeline.upsert(spark, seed, sink, keyCols = Seq("group_key"))
     }
@@ -442,6 +447,22 @@ class PipelineSpec extends SparkSpec {
     val (n, upsertJobs) = Metrics.jobsDuring(spark)(Pipeline.upsert(spark, fix, sink))
     assert(n === 2L)
     assert(upsertJobs.size <= 5)
+  }
+
+  test("a keyed delete that rewrites one date and empties another runs at " +
+    "most 11 jobs") {
+    import spark.implicits._
+    val sink = Files.createTempDirectory("graft_del_jobs").toString + "/t"
+    Pipeline.runIncremental(spark, events(Seq(("2024-01-01 01:00:00", "SE1", 1.0),
+      ("2024-01-01 01:00:00", "SE2", 2.0), ("2024-01-02 01:00:00", "SE1", 3.0))),
+      "zone", sink, Date.valueOf("2024-01-03"))
+    val (n, jobs) = Metrics.jobsDuring(spark)(
+      Pipeline.deleteKeys(spark, Seq("SE1").toDF("group_key"), sink))
+    assert(n === 2L)
+    assert(!new java.io.File(s"$sink/date=2024-01-02").exists())
+    // 11 is the count from before upsert and deleteKeys shared one
+    // copy-on-write step; sharing it must not add a job
+    assert(jobs.size <= 11, jobs.map(_.description).mkString("\n"))
   }
 
   test("clusteredWrite yields disjoint per-file key ranges (file-skipping layout)") {
@@ -741,8 +762,34 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.deleteKeys(spark, Seq("SE9").toDF("group_key"), sink) === 0L)
   }
 
-  test("deleteKeys: crash between commit and dir removal — re-run IS the " +
-    "recovery path; post-condition blocks a false success") {
+  test("deleteKeys removes the date it empties before its commit: a failed " +
+    "commit brings no deleted row back, and the re-run finishes the delete") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${PipelineSpec.CrashOnRename.Scheme}.impl",
+      classOf[PipelineSpec.CrashOnRename].getName)
+    val dir = Files.createTempDirectory("graft_del_order").resolve("t")
+    val sink = s"${PipelineSpec.CrashOnRename.Scheme}:$dir"
+    Pipeline.runIncremental(spark, events(Seq(
+      ("2024-01-01 01:00:00", "SE1", 10.0), ("2024-01-01 01:00:00", "SE2", 20.0),
+      ("2024-01-02 01:00:00", "SE1", 30.0))), "zone", sink, Date.valueOf("2024-01-03"))
+    def rows() = spark.read.parquet(sink)
+      .select(col("date").cast("string"), col("group_key"))
+      .as[(String, String)].collect().toSet
+    val keys = Seq("SE1").toDF("group_key")
+    PipelineSpec.CrashOnRename.armed.set(true)
+    intercept[Exception](Pipeline.deleteKeys(spark, keys, sink))
+    assert(!PipelineSpec.CrashOnRename.armed.get, "the commit never renamed")
+    // 2024-01-02 held only SE1 and is already gone; 2024-01-01 was not
+    // rewritten, so its SE1 row still matches the request
+    assert(!dir.resolve("date=2024-01-02").toFile.exists())
+    assert(rows() === Set(("2024-01-01", "SE1"), ("2024-01-01", "SE2")))
+    assert(Pipeline.deleteKeys(spark, keys, sink) === 1L)
+    assert(rows() === Set(("2024-01-01", "SE2")))
+  }
+
+  test("stale files of an emptied partition: re-run is the recovery path; " +
+    "post-condition blocks a false success") {
     import spark.implicits._
     val sink = Files.createTempDirectory("graft_del_crash").toString + "/t"
     val day1 = events(Seq(
@@ -750,8 +797,7 @@ class PipelineSpec extends SparkSpec {
       ("2024-01-03 01:00:00", "SE1", 30.0)))
     Pipeline.runIncremental(spark, day1, "zone", sink, Date.valueOf("2024-01-04"))
     // snapshot the files of a partition the delete will EMPTY, so we can
-    // resurrect them — exactly the state a crash between the dynamic-
-    // overwrite commit and the directory rm leaves behind
+    // put them back after it (a restore from backup, say)
     val doomed = new java.io.File(s"$sink/date=2024-01-03")
     val stash = Files.createTempDirectory("graft_del_stash").toFile
     doomed.listFiles().filter(_.isFile).foreach { f =>
@@ -760,8 +806,7 @@ class PipelineSpec extends SparkSpec {
     }
     assert(Pipeline.deleteKeys(spark, Seq("SE1").toDF("group_key"), sink) === 2L)
     assert(!doomed.exists())
-    // simulate the crash aftermath: the emptied partition's old files
-    // are back on disk (commit landed, rm never ran)
+    // the emptied partition's old files are back on disk
     doomed.mkdirs()
     stash.listFiles().foreach { f =>
       java.nio.file.Files.copy(f.toPath,
@@ -1003,6 +1048,25 @@ object PipelineSpec {
       super.commitJob(job)
       throw new java.io.IOException(s"injected crash after committing $out")
     }
+  }
+
+  /** The local file system under the scheme [[CrashOnRename.Scheme]],
+    * whose first `rename` after [[CrashOnRename.armed]] is set throws: a
+    * commit that dies at its first move, with every step before it on
+    * disk. */
+  class CrashOnRename extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create(s"${CrashOnRename.Scheme}:///")
+    override def getScheme: String = CrashOnRename.Scheme
+    override def rename(src: org.apache.hadoop.fs.Path,
+        dst: org.apache.hadoop.fs.Path): Boolean =
+      if (CrashOnRename.armed.getAndSet(false))
+        throw new java.io.IOException(s"injected crash: rename $src to $dst")
+      else super.rename(src, dst)
+  }
+
+  object CrashOnRename {
+    val Scheme = "crashrename"
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
   }
 
   /** Parks the first caller inside a running Spark task until the test
